@@ -1,23 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the driver's bench environment: local[32], 32
-    // shuffle partitions (the driver does not export SPARK_GRAFT_CPUS)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Spark 4 default, pinned explicitly: the integer-exact operators
-      // (e.g. mlStump's DECIMAL envelope) guarantee loud overflow only
-      // under ANSI semantics — with ANSI off, overflow yields NULL and
-      // silently drops rows from argmax orderings
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: exercise scan + shuffle + codegen paths once so the
     // first timed query doesn't absorb JVM/JIT startup
@@ -25,7 +11,8 @@ object Bench {
       import org.apache.spark.sql.functions._
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").agg(count(lit(1))).count()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] warmup failed: $e") }
     // dev-only subset filter (comma-separated names); driver leaves it unset
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // untimed shared-build pre-warm (see graft.Prewarm): derived files +
@@ -47,7 +34,7 @@ object Bench {
       // breakage) while |value| still carries the wall time spent
       val ok =
         try { fn(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
       val elapsed = (System.nanoTime() - t0) / 1e9
       name -> (if (ok) elapsed else -elapsed)
@@ -73,7 +60,7 @@ object Bench {
       java.nio.file.Paths.get(sys.props("user.dir"), "BENCH_FULL.json").toString)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case scala.util.control.NonFatal(e) =>
+    catch { case NonFatal(e) =>
       System.err.println(s"BENCH_FULL write failed ($outPath): $e") }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints explain("formatted") for the named queries
   * (or a default set of scale-critical ones) so shuffle counts, pushed
   * filters, scan schemas and broadcast choices can be reviewed at any SF.
@@ -13,18 +11,7 @@ object Explain {
     val keys = if (args.length > 1) args.drop(1).toSeq else Seq(
       "q_agg_pricing_summary", "q_join_broadcast_dims", "q_join_asof",
       "q_dedup_near_minhash", "q_sim_cosine_topk", "q_topk", "q_window_sliding")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the bench session exactly (Bench.scala): ANSI changes
-      // expression trees, so a plan audited here must be the plan the
-      // bench runs
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       println(s"\n========== $k ==========")

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Steady-state A/B probe: runs each named query N times in ONE warm
-  * JVM (same session config as [[Bench]]) and prints every iteration's
+  * JVM (the [[GraftSession]] Bench runs on) and prints every iteration's
   * seconds. The per-fresh-JVM subset bench carries 1–3 s of JIT/codegen
   * noise — far larger than most plan-level effects — so optimization
   * A/Bs compare iterations ≥2 here (steady state), with the full bench
@@ -15,15 +13,7 @@ object OptProbe {
     val sfDir = args(0)
     val reps = args(1).toInt
     val keys = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       val fn = SparkEntry.queries(k)

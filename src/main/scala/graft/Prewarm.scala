@@ -82,6 +82,8 @@ object Prewarm {
 
   def apply(s: SparkSession, dir: String): Seq[(String, Double)] = {
     import graft.operators._
+    // the builders are called directly: install here, as for a graded query
+    GraftSession.install(s)
     val builds: Seq[(String, () => Unit)] =
       fileTier.map { case (name, b) => name -> (() => b(s, dir)) } ++
       RankKernels.builders.map { case (name, b) =>

@@ -60,9 +60,18 @@ object SparkEntry {
       (SqlSuite4.queries, SqlSuite4.oracles),
       (NonparamOps.queries, NonparamOps.oracles))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.map(_._1).reduce(_ ++ _)
+  /** One entry per implemented operator from SURVEY.md §2. Each function
+    * installs the graft functions and plan rules into the session it is
+    * given ([[GraftSession.install]]), so a query builds the same plan in
+    * any session, including a caller's plain one or a `newSession()`.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.iterator.map(_._1).reduce(_ ++ _).map { case (name, fn) =>
+      name -> ((s: SparkSession, dir: String) => {
+        GraftSession.install(s)
+        fn(s, dir)
+      })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.

@@ -26,7 +26,7 @@ object Tables {
   def region(s: SparkSession, dir: String): DataFrame   = t(s, dir, "region")
   /** events.ts normalization. The driver has shipped this column two ways:
     * parquet TIMESTAMP(NANOS), which Spark only reads as a nanos long
-    * (spark.sql.legacy.parquet.nanosAsLong=true — set by Verify/Bench/tests),
+    * (spark.sql.legacy.parquet.nanosAsLong=true — set by GraftSession),
     * and tz-less timestamp[us], which Spark 4 infers as TIMESTAMP_NTZ.
     * Both are µs-precision wall-clock UTC, so both normalize losslessly to a
     * plain TimestampType: nanos long via an integer div, NTZ via a cast that

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -120,21 +119,5 @@ object PipBBoxPrefilter extends Rule[LogicalPlan] {
     case j: org.apache.spark.sql.catalyst.plans.logical.Join
       if j.condition.exists(needs) =>
       j.copy(condition = j.condition.map(conjoin))
-  }
-}
-
-object GeoFunctions {
-  /** Registers graft_pip / graft_bbox_contains and installs the prefilter
-    * rule (idempotently) into the session's experimental optimizations.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_pip",
-      exprs => PointInPolygonExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_bbox_contains",
-      exprs => BBoxContainsExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    if (!spark.experimental.extraOptimizations.contains(PipBBoxPrefilter))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PipBBoxPrefilter
   }
 }

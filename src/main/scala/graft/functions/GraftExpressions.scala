@@ -325,7 +325,10 @@ case class DoubleMaxAbsDiffExpr(left: Expression, right: Expression)
   * same hash) as the near-minhash shingle pipeline, whose oracle twin
   * computes over strings; a collision WITHIN one document's set makes
   * the producer's sorted array non-strict and throws here rather than
-  * silently undercounting. Loud guards per the kernel discipline:
+  * silently undercounting, but a collision ACROSS the two documents (a
+  * token of A and a different token of B with one hash) is invisible
+  * here and counts as shared, silently inflating |A∩B| over the
+  * string-exact twin. Loud guards per the kernel discipline:
   * null elements throw, and an out-of-order or duplicate element in
   * the VISITED prefix throws (sortedness of the walked region is what
   * correctness rests on; the merge detects violations for free as it
@@ -785,13 +788,16 @@ object GraftFunctions {
       s"$fn: argument '$arg' must be a literal (foldable), got ${e.sql}")
   }
 
-  // once per session: every query builder calls register(), and
-  // re-registering 13 functions per call is pure overhead plus a WARN
-  // line each in the driver log. The "already registered" check reads
-  // the session's own function registry (probe one sentinel function)
-  // rather than a static identity-hash memo: registry state lives and
-  // dies with the session, so there is nothing to leak and no hash
-  // collision that could silently skip registration for a new session.
+  /** Registers every `graft_*` function in the session; programs reach it
+    * through [[graft.GraftSession.install]]. Once per session: install
+    * runs before every query build, and re-registering the functions per
+    * call is pure overhead plus a WARN line each in the log. The
+    * "already registered" check reads the session's own function registry
+    * (probe one sentinel function) rather than a static identity-hash
+    * memo: registry state lives and dies with the session, so there is
+    * nothing to leak and no hash collision that could silently skip
+    * registration for a new session.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     if (registry.functionExists(
@@ -851,5 +857,10 @@ object GraftFunctions {
     registry.createOrReplaceTempFunction("graft_might_contain",
       exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         exprs(0), exprs(1)), "scala_udf")
+    // spatial predicates (see GeoExpressions.scala)
+    registry.createOrReplaceTempFunction("graft_pip",
+      exprs => PointInPolygonExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
+    registry.createOrReplaceTempFunction("graft_bbox_contains",
+      exprs => BBoxContainsExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
   }
 }

@@ -63,7 +63,6 @@ object ClusterOps {
     * vector×centroid product is the embed family's hot path.
     */
   private[graft] def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val dist = expr("graft_sql2(q, c)")
     val w = Window.partitionBy("vec_id").orderBy(col("dist"), col("cid"))
     vecs.crossJoin(broadcast(cents))
@@ -119,7 +118,6 @@ object ClusterOps {
     * from the learned partition, not a hash family.
     */
   def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val vecs = quantized(s, dir)
     val cents = materializedCentroids(s, dir)
     // exact int64 dots via the codegen graft_ldot kernel (r19 — this
@@ -181,7 +179,6 @@ object ClusterOps {
     * is positive. Output: 64 rows (dim, w_micro, lambda).
     */
   def embedPca(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val big = DecimalType(38, 0)
     // exact int64 dot c·w via the codegen LongDotExpr kernel
     // (bit-identical to the aggregate/zip_with fold it replaces, one
@@ -301,7 +298,6 @@ object ClusterOps {
       .groupBy()
       .agg(array_sort(collect_list(struct(col("dim"), col("cv")))).as("pairs"))
       .select(transform(col("pairs"), p => p.getField("cv")).as("c"))
-    graft.functions.GraftFunctions.register(s)
     val dist2 = expr("graft_sql2(q, c)")
     quantized(s, dir).crossJoin(broadcast(centroid))
       .select(col("vec_id"), dist2.as("dist2_micro2"))
@@ -322,7 +318,6 @@ object ClusterOps {
     * shuffles.
     */
   def embedRandProj(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     def sign(i: Int, j: Int): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
       val hex = md.digest(s"jl:$i:$j".getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -392,7 +387,6 @@ object ClusterOps {
     * codebook (m, cid, c) shared by [[embedPq]] and [[embedPqAdc]].
     */
   private def pqSubAssign(sub: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sub.sparkSession)
     val dist = expr("graft_sql2(sq, c)")
     val w = Window.partitionBy("vec_id", "m").orderBy(col("dist"), col("cid"))
     sub.join(broadcast(cents), Seq("m"))
@@ -519,7 +513,6 @@ object ClusterOps {
     * + one aggregate.
     */
   def embedTriplets(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = Tables.embeddings(s, dir).select(col("vec_id"), col("label"),
       transform(col("embedding"),
         x => floor(x.cast("double") * 1e6).cast("long")).as("q"))
@@ -573,7 +566,6 @@ object ClusterOps {
     * anchor-partitioned window + a vector-keyed count.
     */
   def embedHubness(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = quantized(s, dir)
     val anchors = base
       .orderBy(md5(concat(lit("hub:"), col("vec_id").cast("string"))),

@@ -43,7 +43,6 @@ object CorpusOps {
     // NgramsExpr) — the transform/sequence/slice/array_join chain was
     // an interpreted HOF per span; a short doc yields an empty array
     // that explode() drops, exactly like the former size filter
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"),
         explode(expr(s"graft_ngrams(text, $SpanTokens)")).as("span"))
@@ -197,7 +196,6 @@ object CorpusOps {
     // NgramsExpr) — the transform/sequence/slice/array_join chain was
     // an interpreted HOF per gram; a short doc now yields an empty
     // array that explode() drops, exactly like the former size filter
-    graft.functions.GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"),
         explode(expr(s"graft_ngrams(text, $DupGramTokens)")).as("gram"))

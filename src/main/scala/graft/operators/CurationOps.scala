@@ -72,7 +72,6 @@ object CurationOps {
   def textNoveltyCurve(s: SparkSession, dir: String): DataFrame = {
     // r22: grams via the codegen'd graft_ngrams byte-scan (see
     // NgramsExpr) instead of the CodegenFallback zip_with chain
-    graft.functions.GraftFunctions.register(s)
     val grams = Tables.documents(s, dir)
       .select(col("source"), col("doc_id"),
         explode(expr("graft_ngrams(text, 2)")).as("g"))

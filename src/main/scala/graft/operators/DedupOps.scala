@@ -144,7 +144,6 @@ object DedupOps {
     * materialization instead of re-hashing 100 TB of text.
     */
   private[graft] def materializedSignatures(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // NumPerms is part of the cache identity: changing it must re-derive
     // the signatures, not silently serve stale ones (shingle width is the
     // only other parameter; bump the _s3 tag if it ever changes).
@@ -203,7 +202,6 @@ object DedupOps {
     // r22: sorted hashed-shingle sets + ONE graft_inter_size_l merge per
     // pair replace the array_intersect AND array_union hash-set builds
     // (|A∪B| = |A|+|B|−|A∩B| exactly for distinct sets)
-    graft.functions.GraftFunctions.register(s)
     val sets = withShingleHashes(Tables.documents(s, dir), "text")
       .select(col("doc_id"),
         array_sort(array_distinct(col("sh_hashes"))).as("shset"))
@@ -300,8 +298,11 @@ object DedupOps {
     // runtime (measured 3.4 s → 1.15 s steady; see SortedInterSizeLongExpr
     // for the collision caveat, identical to the near-minhash shingle
     // discipline — set SIZES are unchanged absent collisions, so the
-    // PPJoin length filter and the jaccard denominator are unchanged)
-    graft.functions.GraftFunctions.register(s)
+    // PPJoin length filter and the jaccard denominator are unchanged).
+    // A CROSS-document collision (two different tokens of a and b with
+    // one xxhash64) is not detected: it counts as a shared token and
+    // silently inflates |a∩b|, so jaccard is exact only up to 64-bit
+    // hash collisions, unlike the string-exact DuckDB twin.
     val base0 = Tables.documents(s, dir)
       .withColumn("tokset",
         array_sort(transform(array_distinct(split(col("text"), " ")),
@@ -363,8 +364,8 @@ object DedupOps {
     // the allocation-free graft_inter_size_l long-merge. Set sizes are
     // |distinct tokens| unchanged, so the containment denominator is
     // unchanged; collision caveat documented at SortedInterSizeLongExpr
-    // (same discipline and same hash as the near-minhash shingle path).
-    graft.functions.GraftFunctions.register(s)
+    // (same discipline and same hash as the near-minhash shingle path):
+    // a cross-document collision silently inflates the containment.
     val base0 = Tables.documents(s, dir)
       .withColumn("tokset",
         array_sort(transform(array_distinct(split(col("text"), " ")),
@@ -459,7 +460,6 @@ object DedupOps {
     */
   private[graft] def dedupSimhashWithCap(s: SparkSession, dir: String,
       cap: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val sigs = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .select(col("doc_id"), md5(col("token")).as("m"))
@@ -645,7 +645,6 @@ object DedupOps {
     */
   def dedupEmbedCosine(s: SparkSession, dir: String,
       maxBlock: Int = MaxBlockDocs): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val thetaMax = math.acos(0.3499)
     val base1 = Tables.embeddings(s, dir)
       // norm + pairwise dot through the native codegen'd kernel (same
@@ -832,7 +831,6 @@ object DedupOps {
     * because estimator and truth must share the set definition.
     */
   def sketchCalibration(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val pairs = materializedJaccard(s, dir).select(col("doc_a"), col("doc_b"),
       expr("cast(round(jaccard * 1e6) as long)").as("exact_ppm"))
     val docIds = pairs.select(col("doc_a").as("doc_id"))

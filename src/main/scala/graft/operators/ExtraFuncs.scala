@@ -109,7 +109,6 @@ object ExtraFuncs {
     * under AQE, here it's explicit and testable.
     */
   def bloomSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.supplier(s, dir).filter(col("s_acctbal") > 5000)
       .createOrReplaceTempView("v_rich_supp")
     Tables.lineitem(s, dir).createOrReplaceTempView("v_li_bloom")

@@ -129,7 +129,6 @@ object GraphOps {
     * read this table instead of re-hashing the adjacency sets.
     */
   private[graft] def materializedNeighborSigs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
       s"/graft_io/neighbor_sigs_v1_p64_${DedupOps.cacheKey(dir, "documents")}"
     DerivedFiles.getOrBuildParquet(s, path) {
@@ -1031,7 +1030,6 @@ object GraphOps {
     // collect_list's nondeterministic order) so the per-candidate
     // intersect runs as the graft_inter_size_l merge kernel instead of
     // array_intersect's per-row hash-set build
-    graft.functions.GraftFunctions.register(s)
     val adj = sym.groupBy("node")
       .agg(array_sort(collect_list(col("nbr"))).as("nbrs"))
       .localCheckpoint()

@@ -155,7 +155,6 @@ object ImpactOps {
     * pass of the sim family, unchanged.
     */
   def embedMatryoshka(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val base = Tables.embeddings(s, dir)
     def topk(d: Int): DataFrame = {
       val pre = base

@@ -221,7 +221,6 @@ object Joins {
     * one scan — the 100 TB shape for "assign each record to a district".
     */
   def pipExact(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GeoFunctions.register(s)
     import s.implicits._
     val polyDf = pipDistricts.toDF("district_id", "verts")
       .select(col("district_id"), transform(col("verts"),

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.GraftFunctions
 
 /** §2.10/#61 queries exercising the native Catalyst expressions
   * (graft.functions) end-to-end through SQL registration — proving the
@@ -16,7 +15,6 @@ object NativeExprs {
     * ScalarFuncs.haversine, same oracle.
     */
   def haversineNative(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.customer(s, dir)
       .select(
         col("c_custkey"),
@@ -33,21 +31,9 @@ object NativeExprs {
     * the identical signed fingerprint (see oracles map).
     */
   def rollingHash(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     Tables.documents(s, dir)
       .selectExpr("doc_id", "graft_rolling_hash(text) AS fingerprint")
       .orderBy("doc_id")
-  }
-
-  /** #61c the custom whole-operator path: same rank-filter query as
-    * q_win_topk_per_group, but with graft.plans.RankFilterToTopK +
-    * TopKPerGroupStrategy installed, so Filter+Window is replaced by
-    * TopKPerGroupExec. Same oracle as the window formulation — the
-    * rewrite must be invisible to results.
-    */
-  def topkCustom(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftPlanner.install(s)
-    Windows.winTopkPerGroup(s, dir)
   }
 
   /** #61d native Jaro-Winkler fuzzy name matching over the DISTINCT part
@@ -61,7 +47,6 @@ object NativeExprs {
     * both engines).
     */
   def jaroWinklerPairs(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val names = Tables.part(s, dir).select(col("p_name")).distinct()
     names.select(col("p_name").as("name_a"))
       .join(broadcast(names.select(col("p_name").as("name_b"))),
@@ -79,7 +64,6 @@ object NativeExprs {
     * [[graft.functions.DamerauLevenshteinExpr]]).
     */
   def damerauPairs(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     val names = Tables.part(s, dir).select(col("p_name")).distinct()
     names.select(col("p_name").as("name_a"))
       .join(broadcast(names.select(col("p_name").as("name_b"))),
@@ -94,7 +78,12 @@ object NativeExprs {
     "q_fingerprint_native" -> (rollingHash _),
     "q_jaro_winkler" -> (jaroWinklerPairs _),
     "q_damerau" -> (damerauPairs _),
-    "q_topk_custom" -> (topkCustom _))
+    // #61c the custom whole-operator path: the rank-filter query of
+    // q_win_topk_per_group, planned as TopKPerGroupExec by the rewrite
+    // every session carries (see graft.plans.RankFilterToTopK). Same
+    // oracle as the window formulation: the rewrite must be invisible to
+    // results.
+    "q_topk_custom" -> (Windows.winTopkPerGroup _))
 
   val oracles: Map[String, String] = Map(
     "q_haversine_native" -> ScalarFuncs.oracles("q_haversine"),

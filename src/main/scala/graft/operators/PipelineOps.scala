@@ -61,7 +61,6 @@ object PipelineOps {
     * un-rolled, map-side combined).
     */
   def contamination(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val g = withGrams(Tables.documents(s, dir)).select(col("doc_id"), col("grams"))
     // r21: the bench-gram registry is joined WITHOUT a broadcast hint —
     // bench grams are ~1/29 of the corpus, so a forced broadcast grew
@@ -95,10 +94,13 @@ object PipelineOps {
   }
 
   /** Duplicated-gram fraction (1 - distinct/total), rounded — shared by
-    * q_text_repetition and q_corpus_manifest.
+    * q_text_repetition and q_corpus_manifest. NULL for a document without
+    * grams (null text, which graft_ngrams maps to NULL, or fewer tokens
+    * than the gram length), as in the DuckDB twins where x / 0 is NULL:
+    * plain ANSI division would throw DIVIDE_BY_ZERO on the empty array.
     */
   private def dupFrac(grams: Column): Column =
-    round(lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams), 6)
+    round(lit(1.0) - try_divide(size(array_distinct(grams)).cast("double"), size(grams)), 6)
 
   /** Deterministic train/val/test assignment by content-addressed hash
     * ranges — the reproducible-split technique (a doc's split never
@@ -157,7 +159,6 @@ object PipelineOps {
   def textRepetition(s: SparkSession, dir: String): DataFrame = {
     // r22: grams via the codegen'd graft_ngrams byte-scan (see
     // NgramsExpr) instead of the CodegenFallback zip_with chains
-    graft.functions.GraftFunctions.register(s)
     val toks = split(col("text"), " ")
     Tables.documents(s, dir)
       .withColumn("toks", toks)
@@ -225,7 +226,6 @@ object PipelineOps {
     * final tiny aggregate — the same plan shape at 100 TB.
     */
   def corpusManifest(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val comp = DedupOps.componentLabels(s, dir).select(col("doc_id"), col("component"))
     val keepW = Window.partitionBy("component").orderBy(desc("n_chars"), asc("doc_id"))
     Tables.documents(s, dir)
@@ -262,7 +262,6 @@ object PipelineOps {
     * only the reported ratio is rounded.
     */
   def textBoilerplate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val exploded = withGrams(Tables.documents(s, dir))
       .select(col("doc_id"), explode(col("grams")).as("gram"))
     // grams are per-doc distinct, so count(*) per gram = document frequency

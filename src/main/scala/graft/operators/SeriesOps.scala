@@ -594,7 +594,6 @@ object SeriesOps {
     * at sf0.1) where the kernel inline is one tight static call.
     */
   def embedIsotropy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val unit = Tables.embeddings(s, dir)
       .withColumn("norm", sqrt(expr("graft_dot(embedding, embedding)")))
@@ -675,7 +674,6 @@ object SeriesOps {
     * one window rank on the (anchor) partitioning.
     */
   def embedIntrinsicDim(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val u = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"),

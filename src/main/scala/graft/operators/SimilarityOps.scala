@@ -23,7 +23,6 @@ object SimilarityOps {
     * instead of per-element interpreted lambdas.
     */
   private def vectors(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.embeddings(s, dir)
       .withColumn("v", transform(col("embedding"), x => x.cast("double")))
       .withColumn("norm", sqrt(expr("graft_dot(embedding, embedding)")))
@@ -387,7 +386,6 @@ object SimilarityOps {
     * graft_dot kernel bit-for-bit.
     */
   def embedMmr(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val vecs = Tables.embeddings(s, dir)
       .select(col("vec_id"),
         transform(col("embedding"),

@@ -74,7 +74,6 @@ object TextOps {
     * query IS oracle-checkable with cms_est = freq.
     */
   def textTopTermsCms(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val tok = tokens(Tables.documents(s, dir))
       .select(col("token"), xxhash64(col("token")).as("h"))
     val sketch = tok.agg(expr("graft_cms_agg(h, 4, 8192)").as("sketch"))

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
@@ -22,10 +21,10 @@ import org.apache.spark.sql.types.IntegerType
   * emitting after k rows — same sort requirement, no rank column
   * materialization for discarded rows, early-out per group.
   *
-  * Installed per-session via [[GraftPlanner.install]] (experimental
+  * Installed per session by [[graft.GraftSession.install]] (experimental
   * extraOptimizations/extraStrategies — the public injection points that
-  * work on an already-created session; SparkSessionExtensions offers the
-  * same hooks at session build time).
+  * work on an already-created session, including the plain sessions and
+  * `newSession()`s a caller builds without the factory).
   */
 case class TopKPerGroupNode(partitionSpec: Seq[Expression],
                             orderSpec: Seq[SortOrder],
@@ -147,28 +146,4 @@ case class TopKPerGroupExec(partitionSpec: Seq[Expression],
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerGroupExec =
     copy(child = newChild)
-}
-
-object GraftPlanner {
-  /** Idempotently installs the rule + strategy into an existing session. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RankFilterToTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RankFilterToTopK
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-  }
-}
-
-/** Build-time injection entry point: pass
-  * `--conf spark.sql.extensions=graft.plans.GraftSessionExtensions` (or
-  * `.withExtensions(new GraftSessionExtensions)`) and every session gets
-  * the top-k rewrite plus the native functions without calling install().
-  */
-class GraftSessionExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => RankFilterToTopK)
-    e.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-  }
 }

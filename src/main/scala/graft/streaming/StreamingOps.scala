@@ -243,7 +243,6 @@ object StreamingOps {
   def streamingLshCandidates(docs: Dataset[Doc]): Dataset[CandidatePair] = {
     val s = docs.sparkSession
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val perms = graft.operators.DedupOps.NumPerms
     val bands = graft.operators.DedupOps.Bands
     val sigs = graft.operators.DedupOps.withShingleHashes(docs.toDF(), "text")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, HaversineExpr, RollingHashExpr}
+import graft.functions.{HaversineExpr, RollingHashExpr}
 
 /** Native Catalyst expression kernels + registration + codegen path. */
 class ExpressionSpec extends AnyFunSuite with SparkFixture {
@@ -33,7 +33,6 @@ class ExpressionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("registered SQL functions evaluate through codegen") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       "SELECT graft_haversine(0.0, 0.0, 0.0, 90.0) AS q, graft_rolling_hash('abc') AS h")
       .collect().head
@@ -43,7 +42,6 @@ class ExpressionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("null propagation through the native expressions") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       "SELECT graft_haversine(CAST(NULL AS DOUBLE), 0.0, 0.0, 0.0) AS q, " +
         "graft_rolling_hash(CAST(NULL AS STRING)) AS h").collect().head
@@ -85,7 +83,6 @@ class ExpressionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("jaro-winkler evaluates through codegen and propagates nulls") {
-    GraftFunctions.register(spark)
     val row = spark.sql(
       "SELECT graft_jaro_winkler('MARTHA', 'MARHTA') AS a, " +
         "graft_jaro_winkler(CAST(NULL AS STRING), 'x') AS b").collect().head
@@ -99,7 +96,6 @@ class ExpressionSpec extends AnyFunSuite with SparkFixture {
     // OCCURRENCE, fingerprint bit j set iff counter_j ends STRICTLY > 0
     // (a 0-tie leaves the bit clear). Also pin occurrence-weighting:
     // duplicate hashes must count twice.
-    GraftFunctions.register(spark)
     import spark.implicits._
     val hashes = Seq(0x0F0FL, 0x00FFL, 0x00FFL, -1L) // -1 = all 64 bits set
     val got = hashes.toDF("h").groupBy()

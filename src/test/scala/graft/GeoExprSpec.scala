@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GeoFunctions, PipBBoxPrefilter}
 
 /** Native PIP expression + the bbox-prefilter optimizer rule. */
 class GeoExprSpec extends AnyFunSuite with SparkFixture {
@@ -12,7 +11,6 @@ class GeoExprSpec extends AnyFunSuite with SparkFixture {
       "named_struct('x', 4.0D, 'y', 4.0D), named_struct('x', 0.0D, 'y', 4.0D))"
 
   test("graft_pip agrees with the column-expression ray casting") {
-    GeoFunctions.register(spark)
     import spark.implicits._
     val pts = Seq((2.0, 2.0), (5.0, 2.0), (-1.0, -1.0), (3.9, 3.9), (0.5, 3.99))
       .toDF("px", "py").withColumn("poly", expr(squarePoly))
@@ -24,7 +22,6 @@ class GeoExprSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("optimizer rule conjoins the bbox prefilter exactly once") {
-    GeoFunctions.register(spark)
     // parquet-backed points: a LocalRelation would be constant-folded away
     val pts = Tables.customer(spark, sfDir)
       .select(col("c_custkey"),

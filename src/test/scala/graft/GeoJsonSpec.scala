@@ -83,7 +83,6 @@ class GeoJsonSpec extends AnyFunSuite with SparkFixture {
 
   test("parsed polygons drive the exact PIP expression") {
     import spark.implicits._
-    graft.functions.GeoFunctions.register(spark)
     val polys = GeoJson.features(Seq(fc).toDF("value"), col("value"), "name")
     val pts = Seq((5.0, 5.0, "in downtown"), (25.0, 2.0, "in islands #1"),
       (45.0, 45.0, "in islands #2"), (33.0, 33.0, "nowhere"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * becoming a global sort, codegen on the hot path.
   */
 class PlanShapeSpec extends AnyFunSuite with SparkFixture {
-
-  private def executed(df: org.apache.spark.sql.DataFrame): SparkPlan = {
-    df.collect() // force AQE to finalize
-    df.queryExecution.executedPlan
-  }
-
-  /** Deep traversal that crosses AQE boundaries (QueryStageExec is a leaf
-    * node whose real subtree hangs off .plan).
-    */
-  private def collectAll(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: collectAll(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: collectAll(q.plan)
-    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r +: collectAll(r.child)
-    case other => other +: (other.children.flatMap(collectAll) ++ other.subqueries.flatMap(collectAll))
-  }
+  import PlanWalk._
 
   test("star join broadcasts all three dimensions") {
     val plan = executed(operators.Joins.joinBroadcastDims(spark, sfDir))
@@ -140,7 +125,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   test("minhash signature aggregates via the native kernel, not 64 agg columns") {
     // signatures are materialized once per corpus (derived-file pattern);
     // the kernel assertion targets the materialization's own plan
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val plan = operators.DedupOps.withShingleHashes(
         Tables.documents(spark, sfDir), "text")

@@ -24,7 +24,6 @@ class QualitySpec extends AnyFunSuite with SparkFixture {
 
   test("Count-Min estimates obey the sketch guarantee over the full vocabulary") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val tok = Tables.documents(spark, sfDir)
       .select(explode(split(col("text"), " ")).as("token"))
       .select(col("token"), xxhash64(col("token")).as("h"))

@@ -77,7 +77,6 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("materializedNeighborSigs equals the inline signature aggregate") {
-    graft.functions.GraftFunctions.register(spark)
     val e = operators.DedupOps.materializedEdges(spark, sfDir)
     val fresh = e.select(col("doc_a").as("node"), col("doc_b").as("nbr"))
       .unionByName(e.select(col("doc_b").as("node"), col("doc_a").as("nbr")))
@@ -93,22 +92,7 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
 
   // ---- 1b. plan shapes of the amortized consumers ---------------------
 
-  private def executed(df: org.apache.spark.sql.DataFrame) = {
-    df.collect()
-    df.queryExecution.executedPlan
-  }
-
-  private def collectAll(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      a +: collectAll(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      q +: collectAll(q.plan)
-    case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-      r +: collectAll(r.child)
-    case other => other +: (other.children.flatMap(collectAll) ++
-      other.subqueries.flatMap(collectAll))
-  }
+  import PlanWalk._
 
   test("adamic-adar is a wedge-pair read + TakeOrderedAndProject, no join at all") {
     val plan = executed(operators.GraphOps.adamicAdar(spark, sfDir))

@@ -29,7 +29,6 @@ class Round17Spec extends AnyFunSuite with SparkFixture {
   // ---- 1. r17 derived-materialization output invariance ----------------
 
   test("materializedStructEquivPairs equals the from-scratch LSH+confirm kernel") {
-    graft.functions.GraftFunctions.register(spark)
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5))

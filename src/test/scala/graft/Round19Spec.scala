@@ -73,7 +73,6 @@ class Round19Spec extends AnyFunSuite with SparkFixture {
 
   test("graft_sql2/graft_ldot are bit-identical to the HOF folds and loud on overflow") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // random long-array pairs in the micro-quantization envelope: the
     // codegen kernels must equal the interpreted aggregate(zip_with(...))
     // formulation element for element (same left-to-right op sequence)

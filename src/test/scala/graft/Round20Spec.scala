@@ -34,7 +34,6 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
 
   test("pairwise kernels throw loudly on length mismatch and null elements") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val mism = Seq((Seq(1L, 2L, 3L), Seq(1L, 2L))).toDF("a", "b")
     val nul = Seq((Seq[java.lang.Long](1L, null, 3L),
       Seq[java.lang.Long](1L, 2L, 3L))).toDF("a", "b")
@@ -66,7 +65,6 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
 
   test("double kernels match the HOF folds bitwise on NaN/±0.0/subnormal/empty") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val nan = Double.NaN
     val sub = java.lang.Double.MIN_VALUE // smallest subnormal
     val rows = Seq(
@@ -102,7 +100,6 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
 
   test("long kernels match the HOF folds on boundary magnitudes and empty") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // magnitudes near the safe envelope (3·(1.5e9)² < 2⁶³ so the SUM
     // stays exact too), zeros, sign flips, and the empty vector
     val m = 1500000000L
@@ -130,7 +127,6 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
 
   test("kernels equal the HOF folds on generator-random vectors (property)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // ScalaCheck-drawn vectors (fixed seeds — reproducible) generalize the
     // fixed adversarial tables: dims 1..96 incl. mismatched magnitudes,
     // dense zero runs, and negative-heavy draws. The long draws stay in
@@ -184,7 +180,6 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
 
   test("minhash signature expr skips null hashes exactly like the aggregate") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // pre-r20 the scalar expr read a null slot as 0L, which wins min for
     // many permutations — a silent batch/stream signature divergence
     // (the aggregate twin skips nulls via its child.eval == null guard)

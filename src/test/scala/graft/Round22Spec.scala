@@ -19,7 +19,6 @@ import org.apache.spark.sql.functions._
 class Round22Spec extends AnyFunSuite with SparkFixture {
 
   private def interOne(aArr: Seq[java.lang.Long], bArr: Seq[java.lang.Long]): Long = {
-    functions.GraftFunctions.register(spark)
     import spark.implicits._
     Seq((aArr, bArr)).toDF("a", "b")
       .select(expr("graft_inter_size_l(a, b)").as("c"))
@@ -27,7 +26,6 @@ class Round22Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_inter_size_l equals size(array_intersect) on sorted distinct arrays") {
-    functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(20260818L)
     val rows = (1 to 200).map { _ =>
@@ -63,7 +61,6 @@ class Round22Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("graft_ngrams equals the zip_with gram chains byte-for-byte") {
-    functions.GraftFunctions.register(spark)
     import spark.implicits._
     // adversarial shapes: empty string, single token, consecutive /
     // leading / trailing spaces (split keeps ALL empties at limit -1),
@@ -137,17 +134,16 @@ class Round22Spec extends AnyFunSuite with SparkFixture {
     // the old plan's rank window sorted (days, o_orderkey, l_linenumber)
     // over every joined fact row; the histogram form has no per-row
     // tie-break columns anywhere in a window sort
-    val df = operators.TimeWindows.tsFulfillment(spark, sfDir)
-    val windows = df.queryExecution.executedPlan.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
-    }
+    import PlanWalk._
+    val windows = collectAll(executed(operators.TimeWindows.tsFulfillment(spark, sfDir)))
+      .collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.nonEmpty, "fulfillment must keep its windows")
     windows.foreach { w =>
       val sortCols = w.orderSpec.map(_.child.toString).mkString(",")
       assert(!sortCols.contains("orderkey") && !sortCols.contains("linenumber"),
         s"window must not sort fact-row tie-breakers (histogram regressed): $sortCols")
       // every window input must sit above the (month, days) aggregate
-      val aggBelow = w.collect {
+      val aggBelow = collectAll(w).collect {
         case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec
           if a.groupingExpressions.exists(_.toString.contains("days")) => a
       }

@@ -5,7 +5,7 @@ import org.scalatest.Suite
 
 /** One shared local session for the whole test run (Test/fork := true puts
   * all suites in a single forked JVM, so a singleton avoids per-suite
-  * SparkContext churn). Config mirrors Verify/Bench: UTC + nanosAsLong.
+  * SparkContext churn), built by [[GraftSession]] like every tool's.
   */
 trait SparkFixture { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
@@ -13,12 +13,5 @@ trait SparkFixture { self: Suite =>
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = GraftSession(2)
 }

@@ -423,7 +423,6 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("streaming signature path is bit-identical to the batch aggregate path") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // same doc set through (a) the scalar per-row kernel and (b) the
     // exploded min-aggregate — identical signature arrays required
     val docs = Seq((1L, "alpha beta gamma delta epsilon"),

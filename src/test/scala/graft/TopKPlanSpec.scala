@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{GraftPlanner, TopKPerGroupExec}
 
 /** The custom rank-filter → top-k rewrite must be result-invisible and
   * actually planned (TopKPerGroupExec in the executed plan).
@@ -9,11 +8,13 @@ import graft.plans.{GraftPlanner, TopKPerGroupExec}
 class TopKPlanSpec extends AnyFunSuite with SparkFixture {
 
   test("rewrite preserves results and plans TopKPerGroupExec") {
-    // stock results first (session not yet instrumented)
-    val stockTopk = operators.Windows.winTopkPerGroup(spark, sfDir).collect().toSeq
-    val stockDedup = operators.Windows.dedupKeepLatest(spark, sfDir).collect().toSeq
-
-    GraftPlanner.install(spark)
+    // stock results from a plain sibling session: the operator functions,
+    // called directly, install nothing, so its plans keep the window
+    val stock = spark.newSession()
+    val stockTopkDf = operators.Windows.winTopkPerGroup(stock, sfDir)
+    assert(!stockTopkDf.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+    val stockTopk = stockTopkDf.collect().toSeq
+    val stockDedup = operators.Windows.dedupKeepLatest(stock, sfDir).collect().toSeq
 
     val customDf = operators.Windows.winTopkPerGroup(spark, sfDir)
     val customTopk = customDf.collect().toSeq
@@ -29,41 +30,8 @@ class TopKPlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("rewrite leaves rank-projecting (no filter) windows untouched") {
-    GraftPlanner.install(spark)
     val df = operators.Windows.winRank(spark, sfDir)
     assert(!df.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
     assert(df.count() > 0)
-  }
-
-  test("GraftSessionExtensions wires the rewrite at session build time (no install())") {
-    import org.apache.spark.sql.SparkSession
-    // a sibling session on the same context, built through the
-    // SparkSessionExtensions injector. (The equivalent conf form,
-    // spark.sql.extensions=graft.plans.GraftSessionExtensions, is a
-    // STATIC conf read from the SparkContext at startup — it cannot be
-    // demonstrated on a test-shared context, which is exactly why the
-    // class also supports the programmatic withExtensions path.)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = try {
-      SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.plans.GraftSessionExtensions)
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    } finally {
-      // whatever happens, later tests must see the fixture session again
-      SparkSession.setActiveSession(spark)
-      SparkSession.setDefaultSession(spark)
-    }
-    assert(ext ne spark, "builder must have created a distinct session")
-    val df = operators.Windows.winTopkPerGroup(ext, sfDir)
-    assert(df.queryExecution.executedPlan.toString.contains("TopKPerGroup"),
-      "extensions-built session must plan the custom exec without install()")
-    assert(df.collect().toSeq ===
-      operators.Windows.winTopkPerGroup(spark, sfDir).collect().toSeq,
-      "results must match the stock window formulation")
   }
 }

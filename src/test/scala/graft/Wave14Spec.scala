@@ -261,13 +261,10 @@ class Wave14Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("range query plan: probes broadcast, corpus never sort-merge joined") {
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, SortMergeJoinExec}
-    def collectAll(p: SparkPlan): Seq[SparkPlan] =
-      (p +: p.children.flatMap(collectAll)) ++ p.subqueries.flatMap(collectAll)
     val plan = operators.SimilarityOps.simRangeQuery(spark, sfDir)
       .queryExecution.sparkPlan
-    val all = collectAll(plan)
+    val all = PlanWalk.collectAll(plan)
     assert(!all.exists(_.isInstanceOf[SortMergeJoinExec]),
       "corpus must stream against broadcast probes, not sort-merge")
     assert(all.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
@@ -275,13 +272,10 @@ class Wave14Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("ichimoku plan: all three frame windows share one type-partitioned shuffle") {
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def collectAll(p: SparkPlan): Seq[SparkPlan] =
-      p +: p.children.flatMap(collectAll)
     val plan = operators.IndicatorOps.winIchimoku(spark, sfDir)
       .queryExecution.sparkPlan
-    val shuffles = collectAll(plan).collect { case e: ShuffleExchangeExec => e }
+    val shuffles = PlanWalk.collectAll(plan).collect { case e: ShuffleExchangeExec => e }
     // one (event_type, day) shuffle shared by the close-pick window and
     // the bar aggregate, one (event_type) shuffle shared by the THREE
     // frame windows, one range exchange for the output sort — a plan
