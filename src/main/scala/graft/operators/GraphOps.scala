@@ -607,7 +607,7 @@ object GraphOps {
   /** Materialized 3-round LPA label relation — three graded queries
     * (#254 labelProp, #260 modularity, #264 conductance) share the
     * identical labels. Before r13 this was an in-session memo
-    * (WeakReference cache), which made each NEW JVM's first consumer
+    * (weak-session cache), which made each NEW JVM's first consumer
     * re-pay the full ~10 s propagation chain at sf0.1 — the bench-run
     * cost landed on whichever label query ran first (q_graph_conductance
     * in name order: 2.8 s vs 12.9 s round-over-round depending on cache

@@ -217,25 +217,10 @@ object InferenceOps {
     * was re-evaluated FIVE times per bench pass: twice inside
     * [[olsMulti]] (grand-total arm + centered-moment arm), once more by
     * [[conformalResidBuild]], and olsMulti's two arms again under the
-    * conformal build's own olsMulti call. Same weak-session lifecycle
-    * as [[conformalResid]]'s residCache below.
+    * conformal build's own olsMulti call.
     */
-  private final case class PerOrderEntry(
-    session: java.lang.ref.WeakReference[SparkSession], df: DataFrame)
-  private val perOrderCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PerOrderEntry]()
-
-  private def olsPerOrder(s: SparkSession, dir: String): DataFrame = {
-    perOrderCache.entrySet.removeIf { e =>
-      val sess = e.getValue.session.get()
-      sess == null || sess.sparkContext.isStopped
-    }
-    perOrderCache.compute(dir, (_, old) => {
-      if (old != null && (old.session.get() eq s)) old
-      else PerOrderEntry(new java.lang.ref.WeakReference(s),
-        olsPerOrderBuild(s, dir).localCheckpoint())
-    }).df
-  }
+  private def olsPerOrder(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, s"ols_per_order:$dir")(olsPerOrderBuild(s, dir).localCheckpoint())
 
   private def olsPerOrderBuild(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
@@ -399,28 +384,11 @@ object InferenceOps {
     * rank kernel — and the graded consumer needs the SAME checkpointed
     * relation for its coverage count, so without a memo every
     * invocation re-ran the full two-pass OLS fit + materialization a
-    * second time. Same lifecycle discipline as [[StatsOps.rankedRel]]:
-    * session held weakly, dead/stopped sessions swept on every lookup,
-    * an entry built on a different live session is rebuilt for the
-    * caller's. The relation is orders-sized — exactly the class the
+    * second time. The relation is orders-sized — exactly the class the
     * rank-kernel memo already holds checkpointed.
     */
-  private final case class ResidEntry(
-    session: java.lang.ref.WeakReference[SparkSession], df: DataFrame)
-  private val residCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ResidEntry]()
-
-  private[graft] def conformalResid(s: SparkSession, dir: String): DataFrame = {
-    residCache.entrySet.removeIf { e =>
-      val sess = e.getValue.session.get()
-      sess == null || sess.sparkContext.isStopped
-    }
-    residCache.compute(dir, (_, old) => {
-      if (old != null && (old.session.get() eq s)) old
-      else ResidEntry(new java.lang.ref.WeakReference(s),
-        conformalResidBuild(s, dir))
-    }).df
-  }
+  private[graft] def conformalResid(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, s"conformal_resid:$dir")(conformalResidBuild(s, dir))
 
   private def conformalResidBuild(s: SparkSession, dir: String): DataFrame =
     olsPerOrder(s, dir)

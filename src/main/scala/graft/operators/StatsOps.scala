@@ -107,38 +107,12 @@ object StatsOps {
     * collect, so distinct queries over the SAME (relation, total order)
     * — q_ntile/q_histogram_equidepth, q_gini/q_lorenz_deciles,
     * q_sample_index/q_negative_pairs — must not each pay it inside one
-    * Verify/Bench session. Keyed by caller key with the session held
-    * weakly (see [[RankEntry]]); caller keys embed the sf dir, so a dir
-    * switch self-invalidates (same discipline as [[SqlViews]]). Entries
-    * pin localCheckpoint RDDs only while their session lives — a sweep
-    * on every lookup evicts stopped sessions' entries; live-session
-    * footprint is bounded by the handful of kernel keys per dir,
-    * megabytes at any tested SF.
+    * Verify/Bench session. Memoized in [[SessionMemo]] under the caller
+    * key; live-session footprint is bounded by the handful of kernel
+    * keys per dir, megabytes at any tested SF.
     */
   private[graft] final case class RankedRel(sorted: DataFrame, ranked: DataFrame,
     n: Long, sortSig: String)
-  /** Keyed by caller key with the owning session held via WeakReference,
-    * NOT by identityHashCode: identity hashes are not unique, so a
-    * post-GC collision could serve a relation checkpointed on a defunct
-    * session. A RankedRel strong-references its session through the
-    * DataFrames (which is why a WeakHashMap alone can't work here — the
-    * value would resurrect the key), so every lookup first sweeps
-    * entries whose session is gone or stopped, releasing their
-    * checkpoint blocks; an entry whose live session differs from the
-    * caller's is simply rebuilt for the caller's session.
-    */
-  private final case class RankEntry(
-    session: java.lang.ref.WeakReference[SparkSession], rel: RankedRel)
-  private val rankCache =
-    new java.util.concurrent.ConcurrentHashMap[String, RankEntry]()
-
-  /** Test hook (PrewarmSpec): the kernel keys currently memoized.
-    * Pins that [[RankKernels]]'s registry covers every kernel the
-    * graded consumers install — nothing more, nothing less. */
-  private[graft] def rankCacheKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    rankCache.keySet.asScala.toSet
-  }
 
   /** Shared two-phase global rank kernel (ntileBuckets' scaladoc has the
     * full design argument). The partition count is explicit because a
@@ -161,31 +135,22 @@ object StatsOps {
   private[graft] def rankedRel(s: SparkSession, df: => DataFrame,
       sortCols: Seq[Column], cacheKey: String): RankedRel = {
     val sig = sortCols.map(_.toString).mkString(",")
-    // release checkpoint blocks of dead/stopped sessions (cache is a
-    // handful of keys, so the sweep is O(1) in practice)
-    rankCache.entrySet.removeIf { e =>
-      val sess = e.getValue.session.get()
-      sess == null || sess.sparkContext.isStopped
+    val rel = SessionMemo(s, cacheKey) {
+      val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
+      val sorted = df
+        .repartitionByRange(nPart, sortCols: _*)
+        .sortWithinPartitions(sortCols: _*)
+        .withColumn("pid", spark_partition_id())
+        .localCheckpoint()
+      val hist = sorted.groupBy("pid").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+      val offsets: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
+      val w = Window.partitionBy("pid").orderBy(sortCols: _*)
+      RankedRel(sorted,
+        sorted.withColumn("r",
+          element_at(typedLit(offsets), col("pid")) + row_number().over(w)),
+        hist.map(_._2).sum, sig)
     }
-    val rel = rankCache.compute(cacheKey, (_, old) => {
-      if (old != null && (old.session.get() eq s)) old
-      else {
-        val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
-        val sorted = df
-          .repartitionByRange(nPart, sortCols: _*)
-          .sortWithinPartitions(sortCols: _*)
-          .withColumn("pid", spark_partition_id())
-          .localCheckpoint()
-        val hist = sorted.groupBy("pid").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-        val offsets: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-        val w = Window.partitionBy("pid").orderBy(sortCols: _*)
-        RankEntry(new java.lang.ref.WeakReference(s), RankedRel(sorted,
-          sorted.withColumn("r",
-            element_at(typedLit(offsets), col("pid")) + row_number().over(w)),
-          hist.map(_._2).sum, sig))
-      }
-    }).rel
     // a key collision across DIFFERENT total orders would silently serve
     // the wrong ranking — fail loudly instead (keys are caller-authored)
     require(rel.sortSig == sig,
@@ -197,9 +162,9 @@ object StatsOps {
   /** Named builders for the rank-kernel relations this file owns. Each
     * is the single authority for its (input relation, total order,
     * cache key) triple: the graded consumers call these, and
-    * [[RankKernels]] calls the SAME functions from the bench prewarm —
-    * so warming the memo never executes a graded `SparkEntry.queries`
-    * entry, and a drift between "what prewarm builds" and "what the
+    * [[graft.Prewarm.sessionTier]] calls the SAME functions from the
+    * bench prewarm — so warming the memo never executes a graded
+    * `SparkEntry.queries` entry, and a drift between "what prewarm builds" and "what the
     * query uses" is impossible by construction (r14 verdict item:
     * Prewarm must not invoke graded entries untimed).
     */

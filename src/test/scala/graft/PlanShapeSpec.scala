@@ -433,27 +433,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       org.apache.spark.sql.Row(1L, n), "global rank must be contiguous 1..N")
   }
 
-  test("rank-kernel memo: same key reuses the build, collision guard trips") {
-    import org.apache.spark.sql.functions._
-    // two calls with the same (session, key) must return the SAME
-    // checkpointed relation (no second build), and a key reused with a
-    // DIFFERENT total order must fail loudly instead of silently serving
-    // the wrong ranking
-    val rel1 = operators.StatsOps.rankedRel(spark,
-      Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$sfDir#orders:totalprice")
-    val rel2 = operators.StatsOps.rankedRel(spark,
-      Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$sfDir#orders:totalprice")
-    assert(rel1 eq rel2, "same key must return the memoized instance")
-    val ex = intercept[IllegalArgumentException] {
-      operators.StatsOps.rankedRel(spark,
-        Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-        Seq(col("o_orderkey")), s"$sfDir#orders:totalprice")
-    }
-    assert(ex.getMessage.contains("different sort order"))
-  }
-
   test("AQE splits a skewed join partition (OptimizeSkewedJoin fires)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

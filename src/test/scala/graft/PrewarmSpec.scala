@@ -7,14 +7,12 @@ import graft.operators._
   *
   *  1. `graft.Prewarm` never executes a graded `SparkEntry.queries`
   *     entry untimed — enforced structurally (source scan: the token
-  *     `SparkEntry` must not appear in Prewarm.scala or
-  *     RankKernels.scala).
-  *  2. The [[RankKernels]] registry and the 14 graded rank-kernel
-  *     consumers install EXACTLY the same memo keys: after running
-  *     every registry builder, running every consumer adds no new
-  *     kernel key (the registry covers all), and after a fresh look
-  *     the consumers alone install no key the registry didn't (the
-  *     registry has no dead entries).
+  *     `SparkEntry` must not appear in Prewarm.scala).
+  *  2. `Prewarm.sessionTier` and the graded memo consumers install
+  *     EXACTLY the same [[SessionMemo]] keys: after running every
+  *     session-tier builder, running every consumer adds no new key (the
+  *     tier covers all), and consumers alone, in a fresh session, use
+  *     every key the tier builds (the tier has no dead entries).
   *  3. The bench split can't hide a regression: if a sf0.1
   *     BENCH_FULL.json exists from the latest bench run, the COMBINED
   *     prewarm_sec + value must sit within the 2× engine budget that
@@ -29,35 +27,47 @@ class PrewarmSpec extends AnyFunSuite with SparkFixture {
     "q_ntile", "q_part_abc", "q_prune_curve", "q_quality_filter_sweep",
     "q_rfm_segments", "q_sample_index", "q_zonemap_prune")
 
-  test("Prewarm and RankKernels reference no graded SparkEntry queries") {
-    for (f <- Seq("src/main/scala/graft/Prewarm.scala",
-        "src/main/scala/graft/operators/RankKernels.scala")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(f)), "UTF-8")
-      assert(!src.contains("SparkEntry"),
-        s"$f must warm memos via direct builders, never a graded query")
-    }
+  /** Every graded query that reads a session memo: the rank owners, the
+    * two Markov π consumers and the OLS/conformal pair. */
+  private val memoConsumers = (rankOwnerQueries ++ Seq("q_markov_stationary",
+    "q_markov_entropy_rate", "q_stats_ols_multi", "q_eval_conformal")).distinct
+
+  test("Prewarm references no graded SparkEntry queries") {
+    val f = "src/main/scala/graft/Prewarm.scala"
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f)), "UTF-8")
+    assert(!src.contains("SparkEntry"),
+      s"$f must warm memos via direct builders, never a graded query")
   }
 
-  test("RankKernels registry covers exactly the consumers' kernel keys") {
-    def dirKeys: Set[String] = StatsOps.rankCacheKeys.filter(_.contains(sfDir))
-    // run every registry builder (idempotent on a warm cache)
-    RankKernels.builders.foreach { case (_, b) => b(spark, sfDir) }
-    val afterRegistry = dirKeys
-    assert(afterRegistry.size == 11,
-      s"expected 11 distinct rank-kernel keys, got $afterRegistry")
-    // every graded consumer: must add NO new kernel key
-    rankOwnerQueries.foreach { q =>
+  test("Prewarm.sessionTier covers exactly the consumers' session-memo keys") {
+    def dirKeys: Set[String] = SessionMemo.keys.filter(_.contains(sfDir))
+    // run every session-tier builder (idempotent on a warm memo)
+    Prewarm.sessionTier.foreach { case (_, b) => b(spark, sfDir) }
+    val afterTier = dirKeys
+    // 11 rank kernels + Markov π + OLS per-order features + conformal residuals
+    assert(afterTier.size == 14,
+      s"expected 14 distinct session-memo keys, got $afterTier")
+    // every graded consumer: must add NO new key
+    memoConsumers.foreach { q =>
       SparkEntry.queries(q)(spark, sfDir).count()
     }
     val afterConsumers = dirKeys
-    assert(afterConsumers == afterRegistry,
-      s"consumers installed kernel keys the registry misses: " +
-        s"${afterConsumers -- afterRegistry}")
-    // markov π memo: the registry's direct build must serve the graded
-    // entry (row parity with a fresh compute is pinned in EventOps specs;
-    // here we only need it non-empty and 5-state)
-    assert(EventOps.stationaryRows(spark, sfDir).nonEmpty)
+    assert(afterConsumers == afterTier,
+      s"consumers installed memo keys the session tier misses: " +
+        s"${afterConsumers -- afterTier}")
+    // no dead entries: after the consumers alone ran in a fresh session,
+    // that session owns every key, so a lookup with a probe value returns
+    // the consumers' build (a key they never used would take the probe)
+    val fresh = spark.newSession()
+    memoConsumers.foreach { q =>
+      SparkEntry.queries(q)(fresh, sfDir).count()
+    }
+    val unused = afterTier.filter { k =>
+      val probe = new Object
+      SessionMemo[Object](fresh, k)(probe) eq probe
+    }
+    assert(unused.isEmpty, s"session-tier keys no graded consumer uses: $unused")
   }
 
   /** r17 verdict item 3: every derived-FILES prewarm entry must carry an

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The custom rank-filter → top-k rewrite must be result-invisible and
@@ -7,12 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKPlanSpec extends AnyFunSuite with SparkFixture {
 
+  /** The final (AQE) plan of `df` after a full run, node by node. */
+  private def topKNodes(df: DataFrame): Seq[String] =
+    PlanWalk.collectAll(PlanWalk.executed(df)).map(_.nodeName)
+      .filter(_.contains("TopKPerGroup"))
+
   test("rewrite preserves results and plans TopKPerGroupExec") {
     // stock results from a plain sibling session: the operator functions,
     // called directly, install nothing, so its plans keep the window
     val stock = spark.newSession()
     val stockTopkDf = operators.Windows.winTopkPerGroup(stock, sfDir)
-    assert(!stockTopkDf.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+    assert(topKNodes(stockTopkDf).isEmpty)
     val stockTopk = stockTopkDf.collect().toSeq
     val stockDedup = operators.Windows.dedupKeepLatest(stock, sfDir).collect().toSeq
 
@@ -20,18 +26,18 @@ class TopKPlanSpec extends AnyFunSuite with SparkFixture {
     val customTopk = customDf.collect().toSeq
     assert(customTopk === stockTopk)
 
-    val planStr = customDf.queryExecution.executedPlan.toString
-    assert(planStr.contains("TopKPerGroup"), s"custom exec not planned:\n$planStr")
+    assert(topKNodes(customDf).nonEmpty,
+      s"custom exec not planned:\n${customDf.queryExecution.executedPlan}")
 
     // k=1 equality form (dedup-keep-latest) rewrites too, same results
     val customDedupDf = operators.Windows.dedupKeepLatest(spark, sfDir)
     assert(customDedupDf.collect().toSeq === stockDedup)
-    assert(customDedupDf.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+    assert(topKNodes(customDedupDf).nonEmpty)
   }
 
   test("rewrite leaves rank-projecting (no filter) windows untouched") {
     val df = operators.Windows.winRank(spark, sfDir)
-    assert(!df.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+    assert(topKNodes(df).isEmpty)
     assert(df.count() > 0)
   }
 }
