@@ -115,6 +115,12 @@ object Det {
   /** Exact sum of an already-decimal expression, surfaced as double. */
   def decSum(c: Column): Column = sum(c).cast("double")
 
+  /** ln(x) floored to integer nano-nats — the repo-wide cross-engine ln
+    * convention: sums of the floored values are exact integer arithmetic,
+    * and the DuckDB twins floor ln(x) · 1e9 the same way.
+    */
+  def lnNano(c: Column): Column = floor(log(c.cast("double")) * 1e9).cast("long")
+
   /** Cross-engine caveat for decimal→double: Spark always converts via
     * BigDecimal (correctly rounded); DuckDB converts int128/10^scale with
     * TWO roundings, which can differ by 1 ulp once the scaled integer

@@ -10,13 +10,19 @@ object Verify {
     val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val todo = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    todo.zipWithIndex.foreach { case ((name, fn), i) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        // a stopped context fails every later query: stop here, loudly
+        if (spark.sparkContext.isStopped) {
+          System.err.println(s"[verify] $name stopped the SparkContext; " +
+            s"${todo.size - i - 1} queries not run")
+          sys.exit(1)
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -43,9 +43,7 @@ object ClusterOps {
     * twin recomputes the unrolled Lloyd rounds from the raw corpus.
     */
   private[graft] def materializedCentroids(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/kmeans_cents_v1_${DedupOps.cacheKey(dir, "embeddings")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "kmeans_cents_v1", "embeddings").parquet {
       val vecs = quantized(s, dir)
       val seed = vecs.filter(col("vec_id") < K)
         .select(col("vec_id").cast("int").as("cid"), col("q").as("c"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Det, Tables}
 
 /** Corpus-wide token statistics for training-data curation: the exact
   * duplicated-span registry (the first stage of exact-substring dedup à
@@ -25,9 +25,6 @@ import graft.Tables
 object CorpusOps {
 
   private val SpanTokens = 8
-
-  private def lnNano(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(log(c.cast("double")) * 1e9).cast("long")
 
   /** Registry of exact 8-token spans appearing in ≥2 distinct documents
     * — the candidate list an exact-substring deduplicator would cut.
@@ -91,8 +88,8 @@ object CorpusOps {
       .orderBy(desc("freq"), col("tok")).limit(100)
     val pts = top
       .withColumn("rank", row_number().over(Window.orderBy(desc("freq"), col("tok"))))
-      .select(lnNano(col("rank")).cast(DecimalType(38, 0)).as("x"),
-        lnNano(col("freq")).cast(DecimalType(38, 0)).as("y"))
+      .select(Det.lnNano(col("rank")).cast(DecimalType(38, 0)).as("x"),
+        Det.lnNano(col("freq")).cast(DecimalType(38, 0)).as("y"))
     pts.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
       .withColumn("slope",
@@ -274,7 +271,7 @@ object CorpusOps {
     * totals, M_w ∝ c·N + g·N_l over 2·N_l·N — every ln() argument is an
     * exact integer (product in DECIMAL first; the decimal→double cast
     * feeding ln() is correctly rounded on both engines, the envelope
-    * note of [[InferenceOps]].anovaLang), every Σ x·lnNano(x) term
+    * note of [[InferenceOps]].anovaLang), every Σ x·Det.lnNano(x) term
     * accumulates in DECIMAL(38,0), and three truncating divisions
     * assemble the result. The union-of-support sum splits JOIN-FREE as
     * Σ_global f(g·N_l) plus a shared-word correction from the one
@@ -288,7 +285,7 @@ object CorpusOps {
     */
   def textJsd(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    def f(x: org.apache.spark.sql.Column) = x.cast(dec) * lnNano(x)
+    def f(x: org.apache.spark.sql.Column) = x.cast(dec) * Det.lnNano(x)
     val words = Tables.documents(s, dir)
       .select(col("lang"), explode(split(col("text"), " ")).as("word"))
     // both count tables are vocab-bounded; localCheckpoint so their
@@ -315,12 +312,12 @@ object CorpusOps {
         sum(f(col("c"))).as("sp"))
     nl.join(smA, Seq("lang")).join(smB, Seq("lang"))
       .crossJoin(broadcast(nTot))
-      .withColumn("hm_nano", lnNano(col("n_l").cast(dec) * col("n") * 2) -
+      .withColumn("hm_nano", Det.lnNano(col("n_l").cast(dec) * col("n") * 2) -
         expr("cast((sm_a + sm_b) div (2 * cast(n_l as decimal(38,0)) * n) as long)"))
       .withColumn("hp_nano",
-        lnNano(col("n_l")) - expr("cast(sp div cast(n_l as decimal(38,0)) as long)"))
+        Det.lnNano(col("n_l")) - expr("cast(sp div cast(n_l as decimal(38,0)) as long)"))
       .withColumn("hq_nano",
-        lnNano(col("n")) - expr("cast(sq div cast(n as decimal(38,0)) as long)"))
+        Det.lnNano(col("n")) - expr("cast(sq div cast(n as decimal(38,0)) as long)"))
       .select(col("lang"), col("n_l").as("n_tokens"), col("n_words"),
         expr("hm_nano - (hp_nano + hq_nano) div 2").as("jsd_nano"))
       .orderBy("lang")

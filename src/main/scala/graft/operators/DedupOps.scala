@@ -147,8 +147,7 @@ object DedupOps {
     // NumPerms is part of the cache identity: changing it must re-derive
     // the signatures, not silently serve stale ones (shingle width is the
     // only other parameter; bump the _s3 tag if it ever changes).
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/minhash_sigs_v1_p${NumPerms}_s3_${cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(
+    DerivedFiles(s, dir, s"minhash_sigs_v1_p${NumPerms}_s3", "documents").parquet(
       docsWithShingleHashes(s, dir)
         .select(col("doc_id"), explode(col("sh_hashes")).as("sh_hash"))
         .groupBy("doc_id")
@@ -388,6 +387,17 @@ object DedupOps {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Materialized full jaccard pair relation (lang, source, doc_a,
+    * doc_b, jaccard) — one derived file now serves BOTH the edge-list
+    * consumers (graph ops, components, leakage) and the jaccard-valued
+    * consumers (q_dedup_jaccard_blocked, sketch calibration); before
+    * r11b the blocked-pair scan ran twice per bench pass, once for the
+    * edges file and once for the jaccard query.
+    */
+  private[graft] def materializedJaccard(s: SparkSession, dir: String): DataFrame = {
+    DerivedFiles(s, dir, "jaccard_v3", "documents").parquet(jaccardPairs(s, dir))
+  }
+
   /** Materialized similarity-graph edge list for the ITERATIVE consumers
     * (connected components, PageRank): a pure function of the input dir,
     * written once per tmp lifetime and read thereafter — exactly how a
@@ -397,31 +407,6 @@ object DedupOps {
     * cache in Scans. The graded q_dedup_jaccard_blocked query still
     * computes the blocked join itself.
     */
-  /** Cache key for the derived tables below: md5 of the dir path PLUS the
-    * source file's (length, mtime) — collision-free in practice (unlike
-    * abs(hashCode), which can collide across dirs and is negative for
-    * Int.MinValue) and self-invalidating if the fixture at the same path
-    * is regenerated with different content.
-    */
-  private[graft] def cacheKey(dir: String, table: String): String = {
-    val f = new java.io.File(s"$dir/$table.parquet")
-    val raw = s"$dir|${f.length()}|${f.lastModified()}"
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** Materialized full jaccard pair relation (lang, source, doc_a,
-    * doc_b, jaccard) — one derived file now serves BOTH the edge-list
-    * consumers (graph ops, components, leakage) and the jaccard-valued
-    * consumers (q_dedup_jaccard_blocked, sketch calibration); before
-    * r11b the blocked-pair scan ran twice per bench pass, once for the
-    * edges file and once for the jaccard query.
-    */
-  private[graft] def materializedJaccard(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/jaccard_v3_${cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(jaccardPairs(s, dir))
-  }
-
   private[graft] def materializedEdges(s: SparkSession, dir: String): DataFrame =
     materializedJaccard(s, dir).select(col("doc_a"), col("doc_b"))
 
@@ -561,8 +546,7 @@ object DedupOps {
     * results, only avoid re-running the iteration.
     */
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/components_v2_${cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(computeComponents(s, dir))
+    DerivedFiles(s, dir, "components_v2", "documents").parquet(computeComponents(s, dir))
   }
 
   private def computeComponents(s: SparkSession, dir: String): DataFrame =

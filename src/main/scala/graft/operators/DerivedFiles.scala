@@ -2,21 +2,28 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Build-once / read-many derived files under `$tmp/graft_io`.
+/** Build-once / read-many derived files: the one module that decides
+  * where a derived file lives, how it is keyed, how it is published and
+  * how a parquet one is read.
   *
   * Every derived relation in the repo (LSH signatures, the similarity
   * edge list, connected-component and LPA label assignments, the
-  * scan-family round-trip files) is a pure function of the input
-  * corpus, keyed by a content hash — so it is written once per tmp
-  * lifetime and read by every consumer, exactly how a production
-  * pipeline shares a materialization across downstream jobs.
+  * scan-family round-trip files) is a pure function of the tables it
+  * reads, so it is written once per tmp lifetime and read by every
+  * consumer, exactly how a production pipeline shares a materialization
+  * across downstream jobs. A build is named by a versioned name (bump
+  * the version when the build's logic changes) and the input tables it
+  * reads; `DerivedFiles(s, dir, name, inputs: _*)` places it at
+  * `$java.io.tmpdir/graft_io/<name>_<key>`, where the key covers every
+  * input, so rewriting any table the build reads re-derives it instead
+  * of serving a stale file.
   *
   * Until round 14 each site open-coded `if (!_SUCCESS) write.mode
   * ("overwrite")` onto the SHARED target path. That check-then-write
   * is racy two ways: two JVMs (or threads) that both miss `_SUCCESS`
   * write the same directory concurrently, and `overwrite` first
   * DELETES the directory — yanking files out from under any
-  * concurrent reader. This helper closes both races:
+  * concurrent reader. The publish step ([[ensure]]) closes both races:
   *
   *  - a per-path JVM lock serializes same-process builders;
   *  - the build lands in a UNIQUE scratch directory and is atomically
@@ -32,6 +39,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object DerivedFiles {
 
+  /** One derived file: where it lives and its content key. Nothing is
+    * built until [[files]] or [[parquet]] is called.
+    */
+  final class DerivedFile private[DerivedFiles] (
+      s: SparkSession, val path: String, val key: String) {
+
+    /** Publish the build once — `writeTo(scratchPath)` must write a
+      * directory dataset (any format) to the scratch path it is given,
+      * ending with a `_SUCCESS` marker (Spark's committer drops one) —
+      * and return the path, for a caller with its own reader.
+      */
+    def files(writeTo: String => Unit): String = { ensure(path)(writeTo); path }
+
+    /** Build `df` into parquet once, read it back. */
+    def parquet(build: => DataFrame): DataFrame =
+      s.read.parquet(files(scratch => build.write.parquet(scratch)))
+  }
+
+  /** The derived file `name` built from the `inputs` tables of `dir`. */
+  def apply(s: SparkSession, dir: String, name: String,
+            inputs: String*): DerivedFile = {
+    require(inputs.nonEmpty, s"derived file $name must name the tables it reads")
+    val k = key(dir, inputs)
+    new DerivedFile(s, s"$root/${name}_$k", k)
+  }
+
+  private def root: String =
+    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io"
+
+  /** md5 of each input's `dir|length|mtime`, one line per input in the
+    * order given (one input: the md5 of its line alone): collision-free
+    * in practice and self-invalidating when any input at the same path
+    * is regenerated.
+    */
+  private def key(dir: String, inputs: Seq[String]): String = {
+    val raw = inputs.map { t =>
+      val f = new java.io.File(s"$dir/$t.parquet")
+      s"$dir|${f.length()}|${f.lastModified()}"
+    }.mkString("\n")
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.digest(raw.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -45,12 +95,10 @@ private[graft] object DerivedFiles {
   }
 
   /** Ensure `path` holds a complete build, producing it via
-    * `writeTo(scratchPath)` if absent. The closure must write a
-    * directory dataset (any format) to the scratch path it is given;
-    * Spark's committer drops the `_SUCCESS` marker that doubles as
+    * `writeTo(scratchPath)` if absent. The `_SUCCESS` marker doubles as
     * our completeness flag.
     */
-  def ensure(path: String)(writeTo: String => Unit): Unit = {
+  private def ensure(path: String)(writeTo: String => Unit): Unit = {
     if (complete(path)) return
     val lock = locks.computeIfAbsent(path, _ => new Object)
     lock.synchronized {
@@ -81,7 +129,7 @@ private[graft] object DerivedFiles {
       // hold the per-path lock); an out-of-process reader must either
       // tolerate a transient missing path or gate its read on the same
       // ensure() protocol — which every repo consumer does via
-      // getOrBuildParquet.
+      // DerivedFiles(...).files / .parquet.
       if (target.exists()) {
         val aside = new java.io.File(scratch.getPath + ".aside")
         if (target.renameTo(aside)) {
@@ -104,12 +152,5 @@ private[graft] object DerivedFiles {
         deleteRecursively(scratch)
       }
     }
-  }
-
-  /** Parquet convenience: build `df` into `path` once, read it back. */
-  def getOrBuildParquet(s: SparkSession, path: String)(
-      build: => DataFrame): DataFrame = {
-    ensure(path)(scratch => build.write.parquet(scratch))
-    s.read.parquet(path)
   }
 }

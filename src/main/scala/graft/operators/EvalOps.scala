@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Det, Tables}
 
 /** Model/dataset evaluation metrics a training pipeline runs on every
   * candidate corpus or classifier head: exact ROC-AUC, calibration
@@ -27,11 +27,6 @@ import graft.Tables
   */
 object EvalOps {
 
-  /** ln(x) floored to integer nano-nats — the repo-wide cross-engine ln
-    * convention (TextOps.textTfidf, StatsOps.psiDrift use the same).
-    */
-  private def lnNano(c: Column): Column =
-    floor(log(c.cast("double")) * 1e9).cast("long")
 
   /** Exact ROC-AUC of a "long documents are English" classifier
     * (score = n_chars, label = lang='en') from the tie-aware pair
@@ -162,11 +157,11 @@ object EvalOps {
     val mi = joint.join(broadcast(margL), "lang").join(broadcast(margS), "source")
       .crossJoin(broadcast(tot))
       .select((col("n_ls").cast(DecimalType(38, 0)) *
-        (lnNano(col("n_ls")) + lnNano(col("n")) -
-          lnNano(col("n_l")) - lnNano(col("n_s")))).as("term"))
+        (Det.lnNano(col("n_ls")) + Det.lnNano(col("n")) -
+          Det.lnNano(col("n_l")) - Det.lnNano(col("n_s")))).as("term"))
       .agg(sum(col("term")).as("mi_num"))
-    val hl = margL.agg(sum(col("n_l").cast(DecimalType(38, 0)) * lnNano(col("n_l"))).as("sl"))
-    val hs = margS.agg(sum(col("n_s").cast(DecimalType(38, 0)) * lnNano(col("n_s"))).as("ss"))
+    val hl = margL.agg(sum(col("n_l").cast(DecimalType(38, 0)) * Det.lnNano(col("n_l"))).as("sl"))
+    val hs = margS.agg(sum(col("n_s").cast(DecimalType(38, 0)) * Det.lnNano(col("n_s"))).as("ss"))
     tot.crossJoin(broadcast(mi)).crossJoin(broadcast(hl)).crossJoin(broadcast(hs))
       .select(col("n").as("n_docs"),
         expr("(cast(n as decimal(38,0)) * cast(floor(ln(cast(n as double)) * 1e9) as long) - sl)" +
@@ -918,8 +913,8 @@ object EvalOps {
         least(lit(999999L), greatest(lit(1L),
           expr("(n_chars * 1000000) div 600"))).as("p_ppm"))
       .select(col("y"),
-        (lnNano(col("p_ppm")) - lnNano(lit(1000000L))).as("lnp"),
-        (lnNano(lit(1000000L) - col("p_ppm")) - lnNano(lit(1000000L))).as("lnq"))
+        (Det.lnNano(col("p_ppm")) - Det.lnNano(lit(1000000L))).as("lnp"),
+        (Det.lnNano(lit(1000000L) - col("p_ppm")) - Det.lnNano(lit(1000000L))).as("lnq"))
       .agg(count(lit(1)).as("n_docs"), sum(col("y")).as("n_pos"),
         sum((col("y") * col("lnp") + (lit(1L) - col("y")) * col("lnq"))
           .cast(DecimalType(38, 0))).as("ll"))

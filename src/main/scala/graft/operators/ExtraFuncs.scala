@@ -221,9 +221,7 @@ object ExtraFuncs {
     * consumers' shared head was ~80% of each query's time.
     */
   private[graft] def materializedBasketPairs(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/" +
-      s"basket_pairs_v1_${DedupOps.cacheKey(dir, "lineitem")}"
-    DerivedFiles.getOrBuildParquet(s, path)(basketPairCounts(s, dir))
+    DerivedFiles(s, dir, "basket_pairs_v1", "lineitem").parquet(basketPairCounts(s, dir))
   }
 
   /** Null-safe equi join (`<=>` / IS NOT DISTINCT FROM): the year-over-

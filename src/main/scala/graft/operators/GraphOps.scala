@@ -41,9 +41,7 @@ object GraphOps {
     * OOMing on a forced hint).
     */
   private[graft] def materializedBipartite(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/bipartite_v1_${DedupOps.cacheKey(dir, "lineitem")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "bipartite_v1", "lineitem", "orders").parquet {
       Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey"))
         .join(Tables.orders(s, dir)
@@ -54,9 +52,7 @@ object GraphOps {
   }
 
   private[graft] def materializedDegrees(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/degrees_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "degrees_v1", "documents").parquet {
       val pairs = DedupOps.materializedEdges(s, dir)
       pairs.select(col("doc_a").as("node"))
         .unionAll(pairs.select(col("doc_b").as("node")))
@@ -76,9 +72,7 @@ object GraphOps {
     * because every wedge-family job starts from it. |E| rows.
     */
   private[graft] def materializedOriented(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/oriented_edges_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "oriented_edges_v1", "documents").parquet {
       orientPlan(DedupOps.materializedEdges(s, dir), materializedDegrees(s, dir))
     }
   }
@@ -99,9 +93,7 @@ object GraphOps {
     */
   private[graft] def materializedWedgePairs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/wedge_pairs_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "wedge_pairs_v1", "documents").parquet {
       val e = DedupOps.materializedEdges(s, dir)
       val deg = materializedDegrees(s, dir)
       // deg >= 2 keeps the ANSI division away from ln(1) = 0; wedge
@@ -129,9 +121,7 @@ object GraphOps {
     * read this table instead of re-hashing the adjacency sets.
     */
   private[graft] def materializedNeighborSigs(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/neighbor_sigs_v1_p64_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "neighbor_sigs_v1_p64", "documents").parquet {
       val e = DedupOps.materializedEdges(s, dir)
       e.select(col("doc_a").as("node"), col("doc_b").as("nbr"))
         .unionByName(e.select(col("doc_b").as("node"), col("doc_a").as("nbr")))
@@ -621,9 +611,7 @@ object GraphOps {
     * materialization is tiny relative to the edge file it derives from.
     */
   private[graft] def lpaLabels(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/lpa_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(lpaLabelsUncached(s, dir))
+    DerivedFiles(s, dir, "lpa_v1", "documents").parquet(lpaLabelsUncached(s, dir))
   }
 
   private def lpaLabelsUncached(s: SparkSession, dir: String): DataFrame = {
@@ -782,9 +770,7 @@ object GraphOps {
     */
   private[graft] def materializedLandmarkDists(
       s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/landmark_dists_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(landmarkDistances(s, dir))
+    DerivedFiles(s, dir, "landmark_dists_v1", "documents").parquet(landmarkDistances(s, dir))
   }
 
   /** Shared (lm, node, hop) relation for #309/#330: 6-round multi-source
@@ -969,9 +955,7 @@ object GraphOps {
     */
   private[graft] def materializedStructEquivPairs(
       s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/struct_equiv_pairs_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(structEquivPlan(s, dir))
+    DerivedFiles(s, dir, "struct_equiv_pairs_v1", "documents").parquet(structEquivPlan(s, dir))
   }
 
   /** From-scratch struct-equiv kernel (unordered): LSH over signature
@@ -1340,9 +1324,7 @@ object GraphOps {
     */
   private[graft] def materializedTriangleSupport(
       s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/triangle_support_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(
+    DerivedFiles(s, dir, "triangle_support_v1", "documents").parquet(
       triangleSupportOf(materializedOriented(s, dir)))
   }
 

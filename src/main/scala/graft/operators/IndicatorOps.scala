@@ -243,8 +243,8 @@ object IndicatorOps {
     * corner of the indicator family (#327 ATR measures the range, GK
     * turns it into a variance estimate).
     *
-    * Exactness: values stage to integer micro; ln(H/L) = lnNano(H) −
-    * lnNano(L) (the scale cancels, so both terms are the house
+    * Exactness: values stage to integer micro; ln(H/L) = Det.lnNano(H) −
+    * Det.lnNano(L) (the scale cancels, so both terms are the house
     * floored-nano ln of exact integers, and the DIFFERENCE is exact);
     * the per-day term d1²·5e8 − d2²·(2ln2−1 floored to nano) is pure
     * DECIMAL(38,0) multiplication — ZERO divisions until the final
@@ -262,8 +262,6 @@ object IndicatorOps {
       .orderBy(col("ts").asc, col("event_id").asc)
     val wDesc = Window.partitionBy("event_type", "day")
       .orderBy(col("ts").desc, col("event_id").desc)
-    def lnN(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     base
       .withColumn("rn_a", row_number().over(wAsc))
       .withColumn("rn_d", row_number().over(wDesc))
@@ -273,8 +271,8 @@ object IndicatorOps {
         max(when(col("rn_d") === 1, col("m"))).as("c"))
       .filter(col("l") > 0)
       .select(col("event_type"),
-        (lnN(col("h")) - lnN(col("l"))).cast(dec).as("d1"),
-        (lnN(col("c")) - lnN(col("o"))).cast(dec).as("d2"))
+        (Det.lnNano(col("h")) - Det.lnNano(col("l"))).cast(dec).as("d1"),
+        (Det.lnNano(col("c")) - Det.lnNano(col("o"))).cast(dec).as("d2"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         sum(col("d1") * col("d1") * 500000000L -
@@ -471,8 +469,8 @@ object IndicatorOps {
     * open/close drift term; P-vs-GK disagreement flags days where the
     * close jumped the range).
     *
-    * Exactness: the #459 staging verbatim — ln(H/L) = lnNano(H) −
-    * lnNano(L) (exact difference of house floored-nano lns), per-day
+    * Exactness: the #459 staging verbatim — ln(H/L) = Det.lnNano(H) −
+    * Det.lnNano(L) (exact difference of house floored-nano lns), per-day
     * squares pure DECIMAL(38,0); the constant 4·ln 2 is floored to nano
     * (2772588722, pinned on both engines) and the readout is ONE
     * truncating division (Σd1²·1000) div (n·4ln2_nano) = variance in
@@ -484,13 +482,11 @@ object IndicatorOps {
     val base = Tables.events(s, dir)
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         floor(col("value") * 1e6).cast("long").as("m"))
-    def lnN(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     base
       .groupBy("event_type", "day")
       .agg(max(col("m")).as("h"), min(col("m")).as("l"))
       .filter(col("l") > 0)
-      .select(col("event_type"), (lnN(col("h")) - lnN(col("l"))).cast(dec).as("d1"))
+      .select(col("event_type"), (Det.lnNano(col("h")) - Det.lnNano(col("l"))).cast(dec).as("d1"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         sum(col("d1") * col("d1")).as("ts2"))
@@ -525,8 +521,6 @@ object IndicatorOps {
       .orderBy(col("ts").asc, col("event_id").asc)
     val wDesc = Window.partitionBy("event_type", "day")
       .orderBy(col("ts").desc, col("event_id").desc)
-    def lnN(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     base
       .withColumn("rn_a", row_number().over(wAsc))
       .withColumn("rn_d", row_number().over(wDesc))
@@ -536,10 +530,10 @@ object IndicatorOps {
         max(when(col("rn_d") === 1, col("m"))).as("c"))
       .filter(col("l") > 0)
       .select(col("event_type"),
-        (lnN(col("h")) - lnN(col("c"))).cast(dec).as("u1"),
-        (lnN(col("h")) - lnN(col("o"))).cast(dec).as("u2"),
-        (lnN(col("l")) - lnN(col("c"))).cast(dec).as("v1"),
-        (lnN(col("l")) - lnN(col("o"))).cast(dec).as("v2"))
+        (Det.lnNano(col("h")) - Det.lnNano(col("c"))).cast(dec).as("u1"),
+        (Det.lnNano(col("h")) - Det.lnNano(col("o"))).cast(dec).as("u2"),
+        (Det.lnNano(col("l")) - Det.lnNano(col("c"))).cast(dec).as("v1"),
+        (Det.lnNano(col("l")) - Det.lnNano(col("o"))).cast(dec).as("v2"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_days"),
         sum(col("u1") * col("u2") + col("v1") * col("v2")).as("ts2"))
@@ -571,8 +565,6 @@ object IndicatorOps {
     */
   def winAmihud(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("day")
-    def lnN(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     Tables.events(s, dir)
       .select(col("event_type"), date_trunc("day", col("ts")).as("day"),
         floor(col("value") * 1e6).cast("long").as("m"))

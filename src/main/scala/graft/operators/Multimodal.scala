@@ -298,9 +298,7 @@ object Multimodal {
     * recomputes the grid lumas from the pixel formula end-to-end.
     */
   private[graft] def materializedPhashes(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/phashes_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path)(phashes(s, dir))
+    DerivedFiles(s, dir, "phashes_v1", "documents").parquet(phashes(s, dir))
   }
 
   def multimodalPhash(s: SparkSession, dir: String): DataFrame =
@@ -367,9 +365,7 @@ object Multimodal {
     * ONCE per tmp lifetime and every consumer reads the parquet.
     */
   private[graft] def materializedPhashClusters(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/phash_clusters_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.getOrBuildParquet(s, path) {
+    DerivedFiles(s, dir, "phash_clusters_v1", "documents").parquet {
       DedupOps.minLabelComponents(
           multimodalPhashNear(s, dir).select("doc_a", "doc_b"))
         .select(col("doc_id"), col("component").as("cluster"))

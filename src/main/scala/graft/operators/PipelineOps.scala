@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Det, Tables}
 
 /** Training-data pipeline governance operators (round 3): benchmark
   * contamination detection, deterministic split assignment, within-doc
@@ -709,13 +709,11 @@ object PipelineOps {
     val n = hist.map(_._2).sum
     val w = Window.partitionBy("pid").orderBy("u")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def lnN(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     grouped
       .withColumn("ck", element_at(typedLit(off), col("pid")) + sum(col("c")).over(w))
-      .withColumn("la", lnN(lit(2L) * col("u") + 1L) - lnN(lit(2L * M)))
+      .withColumn("la", Det.lnNano(lit(2L) * col("u") + 1L) - Det.lnNano(lit(2L * M)))
       .withColumn("lb",
-        lnN(lit(2L) * (lit(M) - col("u")) - 1L) - lnN(lit(2L * M)))
+        Det.lnNano(lit(2L) * (lit(M) - col("u")) - 1L) - Det.lnNano(lit(2L * M)))
       .select(
         ((col("ck") * col("ck") -
           (col("ck") - col("c")) * (col("ck") - col("c"))).cast(dec) * col("la") +

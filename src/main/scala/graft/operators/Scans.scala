@@ -12,22 +12,12 @@ import graft.Tables
   *
   * CSV/JSONL queries round-trip a projection of lineitem through a tmp file
   * and are oracle-checked against the original parquet — i.e. the oracle
-  * verifies the text formats preserve values exactly.
+  * verifies the text formats preserve values exactly. Every file and
+  * layout these queries read back is a [[DerivedFiles]] build: a pure
+  * function of the tables it reads, written once per tmp lifetime, so
+  * repeated Verify/Bench runs pay only the read side.
   */
 object Scans {
-
-  private def ioDir(kind: String, dir: String): String =
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/${kind}_v3_${DedupOps.cacheKey(dir, "lineitem")}"
-
-  /** The round-trip files are a pure function of (sfDir, projection), so
-    * the write happens once per tmp lifetime — repeated Verify/Bench runs
-    * only pay the read side. Delegates to [[DerivedFiles.ensure]] for the
-    * scratch-dir + atomic-rename publish (r14: the bare check-then-write
-    * raced concurrent builders/readers); the closure receives the scratch
-    * path it must write to.
-    */
-  private def ensureWritten(path: String)(write: String => Unit): Unit =
-    DerivedFiles.ensure(path)(write)
 
   /** Columns chosen to round-trip text formats losslessly (ints, strings,
     * X.0 doubles, ms timestamps).
@@ -46,28 +36,22 @@ object Scans {
         col("l_extendedprice"), col("l_returnflag"), col("l_shipdate"))
       .orderBy("l_orderkey", "l_linenumber")
 
-  private def buildCsv(s: SparkSession, dir: String): String = {
-    val path = ioDir("csv", dir)
-    ensureWritten(path) { p =>
+  private def buildCsv(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "csv_v3", "lineitem").files { p =>
       Tables.lineitem(s, dir).select(rtCols.map(col): _*)
         .write.option("header", "true").csv(p)
     }
-    path
-  }
 
   def scanCsv(s: SparkSession, dir: String): DataFrame =
     s.read.schema(rtSchema).option("header", "true").csv(buildCsv(s, dir))
       .orderBy("l_orderkey", "l_linenumber")
 
-  private def buildJsonl(s: SparkSession, dir: String): String = {
-    val path = ioDir("jsonl", dir)
-    ensureWritten(path) { p =>
+  private def buildJsonl(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "jsonl_v3", "lineitem").files { p =>
       Tables.lineitem(s, dir)
         .select((rtCols :+ "l_shipdate").map(col): _*)
         .write.json(p)
     }
-    path
-  }
 
   def scanJsonl(s: SparkSession, dir: String): DataFrame =
     s.read.schema(rtSchema.add(StructField("l_shipdate", TimestampType)))
@@ -78,15 +62,12 @@ object Scans {
     * Binary format, so unlike CSV/JSONL the full-fidelity columns
     * (double prices, timestamps) ride along untruncated.
     */
-  private def buildOrc(s: SparkSession, dir: String): String = {
-    val path = ioDir("orc", dir)
-    ensureWritten(path) { p =>
+  private def buildOrc(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "orc_v3", "lineitem").files { p =>
       Tables.lineitem(s, dir)
         .select((rtCols ++ Seq("l_extendedprice", "l_shipdate")).map(col): _*)
         .write.orc(p)
     }
-    path
-  }
 
   def scanOrc(s: SparkSession, dir: String): DataFrame =
     s.read.orc(buildOrc(s, dir)).orderBy("l_orderkey", "l_linenumber")
@@ -98,15 +79,12 @@ object Scans {
     * deterministic 1-in-10 orderkey slice — format fidelity is proven
     * per-row, no need to pay the verbosity on the full table.
     */
-  private def buildXml(s: SparkSession, dir: String): String = {
-    val path = ioDir("xml", dir)
-    ensureWritten(path) { p =>
+  private def buildXml(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "xml_v3", "lineitem").files { p =>
       Tables.lineitem(s, dir).filter(col("l_orderkey") % 10 === 0)
         .select(rtCols.map(col): _*)
         .write.option("rowTag", "row").format("xml").save(p)
     }
-    path
-  }
 
   def scanXml(s: SparkSession, dir: String): DataFrame =
     s.read.schema(rtSchema).option("rowTag", "row").format("xml")
@@ -125,15 +103,12 @@ object Scans {
     * the partition filters). Oracle: same join over the unpartitioned
     * originals.
     */
-  private def buildPartitioned(s: SparkSession, dir: String): String = {
-    val path = ioDir("partyear", dir)
-    ensureWritten(path) { p =>
+  private def buildPartitioned(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "partyear_v3", "lineitem").files { p =>
       Tables.lineitem(s, dir)
         .withColumn("ship_year", year(col("l_shipdate")))
         .write.partitionBy("ship_year").parquet(p)
     }
-    path
-  }
 
   def scanPartitioned(s: SparkSession, dir: String): DataFrame = {
     val fact = s.read.parquet(buildPartitioned(s, dir))
@@ -162,9 +137,10 @@ object Scans {
     * are encoded in file NAMES, not parquet footers), which is in-memory
     * and dies with the JVM — so every JVM attaches the shared files with
     * a CREATE TABLE … CLUSTERED BY DDL; only the very first process pays
-    * the write. r15 (ADVICE): the DATA write goes through
-    * [[DerivedFiles.ensure]] like every other derived file — Spark only
-    * bucket-writes via saveAsTable, so the build lands as a throwaway
+    * the write; the catalog name carries the source table's content key,
+    * so a rewritten table attaches its new layout. r15 (ADVICE): the DATA
+    * write goes through [[DerivedFiles]] like every other derived file —
+    * Spark only bucket-writes via saveAsTable, so the build lands as a throwaway
     * EXTERNAL table whose location IS the scratch directory (dropping it
     * keeps the files), and the scratch is atomically renamed into place.
     * Bucket ids live in file names, so the rename preserves the layout
@@ -174,36 +150,30 @@ object Scans {
     * the planner picks anyway).
     */
   private def buildBucketed(s: SparkSession, dir: String): (String, String) = {
-    val key = DedupOps.cacheKey(dir, "lineitem").take(16)
-    def ensure(name: String, path: String, ddlCols: String, bucketCol: String)
-              (writeVia: (String, String) => Unit): Unit =
+    // one bucketed layout of `table`, attached as catalog table
+    // graft_b_<table>_<key prefix>; returns the table name
+    def attach(table: String, ddlCols: String, cols: String*): String = {
+      val file = DerivedFiles(s, dir, s"bkt_${table}_v3", table)
+      val name = s"graft_b_${table}_${file.key.take(16)}"
       if (!s.catalog.tableExists(name)) {
-        DerivedFiles.ensure(path) { scratch =>
+        val path = file.files { scratch =>
           val tmp = name + "_build_" +
             java.lang.Long.toHexString(System.nanoTime())
-          writeVia(tmp, scratch)
+          Tables.t(s, dir, table).select(cols.map(col): _*)
+            .write.bucketBy(8, cols.head).sortBy(cols.head)
+            .option("path", scratch).saveAsTable(tmp)
           s.sql(s"DROP TABLE IF EXISTS $tmp") // external: files stay
         }
         s.sql(s"""CREATE TABLE IF NOT EXISTS $name ($ddlCols) USING PARQUET
-                 |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO 8 BUCKETS
+                 |CLUSTERED BY (${cols.head}) SORTED BY (${cols.head}) INTO 8 BUCKETS
                  |LOCATION '$path'""".stripMargin)
       }
-    val liName = s"graft_b_lineitem_$key"
-    val liPath = ioDir("bkt_lineitem", dir)
-    ensure(liName, liPath, "l_orderkey BIGINT, l_quantity DOUBLE, l_extendedprice DOUBLE",
-        "l_orderkey") { (tmp, scratch) =>
-      Tables.lineitem(s, dir).select("l_orderkey", "l_quantity", "l_extendedprice")
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", scratch).saveAsTable(tmp)
+      name
     }
-    val ordName = s"graft_b_orders_$key"
-    val ordPath = ioDir("bkt_orders", dir)
-    ensure(ordName, ordPath, "o_orderkey BIGINT, o_orderstatus STRING", "o_orderkey") { (tmp, scratch) =>
-      Tables.orders(s, dir).select("o_orderkey", "o_orderstatus")
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", scratch).saveAsTable(tmp)
-    }
-    (liName, ordName)
+    (attach("lineitem", "l_orderkey BIGINT, l_quantity DOUBLE, l_extendedprice DOUBLE",
+        "l_orderkey", "l_quantity", "l_extendedprice"),
+      attach("orders", "o_orderkey BIGINT, o_orderstatus STRING",
+        "o_orderkey", "o_orderstatus"))
   }
 
   def scanBucketed(s: SparkSession, dir: String): DataFrame = {
@@ -226,17 +196,14 @@ object Scans {
     * pushdown/pruning contract is asserted in SourceV2Spec; THIS query
     * proves end-to-end value correctness against the parquet original.
     */
-  private def buildKvlog(s: SparkSession, dir: String): String = {
-    val path = ioDir("kvlog", dir)
-    ensureWritten(path) { p =>
+  private def buildKvlog(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "kvlog_v3", "documents").files { p =>
       Tables.documents(s, dir)
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("source"), col("n_chars"))
           .as("value"))
         .repartition(4, col("value"))
         .write.text(p)
     }
-    path
-  }
 
   def scanDsv2(s: SparkSession, dir: String): DataFrame = {
     s.read.format("graft.sources.KvLogSource").load(buildKvlog(s, dir))
@@ -290,9 +257,8 @@ object Scans {
     * parquet read. Fixture generations are written once per tmp
     * lifetime (derived-file pattern).
     */
-  private[graft] def buildEvolved(s: SparkSession, dir: String): String = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/evolved_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.ensure(path) { p =>
+  private[graft] def buildEvolved(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "evolved_v1", "documents").files { p =>
       Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .write.parquet(s"$p/a")
@@ -303,8 +269,6 @@ object Scans {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(p, "_SUCCESS"), Array.emptyByteArray)
     }
-    path
-  }
 
   def scanEvolved(s: SparkSession, dir: String): DataFrame = {
     val path = buildEvolved(s, dir)
@@ -316,9 +280,8 @@ object Scans {
       .orderBy("lang")
   }
 
-  private def buildBinary(s: SparkSession, dir: String): String = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/bin_v1_${DedupOps.cacheKey(dir, "documents")}"
-    DerivedFiles.ensure(path) { p =>
+  private def buildBinary(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "bin_v1", "documents").files { p =>
       new java.io.File(p).mkdirs()
       Tables.documents(s, dir)
         .select(col("lang"), col("doc_id"), col("text"))
@@ -343,8 +306,6 @@ object Scans {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(p, "_SUCCESS"), Array.emptyByteArray)
     }
-    path
-  }
 
   def scanBinary(s: SparkSession, dir: String): DataFrame =
     s.read.format("binaryFile").option("pathGlobFilter", "*.bin")

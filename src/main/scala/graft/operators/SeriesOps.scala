@@ -324,9 +324,7 @@ object SeriesOps {
     */
   private[graft] def materializedPowerSpectrum(
       s: SparkSession, dir: String): DataFrame = {
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/power_spectrum_v1_${DedupOps.cacheKey(dir, "orders")}"
-    DerivedFiles.getOrBuildParquet(s, path)(
+    DerivedFiles(s, dir, "power_spectrum_v1", "orders").parquet(
       powerSpectrumPlanOf(Tables.orders(s, dir)
         .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
         .agg((sum(Det.money(col("o_totalprice"))) * 100).cast("long").as("v"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.Tables
+import graft.{Det, Tables}
 
 /** North-star text analysis over the documents corpus: tokenization
   * (generator), corpus statistics, term frequencies, a data-driven
@@ -729,8 +729,6 @@ object TextOps {
     * rollup is |L|² rows.
     */
   def mlNaiveBayes(s: SparkSession, dir: String): DataFrame = {
-    def lnNano(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     val docs = Tables.documents(s, dir)
     // r21: tokenize once (localCheckpoint — the un-checkpointed plan
     // re-ran scan+explode for every consumer arm); V and the prior's
@@ -761,14 +759,14 @@ object TextOps {
     val priors = nlang
       .crossJoin(broadcast(nlang.agg(sum(col("nd")).as("n_docs"))))
       .select(col("plang"),
-        (lnNano(col("nd")) - lnNano(col("n_docs"))).as("prior"))
+        (Det.lnNano(col("nd")) - Det.lnNano(col("n_docs"))).as("prior"))
     val scored = tf
       .crossJoin(broadcast(nl))
       .join(broadcast(counts), Seq("plang", "token"), "left_outer")
       .crossJoin(broadcast(v))
       .select(col("doc_id"), col("lang"), col("plang"),
-        (col("tf") * (lnNano(coalesce(col("c"), lit(0L)) + 1) -
-          lnNano(col("n_l") + col("v")))).as("term"))
+        (col("tf") * (Det.lnNano(coalesce(col("c"), lit(0L)) + 1) -
+          Det.lnNano(col("n_l") + col("v")))).as("term"))
       .groupBy("doc_id", "lang", "plang")
       .agg(sum(col("term")).as("ll"))
       .join(broadcast(priors), Seq("plang"))
@@ -886,8 +884,6 @@ object TextOps {
     * DOC relation (id-keyed, the standard rank shape).
     */
   def textHeaps(s: SparkSession, dir: String): DataFrame = {
-    def lnNano(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9).cast("long")
     val toks = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("token"))
@@ -909,8 +905,8 @@ object TextOps {
       .withColumn("v_new", coalesce(col("v_new"), lit(0L)))
       .withColumn("cum_n", sum(col("n_toks")).over(wCum))
       .withColumn("cum_v", sum(col("v_new")).over(wCum))
-      .select(col("lang"), lnNano(col("cum_n")).as("x"),
-        lnNano(col("cum_v")).as("y"))
+      .select(col("lang"), Det.lnNano(col("cum_n")).as("x"),
+        Det.lnNano(col("cum_v")).as("y"))
     pts.groupBy("lang")
       .agg(count(lit(1)).as("n_pts"),
         sum(col("x").cast(DecimalType(38, 0))).as("sx"),

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,12 +39,19 @@ class BucketingSpec extends AnyFunSuite with SparkFixture {
       .join(spark.table("b_orders").hint("merge"), Seq("o_orderkey"))
       .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
 
-    joined.collect()
-    val planStr = joined.queryExecution.executedPlan.toString
+    import PlanWalk._
+    val plan = executed(joined)
     // the join itself must not shuffle either side (only the final agg may)
-    val joinSubtree = planStr.split("HashAggregate").last
-    assert(!joinSubtree.contains("Exchange hashpartitioning(o_orderkey"),
-      s"bucketed join still shuffles on the key:\n$planStr")
+    val smjs = collectAll(plan).collect { case j: SortMergeJoinExec => j }
+    assert(smjs.nonEmpty, s"the merge hint must plan a sort-merge join:\n$plan")
+    val keyShuffles = smjs.flatMap(collectAll).collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.exists(_.references.exists(_.name == "o_orderkey"))
+        case _ => false
+      }) => e
+    }
+    assert(keyShuffles.isEmpty, s"bucketed join still shuffles on the key:\n$plan")
 
     // results equal the unbucketed join
     val expected = Tables.lineitem(spark, sfDir)

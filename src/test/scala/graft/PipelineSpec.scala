@@ -72,8 +72,10 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("contamination plan broadcasts the benchmark gram set") {
-    val plan = PipelineOps.contamination(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
+    val plan = PlanWalk.executed(PipelineOps.contamination(spark, sfDir))
+    assert(PlanWalk.collectAll(plan).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+      s"expected broadcast join:\n$plan")
   }
 
   test("split assignment is exhaustive, deterministic, and ~80/10/10") {

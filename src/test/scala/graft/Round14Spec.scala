@@ -125,8 +125,9 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
 
   test("DerivedFiles: concurrent builders publish exactly one complete copy") {
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    val path = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}" +
-      s"/graft_io/test_concurrent_${System.nanoTime()}"
+    val file = operators.DerivedFiles(spark, sfDir,
+      s"test_concurrent_${System.nanoTime()}", "documents")
+    val path = file.path
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val gate = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(4)
@@ -134,7 +135,7 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
       pool.submit(new Runnable {
         def run(): Unit = {
           gate.await()
-          operators.DerivedFiles.ensure(path) { scratch =>
+          file.files { scratch =>
             builds.incrementAndGet()
             import spark.implicits._
             Seq(1L, 2L, 3L).toDF("v").write.parquet(scratch)

@@ -157,7 +157,7 @@ class Round19Spec extends AnyFunSuite with SparkFixture {
     // The derived tier (SCALE.md) keys every materialization on a
     // content hash of its source table (dir|length|mtime). This proves
     // the REBUILD path end-to-end: an identical corpus under a bumped
-    // key (fresh dir ⇒ fresh cacheKey for documents) must (1) start
+    // key (fresh dir ⇒ fresh key for documents) must (1) start
     // unbuilt, (2) rebuild the full sigs → jaccard → components chain
     // from scratch, (3) produce value-identical labels, and (4) reuse
     // the published build on the next read instead of rebuilding.
@@ -165,11 +165,11 @@ class Round19Spec extends AnyFunSuite with SparkFixture {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
       java.nio.file.Paths.get(s"$tmp/documents.parquet"))
-    val (keyA, keyB) = (operators.DedupOps.cacheKey(sfDir, "documents"),
-      operators.DedupOps.cacheKey(tmp, "documents"))
+    def components(dir: String) =
+      operators.DerivedFiles(spark, dir, "components_v2", "documents")
+    val (keyA, keyB) = (components(sfDir).key, components(tmp).key)
     assert(keyA !== keyB, "a corpus-version bump must change the key")
-    val tmpRoot = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    val bumped = new java.io.File(s"$tmpRoot/graft_io/components_v2_$keyB")
+    val bumped = new java.io.File(components(tmp).path)
     assert(!bumped.exists(), "a fresh corpus version must start unbuilt")
     def labels(dir: String) =
       operators.DedupOps.componentLabels(spark, dir).collect()
@@ -182,6 +182,45 @@ class Round19Spec extends AnyFunSuite with SparkFixture {
     operators.DedupOps.componentLabels(spark, tmp).count()
     assert(bumped.lastModified() === published,
       "a second read must reuse the published build, not rebuild")
+  }
+
+  /** name → content key of every derived file `df` reads */
+  private def derivedKeys(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
+    val Derived = """.*/graft_io/(\w+)_([0-9a-f]{32})(?:/.*)?""".r
+    val v2Paths = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.options.get("path")
+    }
+    (df.inputFiles.toSeq ++ v2Paths).collect { case Derived(n, k) => n -> k }.toMap
+  }
+
+  test("a derived file's key covers every table its build reads, and only those") {
+    // bipartite_v1 joins lineitem with orders, bkt_orders buckets orders
+    // and kvlog_v3 exports documents: touching one of those tables must
+    // re-key exactly the builds that read it
+    val tmp = tmpFixture("derived-inputs")
+    for (t <- Seq("lineitem", "orders", "documents", "customer"))
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+        java.nio.file.Paths.get(s"$tmp/$t.parquet"))
+    def keys(): Map[String, String] = Seq(
+        operators.GraphOps.materializedBipartite(spark, tmp),
+        operators.Scans.scanBucketed(spark, tmp),
+        operators.Scans.scanDsv2(spark, tmp)).map(derivedKeys).reduce(_ ++ _)
+    def touch(table: String): Map[String, String] = {
+      val f = new java.io.File(s"$tmp/$table.parquet")
+      assert(f.setLastModified(f.lastModified() + 60000L))
+      keys()
+    }
+    def rekeyed(a: Map[String, String], b: Map[String, String]) =
+      a.keySet.filter(n => a(n) != b(n))
+    val k0 = keys()
+    assert(k0.keySet === Set("bipartite_v1", "bkt_lineitem_v3", "bkt_orders_v3", "kvlog_v3"))
+    val k1 = touch("orders")
+    assert(rekeyed(k0, k1) === Set("bipartite_v1", "bkt_orders_v3"))
+    val k2 = touch("documents")
+    assert(rekeyed(k1, k2) === Set("kvlog_v3"))
+    val k3 = touch("customer")
+    assert(rekeyed(k2, k3) === Set.empty[String])
   }
 
   test("embedTriplets output cardinality matches the fixed-64 draw") {

@@ -15,17 +15,22 @@ class SourceV2Spec extends AnyFunSuite with SparkFixture {
   private lazy val logPath: String = {
     // trigger the derived-cache write through the graded query once
     operators.Scans.scanDsv2(spark, sfDir).collect()
-    s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_io/kvlog_v3_${
-      operators.DedupOps.cacheKey(sfDir, "lineitem")}"
+    operators.DerivedFiles(spark, sfDir, "kvlog_v3", "documents").path
   }
 
   private def kvlog = spark.read.format("graft.sources.KvLogSource").load(logPath)
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec = {
-    val scans = df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
-    assert(scans.nonEmpty, df.queryExecution.executedPlan.toString)
+    val plan = PlanWalk.executed(df)
+    val scans = PlanWalk.collectAll(plan).collect { case b: BatchScanExec => b }
+    assert(scans.nonEmpty, plan.toString)
     scans.head
   }
+
+  private def filtersOf(df: org.apache.spark.sql.DataFrame) =
+    PlanWalk.collectAll(PlanWalk.executed(df)).collect {
+      case f: org.apache.spark.sql.execution.FilterExec => f
+    }
 
   test("values round-trip exactly against the parquet original") {
     val got = kvlog.select("doc_id", "lang", "source", "n_chars").collect()
@@ -43,9 +48,7 @@ class SourceV2Spec extends AnyFunSuite with SparkFixture {
     assert(desc.contains("EqualTo(lang,en)"), desc)
     assert(desc.contains("GreaterThanOrEqual(n_chars,500)"), desc)
     // fully pushed → no FilterExec survives above the scan
-    val filters = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FilterExec => f
-    }
+    val filters = filtersOf(df)
     assert(filters.isEmpty, s"Filter not eliminated:\n${df.queryExecution.executedPlan}")
     // and the pushed result is CORRECT vs evaluating the predicate in Spark
     val expected = kvlog.collect()
@@ -55,9 +58,7 @@ class SourceV2Spec extends AnyFunSuite with SparkFixture {
 
   test("unsupported predicates are handed back to Spark, not silently dropped") {
     val df = kvlog.filter(col("lang") =!= "en") // Not(EqualTo) — not evaluable at the leaf
-    val filters = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FilterExec => f
-    }
+    val filters = filtersOf(df)
     assert(filters.nonEmpty, "rejected filter must stay as a Spark Filter node")
     val expected = kvlog.collect().count(_.getString(1) != "en")
     assert(df.count() === expected)
