@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   *     tmp pays them, but WHICH query pays drifts with the alphabetical
   *     tree;
   *  2. [[sessionTier]]: the in-SESSION memo ([[operators.SessionMemo]]:
-  *     the two-phase rank kernels, the conformal residuals with their
+  *     the [[operators.GlobalPrefix]] ranks, the conformal residuals with their
   *     per-order features, the Markov π) — rebuilt once per session by
   *     the first consumer.
   *
@@ -69,9 +69,11 @@ object Prewarm {
   }
 
   /** The in-SESSION tier: one entry per distinct [[operators.SessionMemo]]
-    * build (11 rank kernels serve 14 graded consumers: orders:totalprice
-    * → q_ntile + q_histogram_equidepth, orders:cust-cents → q_gini +
-    * q_lorenz_deciles, docs:doc_id → q_sample_index + q_negative_pairs;
+    * build (11 [[operators.GlobalPrefix.memoized]] prefixes serve 15 graded
+    * consumers: orders:totalprice → q_ntile + q_histogram_equidepth,
+    * orders:cust-cents → q_gini + q_lorenz_deciles, docs:doc_id →
+    * q_sample_index + q_negative_pairs, fsweep → q_quality_filter_sweep +
+    * q_rank_exposure;
     * `rank:conformal_resid` also builds the residual and per-order
     * relations). Builders are eager — a memo miss localCheckpoints or
     * collects — so invoking the builder IS the build. The `rank:`/`memo:`

@@ -73,6 +73,17 @@ object SparkEntry {
       })
     }
 
+  /** Exits 1 naming each name in a dev subset filter that is not a
+    * registered query, so a mistyped name cannot pass silently.
+    */
+  def requireKnown(only: Set[String], tool: String): Unit = {
+    val unknown = (only -- queries.keySet).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$tool] unknown queries: ${unknown.mkString(" ")}")
+      sys.exit(1)
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

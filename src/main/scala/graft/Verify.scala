@@ -7,6 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // dev-only subset filter; driver passes 2 args
+    SparkEntry.requireKnown(only, "verify")
     val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (SURVEY.md §4.3): scalar kernels that stay
+/* Native Catalyst expressions (SURVEY.md §4.3): scalar kernels that stay
   * inside whole-stage codegen instead of breaking it the way a Scala UDF
   * would. Each generates a single static call into a compute kernel, so
   * the JIT sees one monomorphic call site per expression.

@@ -364,26 +364,6 @@ object ClusterOps {
   private val PqK = 4   // codes per subspace
   private val PqSub = 16 // dims per subspace (64 / PqM)
 
-  /** #253 Product quantization (Jégou et al. 2011, public): split each
-    * 64-dim embedding into 4 contiguous 16-dim subspaces and learn an
-    * independent K=4 codebook per subspace with the SAME integer-micro
-    * Lloyd chain as [[embedKmeans]] (seeds = vec_id 0..3's sub-vectors,
-    * one update round, exact int64 squared-L2, ties to the smaller
-    * code). A vector's PQ code is its 4 per-subspace assignments; the
-    * graded output is the per-(subspace, code) occupancy and exact
-    * integer quantization SSE — the codebook-quality readout that
-    * decides nlist/nbits before an ANN deployment.
-    *
-    * Scale: the four codebooks train in ONE dataflow (subspace id is a
-    * 4-way explode feeding the same broadcast-assign + (m, cid, dim)
-    * aggregate shape as kmeans — 16 centroid rows total, so assignment
-    * is a broadcast crossJoin filtered on m, never a shuffle keyed by
-    * vector). PQ memory story: 64 dims × 4 B floats → 4 B of codes per
-    * vector (16×), which is what makes billion-vector ANN fit in RAM.
-    */
-  /** Sub-vector relation (vec_id, m, sq) and one-round-trained PQ
-    * codebook (m, cid, c) shared by [[embedPq]] and [[embedPqAdc]].
-    */
   private def pqSubAssign(sub: DataFrame, cents: DataFrame): DataFrame = {
     val dist = expr("graft_sql2(sq, c)")
     val w = Window.partitionBy("vec_id", "m").orderBy(col("dist"), col("cid"))
@@ -393,6 +373,9 @@ object ClusterOps {
       .select("vec_id", "m", "sq", "cid", "dist")
   }
 
+  /** Sub-vector relation (vec_id, m, sq) and one-round-trained PQ
+    * codebook (m, cid, c) shared by [[embedPq]] and [[embedPqAdc]].
+    */
   private[graft] def pqModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val sub = quantized(s, dir)
       .select(col("vec_id"), explode(expr(s"sequence(0, ${PqM - 1})")).as("m"),
@@ -412,6 +395,23 @@ object ClusterOps {
     (sub, cents1)
   }
 
+  /** #253 Product quantization (Jégou et al. 2011, public): split each
+    * 64-dim embedding into 4 contiguous 16-dim subspaces and learn an
+    * independent K=4 codebook per subspace with the SAME integer-micro
+    * Lloyd chain as [[embedKmeans]] (seeds = vec_id 0..3's sub-vectors,
+    * one update round, exact int64 squared-L2, ties to the smaller
+    * code). A vector's PQ code is its 4 per-subspace assignments; the
+    * graded output is the per-(subspace, code) occupancy and exact
+    * integer quantization SSE — the codebook-quality readout that
+    * decides nlist/nbits before an ANN deployment.
+    *
+    * Scale: the four codebooks train in ONE dataflow (subspace id is a
+    * 4-way explode feeding the same broadcast-assign + (m, cid, dim)
+    * aggregate shape as kmeans — 16 centroid rows total, so assignment
+    * is a broadcast crossJoin filtered on m, never a shuffle keyed by
+    * vector). PQ memory story: 64 dims × 4 B floats → 4 B of codes per
+    * vector (16×), which is what makes billion-vector ANN fit in RAM.
+    */
   def embedPq(s: SparkSession, dir: String): DataFrame = {
     val (sub, cents1) = pqModel(s, dir)
     pqSubAssign(sub, cents1)

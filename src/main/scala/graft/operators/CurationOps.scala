@@ -294,34 +294,34 @@ object CurationOps {
       .orderBy("lang")
   }
 
+  /** [[GlobalPrefix.memoized]] rank over (score_ppm, doc_id), shared with
+    * the bench prewarm. */
+  private[graft] def rankedQualityScore(s: SparkSession, dir: String): GlobalPrefix.Prefixed = {
+    val scored = Tables.documents(s, dir)
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n_tokens"),
+        col("n_chars"))
+      .withColumn("score_ppm", expr("(n_chars * 1000000) div n_tokens"))
+    GlobalPrefix.memoized(s, s"fsweep:$dir", scored,
+      Seq(col("score_ppm"), col("doc_id")), GlobalPrefix.Rank)
+  }
+
   /** #434 Quality-filter threshold sweep: rank every document by the
     * chars-per-token score (the cheapest quality proxy — boilerplate
     * and code-ish text sit at the extremes), cut the corpus into
     * GLOBAL deciles, and report cumulative docs/tokens retained at
     * each cut — the keep-curve a data team reads before committing to
     * a quality threshold (the corpus-level sibling of the per-feature
-    * AUC screen #291). Ranks ride the shared two-phase kernel
-    * ([[StatsOps.globalRanked]] — range partition + per-partition
-    * windows, never a single-partition window over the corpus);
+    * AUC screen #291). Ranks are the [[GlobalPrefix]] rank (never a
+    * single-partition window over the corpus);
     * deciles are integer arithmetic on (rank, N); the cumulative runs
     * on the 10-row decile aggregate. Tie-break (score, doc_id),
     * mirrored in the twin.
     */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def rankedQualityScore(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val scored = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        col("n_chars"))
-      .withColumn("score_ppm", expr("(n_chars * 1000000) div n_tokens"))
-    StatsOps.globalRanked(s, scored,
-      Seq(col("score_ppm"), col("doc_id")), s"fsweep:$dir")
-  }
-
   def qualityFilterSweep(s: SparkSession, dir: String): DataFrame = {
-    val (ranked, n) = rankedQualityScore(s, dir)
-    val byDecile = ranked
+    val ranked = rankedQualityScore(s, dir)
+    val n = ranked.totals("r")
+    val byDecile = ranked.df
       .withColumn("decile", expr(s"((r - 1) * 10) div ${n}L + 1"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),

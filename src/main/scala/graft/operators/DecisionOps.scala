@@ -182,35 +182,35 @@ object DecisionOps {
         expr("cast(hsum div 1000000000000 as long)").as("h_milli"))
   }
 
+  /** [[GlobalPrefix.memoized]] rank over (h_milli, doc_id), shared with
+    * the bench prewarm. */
+  private[graft] def rankedPruneH(s: SparkSession, dir: String): GlobalPrefix.Prefixed = {
+    val docs = Tables.documents(s, dir)
+      .select(col("doc_id"), col("n_chars"),
+        size(split(col("text"), " ")).cast("long").as("nt"))
+      .filter(col("nt") > 0L)
+      .withColumn("h_milli", expr("(n_chars * 1000) div nt"))
+    GlobalPrefix.memoized(s, s"$dir#documents:prune_h",
+      docs.select(col("doc_id"), col("n_chars"), col("h_milli")),
+      Seq(col("h_milli"), col("doc_id")), GlobalPrefix.Rank)
+  }
+
   /** #404 Perplexity-proxy pruning curve: rank the corpus by a
     * hardness proxy (mean token length in milli — short-token docs
     * prune first), cut into exact global deciles, and report per
     * decile the doc/char mass plus what survives if everything at or
     * below that decile is dropped — the schedule a data-pruning run
     * commits to before spending compute. The global decile uses the
-    * #107 two-phase rank kernel (range partition + histogram offsets —
-    * NEVER a partitionless window); decile id is exact rank
-    * arithmetic (r−1)·10 div n, identical to the twin's ROW_NUMBER
-    * formulation because the (h, doc_id) order is total. Scale: one
-    * corpus pass for the proxy, the kernel's bounded histogram
-    * collect, then 10-row algebra.
+    * [[GlobalPrefix]] rank (NEVER a partitionless window); decile id is
+    * exact rank arithmetic (r−1)·10 div n, identical to the twin's
+    * ROW_NUMBER formulation because the (h, doc_id) order is total.
+    * Scale: one corpus pass for the proxy, the kernel's bounded
+    * histogram collect, then 10-row algebra.
     */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def rankedPruneH(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), col("n_chars"),
-        size(split(col("text"), " ")).cast("long").as("nt"))
-      .filter(col("nt") > 0L)
-      .withColumn("h_milli", expr("(n_chars * 1000) div nt"))
-    StatsOps.globalRanked(s,
-      docs.select(col("doc_id"), col("n_chars"), col("h_milli")),
-      Seq(col("h_milli"), col("doc_id")), s"$dir#documents:prune_h")
-  }
-
   def pruneCurve(s: SparkSession, dir: String): DataFrame = {
-    val (ranked, n) = rankedPruneH(s, dir)
-    val byDecile = ranked
+    val ranked = rankedPruneH(s, dir)
+    val n = ranked.totals("r")
+    val byDecile = ranked.df
       .withColumn("decile", expr(s"((r - 1) * 10) div ${math.max(n, 1L)}"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"),

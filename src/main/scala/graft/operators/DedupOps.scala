@@ -35,8 +35,8 @@ object DedupOps {
     * lambdas touch only their own variables. No array_distinct: the only
     * consumer is the MinHash min-aggregate, which is duplicate-
     * insensitive.
-    */
-  /** Appends a `sh_hashes` column to ANY df with a text column — pure
+    *
+    * Appends the `sh_hashes` column to ANY df with a text column — pure
     * projections, so the same head serves batch and streaming inputs.
     */
   private[graft] def withShingleHashes(df: DataFrame, textCol: String): DataFrame = {
@@ -126,15 +126,6 @@ object DedupOps {
       .filter(col("n") > MaxBucket)
       .select(col("band_idx"), col("band_hash"), (col("n") - MaxBucket).as("dropped"))
 
-  /** doc → 16 (band_idx, band_hash) rows: the shared head of the LSH
-    * pipeline. The 64 permutation minima come from ONE native
-    * [[graft.functions.MinHashSigAgg]] kernel (a 64-wide `agg(min, …)`
-    * generates a multi-thousand-line Janino class that takes seconds to
-    * compile per plan; the typed aggregate is a constant-size JIT'd
-    * loop with the same map-side partial aggregation). Band hash = one
-    * variadic xxhash64 over the 4 row minima, via TOP-LEVEL element_at —
-    * never array indexing inside a lambda (see docsWithShingleHashes).
-    */
   /** Materialized (doc_id, sig) signature table — the same deterministic
     * derived-file pattern as [[materializedEdges]]: signatures are a pure
     * function of the corpus, written once per tmp lifetime, read by every
@@ -154,6 +145,15 @@ object DedupOps {
         .agg(expr(s"graft_minhash_sig(sh_hash, $NumPerms)").as("sig")))
   }
 
+  /** doc → 16 (band_idx, band_hash) rows: the shared head of the LSH
+    * pipeline. The 64 permutation minima come from ONE native
+    * [[graft.functions.MinHashSigAgg]] kernel (a 64-wide `agg(min, …)`
+    * generates a multi-thousand-line Janino class that takes seconds to
+    * compile per plan; the typed aggregate is a constant-size JIT'd
+    * loop with the same map-side partial aggregation). Band hash = one
+    * variadic xxhash64 over the 4 row minima, via TOP-LEVEL element_at —
+    * never array indexing inside a lambda (see docsWithShingleHashes).
+    */
   private def minhashMelted(s: SparkSession, dir: String): DataFrame = {
     val sigs = materializedSignatures(s, dir)
     val bandCols = (0 until Bands).map(b =>
@@ -655,25 +655,6 @@ object DedupOps {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** URL-canonicalization dedup — the C4/CommonCrawl "same page, five
-    * spellings" step that runs BEFORE any content dedup: normalize the
-    * scheme to https (http/https serve the same page), lowercase the
-    * host, strip the default :443 port, strip trailing
-    * slashes, drop utm_* tracking params, and sort the surviving query
-    * params; group on the canonical form and keep the min doc_id.
-    * The fixtures carry no URL column (like q_url_parse), so each doc
-    * derives a deterministic MESSY variant url — page = doc_id div 2,
-    * with case/port/slash/tracking/param-order varying by doc_id parity
-    * — and the graded semantics is the canonicalization chain mapping
-    * BOTH variants of every page to one key: every output group must
-    * collapse exactly two docs (the oracle hash pins that, not just
-    * the rules individually).
-    *
-    * Scale shape: the canonicalization is a codegen'd projection; the
-    * only shuffle is ONE map-side-combined groupBy on the canonical
-    * key. All string ops (regexp_extract/replace, split, sort, join)
-    * are engine-portable and mirrored verbatim in the DuckDB oracle.
-    */
   /** The canonicalization chain itself, reusable on any url column;
     * idempotent by construction (canonical output re-canonicalizes to
     * itself — PropertySpec pins it). */
@@ -708,6 +689,25 @@ object DedupOps {
         .otherwise(concat(lit("?a="), pmod.cast("string"), lit("&utm_campaign=x&b=2"))))
   }
 
+  /** URL-canonicalization dedup — the C4/CommonCrawl "same page, five
+    * spellings" step that runs BEFORE any content dedup: normalize the
+    * scheme to https (http/https serve the same page), lowercase the
+    * host, strip the default :443 port, strip trailing
+    * slashes, drop utm_* tracking params, and sort the surviving query
+    * params; group on the canonical form and keep the min doc_id.
+    * The fixtures carry no URL column (like q_url_parse), so each doc
+    * derives a deterministic MESSY variant url — page = doc_id div 2,
+    * with case/port/slash/tracking/param-order varying by doc_id parity
+    * — and the graded semantics is the canonicalization chain mapping
+    * BOTH variants of every page to one key: every output group must
+    * collapse exactly two docs (the oracle hash pins that, not just
+    * the rules individually).
+    *
+    * Scale shape: the canonicalization is a codegen'd projection; the
+    * only shuffle is ONE map-side-combined groupBy on the canonical
+    * key. All string ops (regexp_extract/replace, split, sort, join)
+    * are engine-portable and mirrored verbatim in the DuckDB oracle.
+    */
   def dedupUrl(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir)
       .withColumn("raw_url", messyUrl)

@@ -175,43 +175,28 @@ object EvalOps {
   }
 
   /** Exact Mann-Whitney U (tie-aware, midranks) comparing purchase vs
-    * click event values. Same grouped-cents + two-phase cumulative
-    * shape as StatsOps.ksDrift: group rows by integer cents (relation
-    * bounded by the value domain), range-partition the grouped
-    * relation, per-partition cumulative counts plus collected partition
-    * offsets — never a single-partition window over per-row ranks.
+    * click event values. Same grouped-cents shape as StatsOps.ksDrift:
+    * group rows by integer cents (relation bounded by the value domain)
+    * and take both samples' cumulative counts as [[GlobalPrefix]]
+    * running sums — never a single-partition window over per-row ranks.
     * midrank2 = 2*(combined rank average) stays integer; U2 = 2*U and
     * the rank-biserial effect (= P(a > b) + P(a = b)/2, in ppm) are
     * exact integer expressions of it.
     */
   def mannWhitney(s: SparkSession, dir: String): DataFrame = {
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val grouped = Tables.events(s, dir)
       .filter(col("event_type").isin("purchase", "click"))
       .select(round(col("value") * 100, 0).cast("long").as("cents"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("a"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("b"))
       .groupBy("cents").agg(sum(col("a")).as("a_n"), sum(col("b")).as("b_n"))
-      .repartitionByRange(nPart, col("cents"))
-      .sortWithinPartitions("cents")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val hist = grouped.groupBy("pid")
-      .agg(sum(col("a_n")).as("pa"), sum(col("b_n")).as("pb")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val offA: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-    val offB: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._3)).toMap
-    val na = hist.map(_._2).sum
-    val nb = hist.map(_._3).sum
-    val w = Window.partitionBy("pid").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grouped
-      .withColumn("ca", element_at(typedLit(offA), col("pid")) + sum(col("a_n")).over(w))
-      .withColumn("cb", element_at(typedLit(offB), col("pid")) + sum(col("b_n")).over(w))
+    val cum = GlobalPrefix(grouped, Seq(col("cents")), "ca" -> col("a_n"), "cb" -> col("b_n"))
+    val (na, nb) = (cum.totals("ca"), cum.totals("cb"))
+    cum.df
       .withColumn("midrank2",
         lit(2) * (col("ca") - col("a_n") + col("cb") - col("b_n")) +
           col("a_n") + col("b_n") + 1)
-    cum.agg(sum(col("a_n").cast(DecimalType(38, 0)) * col("midrank2")).as("r2a"))
+      .agg(sum(col("a_n").cast(DecimalType(38, 0)) * col("midrank2")).as("r2a"))
       .select(lit(na).as("n_a"), lit(nb).as("n_b"),
         (col("r2a") - lit(na).cast(DecimalType(38, 0)) * (lit(na) + lit(1L)))
           .as("u2dec"))

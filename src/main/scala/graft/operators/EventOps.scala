@@ -464,7 +464,7 @@ object EventOps {
     *
     * The converged π is memoized per (session, dir) in [[SessionMemo]]: it is a
     * |event_type|-row relation (the one driver materialization, same
-    * boundedness class as the two-phase rank histogram), and TWO
+    * boundedness class as the [[GlobalPrefix]] histogram), and TWO
     * graded queries consume it — this one and
     * [[DecisionOps.markovEntropyRate]] — so the 10-round iteration
     * must not be re-paid per consumer (the LPA-label lesson from the
@@ -534,7 +534,7 @@ object EventOps {
     * arithmetic on the COLLECTED |types|²-bounded transition matrix
     * in the driver (r21 — the matrix is domain-bounded whatever the
     * corpus size, the exact boundedness class the Markov π collect and
-    * the rank-kernel histogram already ride; the previous per-round
+    * the [[GlobalPrefix]] histogram already ride; the previous per-round
     * join + localCheckpoint shape paid 12 scheduler round-trips to
     * move ≤25 rows). BigInt accumulation (the Wave14Spec pin's own
     * arithmetic): products are exact at any count, and the one

@@ -265,27 +265,9 @@ object ExtraFuncs {
         expr("variant_get(v, '$.flag', 'string')").as("flag"))
       .orderBy("l_orderkey", "l_linenumber")
 
-  /** RFM customer segmentation: ascending quintile labels (1..5) for
-    * Recency / Frequency / Monetary over the per-customer order
-    * reduction, reported as 125-cell segment counts + revenue mass.
-    * Quintiles are the EXPLICIT formula q = (5*(rank-1)) div C + 1 on
-    * the (metric, custkey) total order — not ntile(), whose remainder
-    * placement differs across engines.
-    *
-    * Single-melt shape: the three metrics melt to one long relation
-    * (custkey, metric, v) — 3C rows — and ONE two-phase rank pass
-    * ordered by (metric, v, custkey) ranks all three at once (within a
-    * metric stratum that order IS the (v, custkey) order, so quintiles
-    * are identical to three separate passes). Every customer carries
-    * all three metrics, so each stratum holds exactly C = n/3 rows and
-    * the per-metric offset is positional (f→0, m→C, r→2C in the lex
-    * order the kernel sorts by) — no per-stratum histogram job. The
-    * pivot back is one custkey aggregate; the monetary mass rides the
-    * melt (metric='m' rows), so no join back to the base relation.
-    */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def rankedRfmMelt(s: SparkSession, dir: String): (DataFrame, Long) = {
+  /** [[GlobalPrefix.memoized]] rank over the RFM melt's (metric, v,
+    * custkey), shared with the bench prewarm. */
+  private[graft] def rankedRfmMelt(s: SparkSession, dir: String): GlobalPrefix.Prefixed = {
     val maxD = Tables.orders(s, dir).agg(max(col("o_orderdate")).as("mx"))
     val melted = Tables.orders(s, dir)
       .groupBy(col("o_custkey").as("custkey"))
@@ -299,15 +281,33 @@ object ExtraFuncs {
           lit("m"), col("m"),
           lit("r"), datediff(col("mx"), col("last_d")).cast("long"))))
       .toDF("custkey", "metric", "v")
-    graft.operators.StatsOps.globalRanked(s, melted,
-      Seq(col("metric"), col("v"), col("custkey")), s"$dir#orders:rfm-melt")
+    GlobalPrefix.memoized(s, s"$dir#orders:rfm-melt", melted,
+      Seq(col("metric"), col("v"), col("custkey")), GlobalPrefix.Rank)
   }
 
+  /** RFM customer segmentation: ascending quintile labels (1..5) for
+    * Recency / Frequency / Monetary over the per-customer order
+    * reduction, reported as 125-cell segment counts + revenue mass.
+    * Quintiles are the EXPLICIT formula q = (5*(rank-1)) div C + 1 on
+    * the (metric, custkey) total order — not ntile(), whose remainder
+    * placement differs across engines.
+    *
+    * Single-melt shape: the three metrics melt to one long relation
+    * (custkey, metric, v) — 3C rows — and ONE [[GlobalPrefix]] rank
+    * ordered by (metric, v, custkey) ranks all three at once (within a
+    * metric stratum that order IS the (v, custkey) order, so quintiles
+    * are identical to three separate passes). Every customer carries
+    * all three metrics, so each stratum holds exactly C = n/3 rows and
+    * the per-metric offset is positional (f→0, m→C, r→2C in the lex
+    * order the kernel sorts by) — no per-stratum histogram job. The
+    * pivot back is one custkey aggregate; the monetary mass rides the
+    * melt (metric='m' rows), so no join back to the base relation.
+    */
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val (ranked, n) = rankedRfmMelt(s, dir)
-    val c = n / 3
+    val ranked = rankedRfmMelt(s, dir)
+    val c = ranked.totals("r") / 3
     val off: Map[String, Long] = Map("f" -> 0L, "m" -> c, "r" -> 2 * c)
-    ranked
+    ranked.df
       .withColumn("sr", col("r") - element_at(typedLit(off), col("metric")))
       .withColumn("q", expr(s"(5 * (sr - 1)) div ${math.max(c, 1L)} + 1"))
       .groupBy("custkey")

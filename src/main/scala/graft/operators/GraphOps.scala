@@ -21,16 +21,6 @@ object GraphOps {
   private val Iterations = 5
   private val UnitMass = 1000000L // 1.0 in micro-units
 
-  /** Materialized total-degree relation (node, deg) of the symmetrized
-    * similarity graph — the third shared graph derivation next to
-    * [[DedupOps.materializedEdges]] and [[lpaLabels]]. Half a dozen
-    * consumers (both PageRanks, the degree-oriented triangle kernel,
-    * clustering coefficient, …) each re-aggregated the same degrees
-    * from the edge file; a |V|-row parquet built once per tmp lifetime
-    * serves them all — exactly the degree table a production graph
-    * pipeline keeps next to its edge list. Same [[DerivedFiles]]
-    * atomic-publish discipline as every derived file.
-    */
   /** Materialized distinct (customer, supplier) bipartite edge list of
     * the purchase graph — the [[hits]] input, a pure function of the
     * corpus that previously re-paid the lineitem⋈orders join + distinct
@@ -51,6 +41,16 @@ object GraphOps {
     }
   }
 
+  /** Materialized total-degree relation (node, deg) of the symmetrized
+    * similarity graph — the third shared graph derivation next to
+    * [[DedupOps.materializedEdges]] and [[lpaLabels]]. Half a dozen
+    * consumers (both PageRanks, the degree-oriented triangle kernel,
+    * clustering coefficient, …) each re-aggregated the same degrees
+    * from the edge file; a |V|-row parquet built once per tmp lifetime
+    * serves them all — exactly the degree table a production graph
+    * pipeline keeps next to its edge list. Same [[DerivedFiles]]
+    * atomic-publish discipline as every derived file.
+    */
   private[graft] def materializedDegrees(s: SparkSession, dir: String): DataFrame = {
     DerivedFiles(s, dir, "degrees_v1", "documents").parquet {
       val pairs = DedupOps.materializedEdges(s, dir)
@@ -578,22 +578,6 @@ object GraphOps {
 
   private val LpaRounds = 3
 
-  /** #254 Synchronous label propagation (Raghavan et al. 2007, public)
-    * over the similarity graph — the community-detection pass between
-    * connected components (too coarse: one label per component) and
-    * modularity methods (too heavy for a corpus sweep). Init: every
-    * node labels itself. Each of 3 synchronous rounds: a node adopts
-    * the MODE of its neighbors' labels, ties to the smallest label —
-    * the deterministic variant (plain LPA breaks ties randomly, which
-    * would be ungradeable).
-    *
-    * Scale: per round, one edge-list join + one (node, label) count
-    * aggregate + one node-partitioned top-1 window — the PageRank
-    * shape with a mode instead of a sum; labels localCheckpoint per
-    * round so round N's plan doesn't replay rounds 1..N-1. Fixed round
-    * count = fixed job count (no driver convergence loop). The DuckDB
-    * twin unrolls the identical 3 rounds as CTEs.
-    */
   /** Materialized 3-round LPA label relation — three graded queries
     * (#254 labelProp, #260 modularity, #264 conductance) share the
     * identical labels. Before r13 this was an in-session memo
@@ -636,6 +620,22 @@ object GraphOps {
     labels
   }
 
+  /** #254 Synchronous label propagation (Raghavan et al. 2007, public)
+    * over the similarity graph — the community-detection pass between
+    * connected components (too coarse: one label per component) and
+    * modularity methods (too heavy for a corpus sweep). Init: every
+    * node labels itself. Each of 3 synchronous rounds: a node adopts
+    * the MODE of its neighbors' labels, ties to the smallest label —
+    * the deterministic variant (plain LPA breaks ties randomly, which
+    * would be ungradeable).
+    *
+    * Scale: per round, one edge-list join + one (node, label) count
+    * aggregate + one node-partitioned top-1 window — the PageRank
+    * shape with a mode instead of a sum; labels localCheckpoint per
+    * round so round N's plan doesn't replay rounds 1..N-1. Fixed round
+    * count = fixed job count (no driver convergence loop). The DuckDB
+    * twin unrolls the identical 3 rounds as CTEs.
+    */
   def labelProp(s: SparkSession, dir: String): DataFrame =
     lpaLabels(s, dir)
       .select(col("node").as("doc_id"), col("label").as("community"))

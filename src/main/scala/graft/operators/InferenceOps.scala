@@ -184,6 +184,28 @@ object InferenceOps {
       .orderBy("type_a", "type_b")
   }
 
+  /** Shared per-order feature/target relation for the OLS fit and its
+    * conformal wrapper: (okey, line count x1, total quantity x2, price
+    * cents y).
+    *
+    * r22: per-(session, dir) memo of the CHECKPOINTED relation
+    * (order-grain, bounded — the [[GlobalPrefix.memoized]] boundedness
+    * class). Before, this fact-scale lineitem aggregate + orders join
+    * was re-evaluated FIVE times per bench pass: twice inside
+    * [[olsMulti]] (grand-total arm + centered-moment arm), once more by
+    * [[conformalResidBuild]], and olsMulti's two arms again under the
+    * conformal build's own olsMulti call.
+    */
+  private def olsPerOrder(s: SparkSession, dir: String): DataFrame =
+    SessionMemo(s, s"ols_per_order:$dir")(olsPerOrderBuild(s, dir).localCheckpoint())
+
+  private def olsPerOrderBuild(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .groupBy(col("l_orderkey").as("okey"))
+      .agg(count(lit(1)).as("x1"), sum(col("l_quantity").cast("long")).as("x2"))
+      .join(Tables.orders(s, dir).select(col("o_orderkey").as("okey"),
+        round(col("o_totalprice") * 100, 0).cast("long").as("y")), Seq("okey"))
+
   /** #252 Multivariate OLS (two predictors + intercept) fit entirely in
     * exact integer arithmetic: regress order price (cents) on the
     * order's line count and total quantity, solving the 2×2 normal
@@ -207,28 +229,6 @@ object InferenceOps {
     * beyond that drop slope precision to milli (documented, like the
     * ANOVA envelope above).
     */
-  /** Shared per-order feature/target relation for the OLS fit and its
-    * conformal wrapper: (okey, line count x1, total quantity x2, price
-    * cents y).
-    */
-  /** r22: per-(session, dir) memo of the CHECKPOINTED per-order feature
-    * relation (order-grain, bounded — the rank-kernel boundedness
-    * class). Before, this fact-scale lineitem aggregate + orders join
-    * was re-evaluated FIVE times per bench pass: twice inside
-    * [[olsMulti]] (grand-total arm + centered-moment arm), once more by
-    * [[conformalResidBuild]], and olsMulti's two arms again under the
-    * conformal build's own olsMulti call.
-    */
-  private def olsPerOrder(s: SparkSession, dir: String): DataFrame =
-    SessionMemo(s, s"ols_per_order:$dir")(olsPerOrderBuild(s, dir).localCheckpoint())
-
-  private def olsPerOrderBuild(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .groupBy(col("l_orderkey").as("okey"))
-      .agg(count(lit(1)).as("x1"), sum(col("l_quantity").cast("long")).as("x2"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey").as("okey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("y")), Seq("okey"))
-
   def olsMulti(s: SparkSession, dir: String): DataFrame = {
     val per = olsPerOrder(s, dir)
     val piv = per.agg(count(lit(1)).as("n0"),
@@ -363,29 +363,13 @@ object InferenceOps {
         col("p_we_ppm"), col("p_wd_ppm"), col("z2_milli"),
         (col("z2_milli") > 3841L).as("significant_05"))
 
-  /** #294 Split-conformal prediction interval (Vovk et al.; Lei et al.
-    * 2018) around the [[olsMulti]] price model: on a content-addressed
-    * 25% calibration split (md5 of the order key — the
-    * [[PipelineOps]] split discipline), take the ⌈(1−α)(n+1)⌉-th
-    * smallest absolute residual as the half-width q̂ (α = 0.1), then
-    * report the EMPIRICAL coverage of ±q̂ on the held-out 75% — the
-    * distribution-free guarantee (≥ 90%) demonstrated, not assumed.
-    *
-    * Exactness: residuals use the oracle-identical floored integer-micro
-    * betas, so every |r| is exact int64; the quantile is an ORDER
-    * STATISTIC (no interpolation) selected by the two-phase rank kernel
-    * — rank over (|r|, okey) with no SinglePartition window; coverage is
-    * a count ratio in ppm. Scale: one per-order aggregate feeds fit,
-    * calibration, and coverage; the kernel's range shuffle is the only
-    * extra row-cardinality stage.
-    */
   /** Session memo for the conformal residual relation (r21): the bench
-    * prewarm already builds it — `rank:conformal_resid` feeds it to the
-    * rank kernel — and the graded consumer needs the SAME checkpointed
+    * prewarm already builds it — `rank:conformal_resid` feeds it to
+    * [[rankedConformal]] — and the graded consumer needs the SAME checkpointed
     * relation for its coverage count, so without a memo every
     * invocation re-ran the full two-pass OLS fit + materialization a
     * second time. The relation is orders-sized — exactly the class the
-    * rank-kernel memo already holds checkpointed.
+    * [[GlobalPrefix.memoized]] relations already hold checkpointed.
     */
   private[graft] def conformalResid(s: SparkSession, dir: String): DataFrame =
     SessionMemo(s, s"conformal_resid:$dir")(conformalResidBuild(s, dir))
@@ -399,23 +383,40 @@ object InferenceOps {
           .as("is_cal"),
         abs(col("y") * 1000000L - col("beta1_micro") * col("x1") -
           col("beta2_micro") * col("x2") - col("intercept_micro")).as("abs_r"))
-      .localCheckpoint() // feeds the rank kernel AND the coverage count
+      .localCheckpoint() // feeds rankedConformal AND the coverage count
 
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). `resid` is
-    * by-name: on a memo hit the calibration slice is never built. */
+  /** [[GlobalPrefix.memoized]] rank of the calibration residuals over
+    * (abs_r, okey), shared with the bench prewarm. `resid` is by-name: on
+    * a memo hit the calibration slice is never built. */
   private[graft] def rankedConformal(s: SparkSession, dir: String,
-      resid: => DataFrame): (DataFrame, Long) =
-    StatsOps.globalRanked(s,
+      resid: => DataFrame): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"conformal:$dir",
       resid.filter(col("is_cal")).select(col("okey"), col("abs_r")),
-      Seq(asc("abs_r"), asc("okey")), s"conformal:$dir")
+      Seq(asc("abs_r"), asc("okey")), GlobalPrefix.Rank)
 
+  /** #294 Split-conformal prediction interval (Vovk et al.; Lei et al.
+    * 2018) around the [[olsMulti]] price model: on a content-addressed
+    * 25% calibration split (md5 of the order key — the
+    * [[PipelineOps]] split discipline), take the ⌈(1−α)(n+1)⌉-th
+    * smallest absolute residual as the half-width q̂ (α = 0.1), then
+    * report the EMPIRICAL coverage of ±q̂ on the held-out 75% — the
+    * distribution-free guarantee (≥ 90%) demonstrated, not assumed.
+    *
+    * Exactness: residuals use the oracle-identical floored integer-micro
+    * betas, so every |r| is exact int64; the quantile is an ORDER
+    * STATISTIC (no interpolation) selected by the [[GlobalPrefix]] rank
+    * over (|r|, okey) with no SinglePartition window; coverage is
+    * a count ratio in ppm. Scale: one per-order aggregate feeds fit,
+    * calibration, and coverage; the kernel's range shuffle is the only
+    * extra row-cardinality stage.
+    */
   def conformalInterval(s: SparkSession, dir: String): DataFrame = {
     val alpha10 = 9L // (1-α)·10 with α = 0.1
     val resid = conformalResid(s, dir)
-    val (ranked, nCal) = rankedConformal(s, dir, resid)
+    val ranked = rankedConformal(s, dir, resid)
+    val nCal = ranked.totals("r")
     val qIdx = (alpha10 * (nCal + 1) + 9) / 10 // ceil(0.9·(n+1))
-    val qHat = ranked.filter(col("r") === qIdx)
+    val qHat = ranked.df.filter(col("r") === qIdx)
       .select(col("abs_r").as("q_hat_micro"))
     resid.filter(!col("is_cal"))
       .crossJoin(broadcast(qHat))
@@ -1191,22 +1192,6 @@ object InferenceOps {
       .orderBy("type_a", "type_b")
   }
 
-  /** #428 Two-sample Cramér–von Mises test between the click and
-    * purchase daily value-mass distributions — the whole-distribution
-    * sibling of the KS gate (#195): T integrates the squared ECDF gap
-    * instead of taking its max, so diffuse shape differences that never
-    * open a large single gap still register. Anderson's exact rank
-    * form: U = n·Σ(r_i − i)² + m·Σ(s_j − j)² over combined ranks r/s
-    * and within-sample indices i/j, T = U/(Nnm) − (4nm−1)/(6N) — every
-    * term an exact integer over the common denominator 6Nnm, so
-    * T_nano is ONE truncating DECIMAL division (U ~ N³ outgrows
-    * nothing at calendar scale but ×1e9 passes int64 — staged).
-    * Ranks are tie-broken by (v, day, type) — a deterministic total
-    * order mirrored in the twin; the asymptotic 5% critical value for
-    * T is 0.461. Scale: ranks ride ONE global window over the
-    * calendar-bounded daily relation (above the day aggregate — the
-    * GlobalWindowSpec-pinned bounded shape).
-    */
   /** Week-of-month value-mass per event type, zero-filled to the
     * complete (type, week) grid up to the GLOBAL max observed week —
     * the shared input of the two complete-block rank designs
@@ -1230,6 +1215,22 @@ object InferenceOps {
         coalesce(col("v"), lit(0L)).as("v"))
   }
 
+  /** #428 Two-sample Cramér–von Mises test between the click and
+    * purchase daily value-mass distributions — the whole-distribution
+    * sibling of the KS gate (#195): T integrates the squared ECDF gap
+    * instead of taking its max, so diffuse shape differences that never
+    * open a large single gap still register. Anderson's exact rank
+    * form: U = n·Σ(r_i − i)² + m·Σ(s_j − j)² over combined ranks r/s
+    * and within-sample indices i/j, T = U/(Nnm) − (4nm−1)/(6N) — every
+    * term an exact integer over the common denominator 6Nnm, so
+    * T_nano is ONE truncating DECIMAL division (U ~ N³ outgrows
+    * nothing at calendar scale but ×1e9 passes int64 — staged).
+    * Ranks are tie-broken by (v, day, type) — a deterministic total
+    * order mirrored in the twin; the asymptotic 5% critical value for
+    * T is 0.461. Scale: ranks ride ONE global window over the
+    * calendar-bounded daily relation (above the day aggregate — the
+    * GlobalWindowSpec-pinned bounded shape).
+    */
   def cvmTwoSample(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val daily = Tables.events(s, dir)

@@ -278,33 +278,25 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
+  /** [[GlobalPrefix.memoized]] rank over (doc_id), shared by
+    * [[sampleIndex]], [[negativePairs]] and the bench prewarm. */
+  private[graft] def rankedDocId(s: SparkSession, dir: String): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"$dir#docs:doc_id",
+      Tables.documents(s, dir).select(col("doc_id"), col("lang")),
+      Seq(col("doc_id")), GlobalPrefix.Rank)
+
   /** Global contiguous sample index 0..N-1 over the (doc_id) total order —
     * every training pipeline's "give each sample a stable integer id"
-    * step. Same two-phase global rank as StatsOps.ntileBuckets (its
-    * scaladoc has the full argument): range-partition on the order key,
-    * per-partition row_number, plus a broadcast cumulative offset from a
-    * #partitions-row histogram — never a single-partition window.
-    * monotonically_increasing_id() is NOT used: its ids are partition-
-    * sparse (gaps), not contiguous, and change with partitioning. The
-    * explicit partition count pins the exchange against AQE coalescing
-    * (a bare repartitionByRange folds small inputs to one partition —
-    * the exact single-task shape this avoids; see ntileBuckets).
+    * step: the [[GlobalPrefix]] rank minus one, never a single-partition
+    * window. monotonically_increasing_id() is NOT used: its ids are
+    * partition-sparse (gaps), not contiguous, and change with
+    * partitioning.
     */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline); also shared by
-    * [[negativePairs]], which rides the same (relation, order) memo. */
-  private[graft] def rankedDocId(s: SparkSession, dir: String): (DataFrame, Long) =
-    StatsOps.globalRanked(s,
-      Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-      Seq(col("doc_id")), s"$dir#docs:doc_id")
-
-  def sampleIndex(s: SparkSession, dir: String): DataFrame = {
-    val (ranked, _) = rankedDocId(s, dir)
-    ranked
+  def sampleIndex(s: SparkSession, dir: String): DataFrame =
+    rankedDocId(s, dir).df
       .withColumn("sample_idx", col("r") - 1)
       .select(col("doc_id"), col("lang"), col("sample_idx"))
       .orderBy("doc_id")
-  }
 
   /** Largest-remainder (Hamilton) apportionment of a fixed sample
     * budget across (lang, source) strata, proportional to character
@@ -345,13 +337,11 @@ object PipelineOps {
     * reports its padding waste (docs*max_len - sum_len — what a
     * rectangular tensor throws away).
     *
-    * Scale shape: in-bucket positions come from ONE two-phase global
+    * Scale shape: in-bucket positions come from ONE [[GlobalPrefix]]
     * rank ordered by (bucket, doc_id) minus broadcast per-bucket
-    * offsets (the bucket-count relation is ladder-sized, <= 6 rows,
-    * collected like the rank kernel's pid histogram) — NOT a
-    * per-bucket row_number window, whose per-partition cardinality
-    * would grow with the corpus (the exact ntile failure mode the
-    * shared kernel exists to avoid).
+    * offsets (the bucket-count relation is ladder-sized, <= 6 rows) —
+    * NOT a per-bucket row_number window, whose per-partition
+    * cardinality would grow with the corpus.
     */
   private def lenBucketToks(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
@@ -361,15 +351,15 @@ object PipelineOps {
           .when(col("n_tokens") <= 64, 64L).when(col("n_tokens") <= 128, 128L)
           .when(col("n_tokens") <= 256, 256L).otherwise(512L))
 
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def rankedLenBucket(s: SparkSession, dir: String): (DataFrame, Long) =
-    StatsOps.globalRanked(s, lenBucketToks(s, dir),
-      Seq(col("bucket"), col("doc_id")), s"$dir#docs:len-bucket")
+  /** [[GlobalPrefix.memoized]] rank over (bucket, doc_id), shared with
+    * the bench prewarm. */
+  private[graft] def rankedLenBucket(s: SparkSession, dir: String): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"$dir#docs:len-bucket", lenBucketToks(s, dir),
+      Seq(col("bucket"), col("doc_id")), GlobalPrefix.Rank)
 
   def batchBuckets(s: SparkSession, dir: String): DataFrame = {
     val toks = lenBucketToks(s, dir)
-    val (ranked, _) = rankedLenBucket(s, dir)
+    val ranked = rankedLenBucket(s, dir).df
     val offsets = toks.groupBy("bucket").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     val off: Map[Long, Long] =
@@ -389,7 +379,7 @@ object PipelineOps {
     * draws 4 pseudo-random partners by hashing (doc_id, j) onto the
     * contiguous sample index ring (md5 ppm-free variant of splitCol's
     * idiom — no rand(), rerunnable and shard-stable), shifting by one
-    * on self-collision. Two uses of the two-phase rank kernel output:
+    * on self-collision. Two uses of the [[GlobalPrefix]] rank:
     * once to index, once (as a broadcast-able projection) to resolve
     * the drawn index back to a doc_id via an equi-join. O(4N) rows,
     * all equi-joins — no cross join anywhere.
@@ -397,8 +387,9 @@ object PipelineOps {
   def negativePairs(s: SparkSession, dir: String): DataFrame = {
     // same (relation, order) as sampleIndex — the lang column rides along
     // unused so the two queries share one memoized kernel build
-    val (ranked, n) = rankedDocId(s, dir)
-    val idx = ranked.select(col("doc_id"), (col("r") - 1).as("idx"))
+    val ranked = rankedDocId(s, dir)
+    val n = ranked.totals("r")
+    val idx = ranked.df.select(col("doc_id"), (col("r") - 1).as("idx"))
     val drawn = idx
       .withColumn("j", explode(expr("sequence(1, 4)")))
       .withColumn("h",
@@ -413,28 +404,27 @@ object PipelineOps {
       .orderBy("doc_id", "j")
   }
 
+  /** [[GlobalPrefix.memoized]] rank over (lang, n_chars, doc_id), shared
+    * with the bench prewarm. */
+  private[graft] def relLangChars(s: SparkSession, dir: String): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"$dir#docs:lang-chars",
+      Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars")),
+      Seq(col("lang"), col("n_chars"), col("doc_id")), GlobalPrefix.Rank)
+
   /** Curriculum ordering with stratified interleave: within each lang,
     * docs rank easy-to-hard (n_chars, doc_id); the global curriculum
     * position round-robins the strata — position = (rank-1)*L + si — so
     * every window of L consecutive samples sees every language once.
-    * In-stratum ranks ride the SAME two-phase global rank ordered by
+    * In-stratum ranks ride ONE [[GlobalPrefix]] rank ordered by
     * (lang, n_chars, doc_id) minus broadcast per-lang offsets (the lang
     * relation is |L| rows) — per-stratum windows would shard the corpus
     * into |L| giant partitions at 100 TB.
     */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def relLangChars(s: SparkSession, dir: String): StatsOps.RankedRel =
-    StatsOps.rankedRel(s,
-      Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars")),
-      Seq(col("lang"), col("n_chars"), col("doc_id")), s"$dir#docs:lang-chars")
-
   def curriculumInterleave(s: SparkSession, dir: String): DataFrame = {
-    val rel = relLangChars(s, dir)
-    val ranked = rel.ranked
+    val ranked = relLangChars(s, dir).df
     // lang offsets from the kernel's checkpointed relation — a |L|-group
     // aggregate over cached partitions, not a second parquet-scan job
-    val langs = rel.sorted.groupBy("lang").count().collect()
+    val langs = ranked.groupBy("lang").count().collect()
       .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
     val off: Map[String, Long] =
       langs.map(_._1).zip(langs.scanLeft(0L)(_ + _._2)).toMap
@@ -490,38 +480,17 @@ object PipelineOps {
     * n_chars DESC, doc_id as the unique tiebreak), take documents while
     * the GLOBAL running token total stays within the budget (60% of the
     * corpus total — scale-invariant by construction), report the
-    * selection per language. The running sum is a TWO-PHASE global
-    * prefix sum, not a single-partition window: range-repartition on
-    * the quality order, per-partition token subtotals (#partitions rows
-    * to the driver — the repo's bounded-collect pattern), then each
-    * partition adds its offset to a partition-local running sum. Same
-    * discipline as the StatsOps rank kernel, generalized from counts to
-    * weighted prefixes; at 100 TB every stage stays parallel.
+    * selection per language. The running token total is a
+    * [[GlobalPrefix]] running sum, not a single-partition window.
     */
   def tokenBudget(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_toks"), col("n_chars"))
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val order = Seq(col("n_chars").desc, col("doc_id").asc)
-    val sorted = docs
-      .repartitionByRange(nPart, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val subtotals = sorted.groupBy("pid").agg(sum(col("n_toks")).as("t")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    // r21: the corpus token total IS the sum of the per-partition
-    // subtotals the offset pass already collected — the former separate
-    // docs.agg().first() paid one more full scan + job for it
-    val total = subtotals.map(_._2).sum
-    val budget = total * 6 / 10
-    val offsets: Map[Int, Long] =
-      subtotals.map(_._1).zip(subtotals.scanLeft(0L)(_ + _._2)).toMap
-    val w = Window.partitionBy("pid").orderBy(order: _*)
-    sorted
-      .withColumn("cum",
-        element_at(typedLit(offsets), col("pid")) + sum(col("n_toks")).over(w))
+    val cum = GlobalPrefix(docs, Seq(col("n_chars").desc, col("doc_id").asc),
+      "cum" -> col("n_toks"))
+    val budget = cum.totals("cum") * 6 / 10
+    cum.df
       .filter(col("cum") <= budget)
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("sum_tokens"),
@@ -636,30 +605,18 @@ object PipelineOps {
     * ranges, which is exactly what leaks adjacent-document pairs
     * across splits.
     *
-    * Scale: the [[StatsOps.ksDrift]] shape — value-grouped counts,
-    * range repartition, per-partition offset memo (O(#partitions)
-    * driver rows), cumulative windows WITHIN partitions — no
-    * data-scale global window.
+    * Scale: the [[StatsOps.ksDrift]] shape — value-grouped counts and
+    * their [[GlobalPrefix]] running sum — no data-scale global window.
     */
   def splitUniformity(s: SparkSession, dir: String): DataFrame = {
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val M = 4294967296L // 16^8
     val grouped = Tables.documents(s, dir)
       .select(expr("cast(conv(substring(md5(concat('split:', " +
         "cast(doc_id as string))), 1, 8), 16, 10) as bigint)").as("u"))
       .groupBy("u").agg(count(lit(1)).as("c"))
-      .repartitionByRange(nPart, col("u"))
-      .sortWithinPartitions("u")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val hist = grouped.groupBy("pid").agg(sum(col("c")).as("pc")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val off: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-    val n = hist.map(_._2).sum
-    val w = Window.partitionBy("pid").orderBy("u")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grouped
-      .withColumn("ck", element_at(typedLit(off), col("pid")) + sum(col("c")).over(w))
+    val cum = GlobalPrefix(grouped, Seq(col("u")), "ck" -> col("c"))
+    val n = cum.totals("ck")
+    cum.df
       .select(greatest(col("ck") * M - col("u") * n,
         col("u") * n - (col("ck") - col("c")) * M).as("dnum"))
       // groupBy(lit(1)) (not a global agg) mirrors the oracle's
@@ -687,30 +644,20 @@ object PipelineOps {
     * fully-specified-null critical 2.492. WHY: KS weights the center;
     * a hash whose residues thin out exactly at the 0/1 TAILS (the
     * failure mode of truncated-hex parsing bugs) passes #481 and
-    * fails here. Scale: the same value-grouped offset-memo shape as
-    * #481 — no data-scale global window.
+    * fails here. Scale: the same value-grouped [[GlobalPrefix]] shape
+    * as #481 — no data-scale global window.
     */
   def splitUniformityAd(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val M = 4294967296L
     val grouped = Tables.documents(s, dir)
       .select(expr("cast(conv(substring(md5(concat('split:', " +
         "cast(doc_id as string))), 1, 8), 16, 10) as bigint)").as("u"))
       .groupBy("u").agg(count(lit(1)).as("c"))
-      .repartitionByRange(nPart, col("u"))
-      .sortWithinPartitions("u")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val hist = grouped.groupBy("pid").agg(sum(col("c")).as("pc")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val off: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-    val n = hist.map(_._2).sum
-    val w = Window.partitionBy("pid").orderBy("u")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    grouped
-      .withColumn("ck", element_at(typedLit(off), col("pid")) + sum(col("c")).over(w))
+    val cum = GlobalPrefix(grouped, Seq(col("u")), "ck" -> col("c"))
+    val n = cum.totals("ck")
+    cum.df
       .withColumn("la", Det.lnNano(lit(2L) * col("u") + 1L) - Det.lnNano(lit(2L * M)))
       .withColumn("lb",
         Det.lnNano(lit(2L) * (lit(M) - col("u")) - 1L) - Det.lnNano(lit(2L * M)))
@@ -886,8 +833,8 @@ object PipelineOps {
         |  split_x <> split_y AS leaked
         |FROM lab GROUP BY split_x, split_y ORDER BY split_x, split_y""".stripMargin,
     // the oracle's single ordered window IS the semantics; the Spark
-    // side must reproduce it through the two-phase distributed prefix
-    // sum — a hash match proves offset bookkeeping exact
+    // side must reproduce it through the GlobalPrefix running sum — a
+    // hash match proves offset bookkeeping exact
     "q_token_budget" ->
       """WITH d AS (
         |  SELECT doc_id, lang,

@@ -225,22 +225,19 @@ object Scans {
     "q_scan_bucketed" -> (scanBucketed _),
     "q_scan_binary" -> (scanBinary _))
 
-  /** Opaque-binary ingestion via Spark's binaryFile source — the read
-    * path image/audio payloads take (Multimodal.scala consumes the same
-    * (path, length, content) shape). Round-trip: one .bin file per
-    * language holding the newline-joined doc_id-ordered texts, read
-    * back as whole-file bytes and reported as (lang, n_bytes, md5).
-    * The oracle recomputes the identical md5 from the parquet originals
-    * with string_agg, so equality proves the binary path delivers exact
-    * bytes. The derived files are fixture scaffolding written EXECUTOR-
-    * side: rows are hash-partitioned by lang and sorted (lang, doc_id)
-    * within partitions, so each language's file is streamed by exactly
-    * one task and no corpus-sized blob ever rides through the driver
-    * (r11 — the old |langs|-row collect carried the full per-lang
-    * corpus per row, the one 100×-scale caveat the r10 audit named; at
-    * cluster scale the same shape targets shared storage). The graded
-    * OPERATOR is the binaryFile scan.
-    */
+  private[graft] def buildEvolved(s: SparkSession, dir: String): String =
+    DerivedFiles(s, dir, "evolved_v1", "documents").files { p =>
+      Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("lang"), col("n_chars"))
+        .write.parquet(s"$p/a")
+      Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("source"))
+        .write.parquet(s"$p/b")
+      // root completeness marker: the generations live in subdirs
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(p, "_SUCCESS"), Array.emptyByteArray)
+    }
+
   /** #285 Schema-evolution read: two parquet generations of the same
     * table — generation A (even docs) written BEFORE a `source` column
     * existed, generation B (odd docs) after — read together with
@@ -257,19 +254,6 @@ object Scans {
     * parquet read. Fixture generations are written once per tmp
     * lifetime (derived-file pattern).
     */
-  private[graft] def buildEvolved(s: SparkSession, dir: String): String =
-    DerivedFiles(s, dir, "evolved_v1", "documents").files { p =>
-      Tables.documents(s, dir).filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.parquet(s"$p/a")
-      Tables.documents(s, dir).filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("lang"), col("n_chars"), col("source"))
-        .write.parquet(s"$p/b")
-      // root completeness marker: the generations live in subdirs
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(p, "_SUCCESS"), Array.emptyByteArray)
-    }
-
   def scanEvolved(s: SparkSession, dir: String): DataFrame = {
     val path = buildEvolved(s, dir)
     s.read.option("mergeSchema", "true").parquet(s"$path/a", s"$path/b")
@@ -307,6 +291,22 @@ object Scans {
         java.nio.file.Paths.get(p, "_SUCCESS"), Array.emptyByteArray)
     }
 
+  /** Opaque-binary ingestion via Spark's binaryFile source — the read
+    * path image/audio payloads take (Multimodal.scala consumes the same
+    * (path, length, content) shape). Round-trip: one .bin file per
+    * language holding the newline-joined doc_id-ordered texts, read
+    * back as whole-file bytes and reported as (lang, n_bytes, md5).
+    * The oracle recomputes the identical md5 from the parquet originals
+    * with string_agg, so equality proves the binary path delivers exact
+    * bytes. The derived files are fixture scaffolding written EXECUTOR-
+    * side: rows are hash-partitioned by lang and sorted (lang, doc_id)
+    * within partitions, so each language's file is streamed by exactly
+    * one task and no corpus-sized blob ever rides through the driver
+    * (r11 — the old |langs|-row collect carried the full per-lang
+    * corpus per row, the one 100×-scale caveat the r10 audit named; at
+    * cluster scale the same shape targets shared storage). The graded
+    * OPERATOR is the binaryFile scan.
+    */
   def scanBinary(s: SparkSession, dir: String): DataFrame =
     s.read.format("binaryFile").option("pathGlobFilter", "*.bin")
       .load(buildBinary(s, dir))

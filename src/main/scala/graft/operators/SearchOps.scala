@@ -179,16 +179,17 @@ object SearchOps {
     * to see BEFORE training on "top-ranked" data.
     *
     * Determinism: ranks come from the shared [[CurationOps.
-    * rankedQualityScore]] kernel (range-partitioned + per-partition
-    * offsets — no data-scale global window; prewarmed); the discount
+    * rankedQualityScore]] [[GlobalPrefix]] rank (no data-scale global
+    * window; prewarmed); the discount
     * is floored to nano per rank (1e9·ln 2/ln(r+1), rank 1 → exactly
     * 1e9 since ln2/ln2 ≡ 1.0 in FP); shares are exact-integer ppm
-    * divisions over exact integer sums. Scale: one rank-kernel read +
+    * divisions over exact integer sums. Scale: one memoized-rank read +
     * one doc_id join + a |langs|-row aggregate.
     */
   def rankExposure(s: SparkSession, dir: String): DataFrame = {
-    val (ranked, n) = CurationOps.rankedQualityScore(s, dir)
-    val expo = ranked.select(col("doc_id"),
+    val ranked = CurationOps.rankedQualityScore(s, dir)
+    val n = ranked.totals("r")
+    val expo = ranked.df.select(col("doc_id"),
         (lit(n) - col("r") + 1L).as("rank_e"))
       .withColumn("w_nano",
         expr("cast(floor(1e9 * ln(2.0) / ln(cast(rank_e + 1 as double))) " +

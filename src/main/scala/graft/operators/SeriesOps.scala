@@ -271,6 +271,16 @@ object SeriesOps {
       .orderBy("k")
   }
 
+  /** Structural bound declaration for the cumulative readout's global
+    * windows over the materialized spectrum read (GlobalWindowSpec's
+    * contract: a no-partition window must sit above a Limit or bounded
+    * Aggregate). Value-neutral: the spectrum has (N−1) div 2 rows for
+    * an N-day calendar — 10M frequencies would need a ~55,000-year
+    * daily series — so the limit never truncates; it DECLARES the
+    * bound the inline plan used to carry via its day aggregate.
+    */
+  private val SpectrumBound = 10000000
+
   /** #451 Bartlett cumulative periodogram white-noise test on the
     * global daily revenue series — the spectral goodness-of-fit
     * companion to #368 (which SCREENS 8 wave numbers; this one TESTS
@@ -292,16 +302,6 @@ object SeriesOps {
     * rows at ANY corpus size — the only corpus-sized job is the day
     * aggregate.
     */
-  /** Structural bound declaration for the cumulative readout's global
-    * windows over the materialized spectrum read (GlobalWindowSpec's
-    * contract: a no-partition window must sit above a Limit or bounded
-    * Aggregate). Value-neutral: the spectrum has (N−1) div 2 rows for
-    * an N-day calendar — 10M frequencies would need a ~55,000-year
-    * daily series — so the limit never truncates; it DECLARES the
-    * bound the inline plan used to carry via its day aggregate.
-    */
-  private val SpectrumBound = 10000000
-
   def tsCumPeriodogram(s: SparkSession, dir: String): DataFrame =
     cumPeriodogramReadout(materializedPowerSpectrum(s, dir).limit(SpectrumBound))
 

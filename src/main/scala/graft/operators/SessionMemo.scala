@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   * entries. Here a key holds one entry, so an abandoned session's entry
   * goes when another session rebuilds the key or the context stops.
   *
-  * Builds nest (the conformal rank kernel builds the residual relation,
+  * Builds nest (the conformal global rank builds the residual relation,
   * which builds the per-order features), so a build runs outside the
   * map, under a per-key lock: a nested `ConcurrentHashMap.compute` on one
   * map throws "Recursive update" whenever two nested keys share a bin.

@@ -69,30 +69,20 @@ object StatsOps {
       .orderBy("c_custkey")
   }
 
-  /** Quantile bucketing over a total order (ntile) WITHOUT the textbook
-    * scale-killer (`Window.orderBy` with no partitionBy serializes the
-    * whole table through one task). Two-phase global rank instead:
-    * range-partition by the total (price, orderkey) order, take a
-    * #partitions-row histogram (the only driver materialization — same
-    * bounded shape as the fixpoint convergence counts), then global
-    * rank = per-partition row_number + broadcast cumulative offset, and
-    * the bucket id comes from exact integer ntile arithmetic: the first
-    * n%k buckets hold n/k+1 rows, the rest n/k — identical output to
-    * ntile(k) because the order is total. localCheckpoint freezes the
-    * range boundaries so histogram and rank pass see the same pids.
-    * The partition count is passed explicitly: a bare
-    * repartitionByRange(cols) is an AQE-coalescible exchange, and on a
-    * small input AQE folds it to ONE partition — re-creating the very
-    * single-task window this operator exists to avoid. An explicit N
-    * pins the exchange (user-specified counts are exempt from
-    * coalescing) while staying cluster-tunable via shuffle.partitions.
+  /** Quantile bucketing over a total order (ntile) without a
+    * single-partition window: the global rank comes from the
+    * [[GlobalPrefix]] kernel, and the bucket id from exact integer ntile
+    * arithmetic: the first n%k buckets hold n/k+1 rows, the rest n/k —
+    * identical output to ntile(k) because the (price, orderkey) order is
+    * total.
     */
   def ntileBuckets(s: SparkSession, dir: String): DataFrame = {
     val k = 8
-    val (ranked, n) = rankedOrdersPrice(s, dir)
+    val ranked = rankedOrdersPrice(s, dir)
+    val n = ranked.totals("r")
     val q = n / k
     val rem = n % k
-    ranked
+    ranked.df
       .withColumn("bucket",
         when(lit(rem) =!= 0 && col("r") <= lit(rem * (q + 1)),
           expr(s"(r - 1) div ${q + 1} + 1"))
@@ -102,108 +92,52 @@ object StatsOps {
       .orderBy("o_orderkey")
   }
 
-  /** Memoized two-phase rank relations: the kernel's build cost is a
-    * range-sampling job + a checkpoint materialization + a histogram
-    * collect, so distinct queries over the SAME (relation, total order)
-    * — q_ntile/q_histogram_equidepth, q_gini/q_lorenz_deciles,
-    * q_sample_index/q_negative_pairs — must not each pay it inside one
-    * Verify/Bench session. Memoized in [[SessionMemo]] under the caller
-    * key; live-session footprint is bounded by the handful of kernel
-    * keys per dir, megabytes at any tested SF.
+  /** Named builders for the shared [[GlobalPrefix.memoized]] relations
+    * this file owns, one per (input relation, total order, weights, key):
+    * the graded consumers and [[graft.Prewarm.sessionTier]] call the SAME
+    * functions, so warming the memo never executes a graded
+    * `SparkEntry.queries` entry, and what prewarm builds cannot drift
+    * from what the query uses.
     */
-  private[graft] final case class RankedRel(sorted: DataFrame, ranked: DataFrame,
-    n: Long, sortSig: String)
-
-  /** Shared two-phase global rank kernel (ntileBuckets' scaladoc has the
-    * full design argument). The partition count is explicit because a
-    * bare repartitionByRange(cols) is an AQE-coalescible exchange that
-    * folds small inputs into ONE partition at runtime — re-creating the
-    * single-task window this kernel exists to avoid, invisibly to any
-    * static plan assertion. User-specified counts are exempt from AQE
-    * coalescing, and reading shuffle.partitions keeps it cluster-tuned.
-    * Returns (input columns + pid + 1-based global rank `r`, total N).
-    * `cacheKey` identifies the (input relation, total order) pair for
-    * the session memo — callers MUST give distinct keys to distinct
-    * logical inputs and embed the sf dir.
-    */
-  private[graft] def globalRanked(s: SparkSession, df: => DataFrame,
-      sortCols: Seq[Column], cacheKey: String): (DataFrame, Long) = {
-    val rel = rankedRel(s, df, sortCols, cacheKey)
-    (rel.ranked, rel.n)
-  }
-
-  private[graft] def rankedRel(s: SparkSession, df: => DataFrame,
-      sortCols: Seq[Column], cacheKey: String): RankedRel = {
-    val sig = sortCols.map(_.toString).mkString(",")
-    val rel = SessionMemo(s, cacheKey) {
-      val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val sorted = df
-        .repartitionByRange(nPart, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint()
-      val hist = sorted.groupBy("pid").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      val offsets: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-      val w = Window.partitionBy("pid").orderBy(sortCols: _*)
-      RankedRel(sorted,
-        sorted.withColumn("r",
-          element_at(typedLit(offsets), col("pid")) + row_number().over(w)),
-        hist.map(_._2).sum, sig)
-    }
-    // a key collision across DIFFERENT total orders would silently serve
-    // the wrong ranking — fail loudly instead (keys are caller-authored)
-    require(rel.sortSig == sig,
-      s"rank-kernel cache key '$cacheKey' reused with a different sort order: " +
-        s"cached [${rel.sortSig}] vs requested [$sig]")
-    rel
-  }
-
-  /** Named builders for the rank-kernel relations this file owns. Each
-    * is the single authority for its (input relation, total order,
-    * cache key) triple: the graded consumers call these, and
-    * [[graft.Prewarm.sessionTier]] calls the SAME functions from the
-    * bench prewarm — so warming the memo never executes a graded
-    * `SparkEntry.queries` entry, and a drift between "what prewarm builds" and "what the
-    * query uses" is impossible by construction (r14 verdict item:
-    * Prewarm must not invoke graded entries untimed).
-    */
-  private[graft] def rankedOrdersPrice(s: SparkSession, dir: String): (DataFrame, Long) =
-    globalRanked(s,
+  private[graft] def rankedOrdersPrice(s: SparkSession, dir: String): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"$dir#orders:totalprice",
       Tables.orders(s, dir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$dir#orders:totalprice")
+      Seq(col("o_totalprice"), col("o_orderkey")), GlobalPrefix.Rank)
 
-  private[graft] def rankedCustCents(s: SparkSession, dir: String): (DataFrame, Long) = {
+  private[graft] def rankedCustCents(s: SparkSession, dir: String): GlobalPrefix.Prefixed = {
     val perCust = Tables.orders(s, dir)
       .groupBy("o_custkey")
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long")).as("cents"))
-    globalRanked(s, perCust,
-      Seq(col("cents"), col("o_custkey")), s"$dir#orders:cust-cents")
+    GlobalPrefix.memoized(s, s"$dir#orders:cust-cents", perCust,
+      Seq(col("cents"), col("o_custkey")), GlobalPrefix.Rank)
   }
 
-  private[graft] def rankedPartRevenue(s: SparkSession, dir: String): RankedRel = {
+  /** Parts by revenue descending, with the running revenue `cum_rev`. */
+  private[graft] def rankedPartRevenue(s: SparkSession, dir: String): GlobalPrefix.Prefixed = {
     val rev = Tables.lineitem(s, dir)
       .groupBy(col("l_partkey").as("partkey"))
       .agg(sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100, 0)
         .cast("long")).as("rev"))
-    rankedRel(s, rev, Seq(desc("rev"), asc("partkey")), s"abc:$dir")
+    GlobalPrefix.memoized(s, s"abc:$dir", rev, Seq(desc("rev"), asc("partkey")),
+      "cum_rev" -> col("rev"))
   }
 
   /** Equi-DEPTH histogram (the optimizer-statistics sibling of the
     * zero-filled equi-width q_histogram): k buckets with equal ROW
     * counts, each reporting its [lo, hi] value bounds and count — the
     * boundary list a cost-based planner stores for selectivity
-    * estimates on skewed columns. Bucket assignment rides the shared
-    * two-phase global rank (no single-partition window); the per-bucket
+    * estimates on skewed columns. Bucket assignment rides the
+    * [[GlobalPrefix]] rank (no single-partition window); the per-bucket
     * reduction is an 8-group map-side-combined aggregate. Bounds are
     * exact 2-dp money values, so the cross-engine hash is tolerance-free.
     */
   def histogramEquidepth(s: SparkSession, dir: String): DataFrame = {
     val k = 8
-    val (ranked, n) = rankedOrdersPrice(s, dir)
+    val ranked = rankedOrdersPrice(s, dir)
+    val n = ranked.totals("r")
     val q = n / k
     val rem = n % k
-    ranked
+    ranked.df
       .withColumn("bucket",
         when(lit(rem) =!= 0 && col("r") <= lit(rem * (q + 1)),
           expr(s"(r - 1) div ${q + 1} + 1"))
@@ -259,8 +193,8 @@ object StatsOps {
   }
 
   /** Gini coefficient of customer revenue concentration, exact: with
-    * per-customer cents x_i ranked ascending (two-phase global rank, the
-    * [[globalRanked]] kernel — never a single-partition window), G =
+    * per-customer cents x_i ranked ascending (the [[GlobalPrefix]] rank —
+    * never a single-partition window), G =
     * (2·Σ r_i·x_i − (n+1)·Σ x_i) / (n·Σ x_i). Every product is int64,
     * the sums accumulate in DECIMAL(38,0) (DuckDB HUGEINT twin), and the
     * one double division at the end routes the DuckDB side through
@@ -269,8 +203,9 @@ object StatsOps {
     */
   def giniRevenue(s: SparkSession, dir: String): DataFrame = {
     val big = DecimalType(38, 0)
-    val (ranked, n) = rankedCustCents(s, dir)
-    ranked
+    val ranked = rankedCustCents(s, dir)
+    val n = ranked.totals("r")
+    ranked.df
       .agg(sum(col("cents").cast(big)).as("sx"),
         sum((col("r") * col("cents")).cast(big)).as("srx"))
       .select(lit(n).as("n_customers"),
@@ -341,10 +276,11 @@ object StatsOps {
   def lorenzDeciles(s: SparkSession, dir: String): DataFrame = {
     val k = 10
     val big = DecimalType(38, 0)
-    val (ranked, n) = rankedCustCents(s, dir)
+    val ranked = rankedCustCents(s, dir)
+    val n = ranked.totals("r")
     val q = n / k
     val rem = n % k
-    val deciles = ranked
+    val deciles = ranked.df
       .withColumn("decile",
         when(lit(rem) =!= 0 && col("r") <= lit(rem * (q + 1)),
           expr(s"(r - 1) div ${q + 1} + 1"))
@@ -396,43 +332,26 @@ object StatsOps {
     * integer: prices become cents, ties collapse via one groupBy, and
     * the KS statistic is computed as max |ca·Nb − cb·Na| over the merged
     * support (an integer, divided into ppm only at the end), so the
-    * cross-engine hash is tolerance-free. The cumulative counts use the
-    * same two-phase shape as [[globalRanked]] — range-partition the
-    * distinct support (AQE-pinned explicit count), per-partition running
-    * sums plus broadcast per-partition offsets for EACH sample — never a
-    * single-partition window; the argmax location is tie-broken to the
-    * smallest cents via a two-stage aggregate on the bounded support.
+    * cross-engine hash is tolerance-free. The cumulative counts of both
+    * samples are [[GlobalPrefix]] running sums over the distinct support
+    * — never a single-partition window; the argmax location is
+    * tie-broken to the smallest cents in one aggregate.
     */
   def ksDrift(s: SparkSession, dir: String): DataFrame = {
-    val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val grouped = Tables.orders(s, dir)
       .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
       .select(round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
         when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L).as("a"),
         when(col("o_orderpriority") === "5-LOW", 1L).otherwise(0L).as("b"))
       .groupBy("cents").agg(sum(col("a")).as("a_n"), sum(col("b")).as("b_n"))
-      .repartitionByRange(nPart, col("cents"))
-      .sortWithinPartitions("cents")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
-    val hist = grouped.groupBy("pid")
-      .agg(sum(col("a_n")).as("pa"), sum(col("b_n")).as("pb")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    val offA: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2)).toMap
-    val offB: Map[Int, Long] = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._3)).toMap
-    val na = hist.map(_._2).sum
-    val nb = hist.map(_._3).sum
-    val w = Window.partitionBy("pid").orderBy("cents")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = grouped
-      .withColumn("ca", element_at(typedLit(offA), col("pid")) + sum(col("a_n")).over(w))
-      .withColumn("cb", element_at(typedLit(offB), col("pid")) + sum(col("b_n")).over(w))
-      .withColumn("dnum", abs(col("ca") * nb - col("cb") * na))
+    val cum = GlobalPrefix(grouped, Seq(col("cents")), "ca" -> col("a_n"), "cb" -> col("b_n"))
+    val (na, nb) = (cum.totals("ca"), cum.totals("cb"))
     // r21: the (max D, smallest-cents tie-break) readout is ONE
     // aggregate — max(struct(dnum, -cents)) — instead of a max
     // aggregate + broadcast-equality join back over a second
     // evaluation of the cumulative relation
-    cum.agg(max(struct(col("dnum").as("d"), (-col("cents")).as("negc"))).as("p"))
+    cum.df.withColumn("dnum", abs(col("ca") * nb - col("cb") * na))
+      .agg(max(struct(col("dnum").as("d"), (-col("cents")).as("negc"))).as("p"))
       .select(lit(na).as("n_a"), lit(nb).as("n_b"), col("p.d").as("d_num"),
         expr(s"(1000000 * p.d) div ${na * nb}").as("d_ppm"),
         (-col("p.negc")).as("at_cents"))
@@ -830,26 +749,17 @@ object StatsOps {
     * pipeline runs (lorenzDeciles profiles the same curve by population
     * decile; ABC cuts it by revenue thresholds).
     *
-    * Scale: part revenue is one map-side-combined groupBy; the global
-    * revenue order reuses the memoized two-phase rank kernel
-    * ([[rankedRel]]) — range repartition + per-partition windows with
-    * collected per-partition sums (#partitions rows) as offsets, never
-    * a SinglePartition window. Products run in DECIMAL(38,0) (total
-    * cents ×100 outgrows int64 at ~10^16 cents). Output: 3 class rows.
+    * Scale: part revenue is one map-side-combined groupBy; the exclusive
+    * revenue prefix is the memoized [[GlobalPrefix]] running revenue
+    * minus the part's own — never a SinglePartition window. Products run
+    * in DECIMAL(38,0) (total cents ×100 outgrows int64 at ~10^16 cents).
+    * Output: 3 class rows.
     */
   def partAbc(s: SparkSession, dir: String): DataFrame = {
-    val rel = rankedPartRevenue(s, dir)
-    val sums = rel.sorted.groupBy("pid").agg(sum(col("rev")).as("p_rev")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets: Map[Int, Long] =
-      sums.map(_._1).zip(sums.scanLeft(0L)(_ + _._2)).toMap
-    val total = sums.map(_._2).sum
-    val w = Window.partitionBy("pid").orderBy(desc("rev"), asc("partkey"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    rel.sorted
-      .withColumn("cum_excl",
-        (element_at(typedLit(offsets), col("pid")) +
-          coalesce(sum(col("rev")).over(w), lit(0L))).cast(DecimalType(38, 0)))
+    val ranked = rankedPartRevenue(s, dir)
+    val total = ranked.totals("cum_rev")
+    ranked.df
+      .withColumn("cum_excl", (col("cum_rev") - col("rev")).cast(DecimalType(38, 0)))
       .withColumn("cls",
         when(col("cum_excl") * 100 < lit(total).cast(DecimalType(38, 0)) * 80, "A")
           .when(col("cum_excl") * 100 < lit(total).cast(DecimalType(38, 0)) * 95, "B")

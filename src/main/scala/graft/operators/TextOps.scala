@@ -86,11 +86,6 @@ object TextOps {
       .orderBy(desc("freq"), asc("token"))
   }
 
-  /** Language-ID: build a top-20-tokens-per-lang lexicon from the corpus
-    * (the "training" aggregate — broadcast-sized), score each document by
-    * lexicon hits per language, predict the argmax language. A real
-    * n-gram-lexicon classifier, fully relational.
-    */
   /** Per-doc language prediction — the shared kernel of [[textLangId]]
     * and the #485 confusion readout.
     */
@@ -112,6 +107,11 @@ object TextOps {
         col("lex_lang").as("predicted_lang"), col("hits"))
   }
 
+  /** Language-ID: build a top-20-tokens-per-lang lexicon from the corpus
+    * (the "training" aggregate — broadcast-sized), score each document by
+    * lexicon hits per language, predict the argmax language. A real
+    * n-gram-lexicon classifier, fully relational.
+    */
   def textLangId(s: SparkSession, dir: String): DataFrame =
     langIdPerDoc(s, dir).orderBy("doc_id")
 
@@ -517,6 +517,17 @@ object TextOps {
       .orderBy("lang", "pick_rank")
   }
 
+  /** Luhn digit sum of the 16-char string column `acct` (valid iff
+    * % 10 == 0) — codegen'd HOF, shared by the query and the spec's
+    * known-vector pins.
+    */
+  private[graft] val Luhn16SumSql: String =
+    "aggregate(transform(sequence(1, 16), i -> CASE WHEN i % 2 = 1 " +
+      "THEN IF(CAST(substring(acct, i, 1) AS INT) * 2 > 9, " +
+      "CAST(substring(acct, i, 1) AS INT) * 2 - 9, " +
+      "CAST(substring(acct, i, 1) AS INT) * 2) " +
+      "ELSE CAST(substring(acct, i, 1) AS INT) END), 0L, (acc, x) -> acc + x)"
+
   /** Luhn checksum validation — the second stage of a PII detector
     * (regex finds digit runs; the checksum kills ~90% of false
     * positives, since a random 16-digit string passes Luhn 1 time in
@@ -532,17 +543,6 @@ object TextOps {
     * no UDF. Per-row map + one |lang|-row aggregate: linear, no
     * shuffle beyond the final group.
     */
-  /** Luhn digit sum of the 16-char string column `acct` (valid iff
-    * % 10 == 0) — codegen'd HOF, shared by the query and the spec's
-    * known-vector pins.
-    */
-  private[graft] val Luhn16SumSql: String =
-    "aggregate(transform(sequence(1, 16), i -> CASE WHEN i % 2 = 1 " +
-      "THEN IF(CAST(substring(acct, i, 1) AS INT) * 2 > 9, " +
-      "CAST(substring(acct, i, 1) AS INT) * 2 - 9, " +
-      "CAST(substring(acct, i, 1) AS INT) * 2) " +
-      "ELSE CAST(substring(acct, i, 1) AS INT) END), 0L, (acc, x) -> acc + x)"
-
   def piiLuhn(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"))

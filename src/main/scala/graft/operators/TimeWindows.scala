@@ -61,9 +61,8 @@ object TimeWindows {
     * is hours-in-range (720 at sf0.1, ~10⁵ for a decade), independent of
     * event count. The 100 TB of raw events are reduced by the hour
     * aggregate BEFORE the window; the single-partition stage never sees
-    * more than ~10⁵ rows. (Contrast the two-phase global rank in
-    * StatsOps.ntileBuckets, needed when the windowed relation itself
-    * scales with the data.)
+    * more than ~10⁵ rows. (Contrast the [[GlobalPrefix]] kernel, needed
+    * when the windowed relation itself scales with the data.)
     */
   def tsGapfill(s: SparkSession, dir: String): DataFrame = {
     val hourly = Tables.events(s, dir)

@@ -120,6 +120,13 @@ object TrainSplitOps {
       .orderBy("fold")
   }
 
+  /** [[GlobalPrefix.memoized]] rank over (o_orderdate, o_orderkey),
+    * shared with the bench prewarm. */
+  private[graft] def rankedOrdersDate(s: SparkSession, dir: String): GlobalPrefix.Prefixed =
+    GlobalPrefix.memoized(s, s"$dir#orders:date_cluster",
+      Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
+      Seq(col("o_orderdate"), col("o_orderkey")), GlobalPrefix.Rank)
+
   /** #362 Zone-map pruning effectiveness, insertion layout vs
     * date-clustered layout: both slice orders into 1000-row files,
     * record per-file min/max `o_orderdate` (exactly the footer stats a
@@ -130,26 +137,18 @@ object TrainSplitOps {
     * the whole timeline (nothing prunes); clustering by date makes
     * min/max ranges disjoint (everything outside the window prunes).
     *
-    * Scale: the clustered file assignment is the two-phase distributed
-    * rank kernel ([[StatsOps.globalRanked]]: range-repartition +
-    * per-partition offsets — no single-partition window); file stats
+    * Scale: the clustered file assignment is the [[GlobalPrefix]] rank
+    * (no single-partition window); file stats
     * are one map-side-combined aggregate per layout; the report is a
     * 2-row reduction over the FILE-grain metadata relation (rows =
     * corpus/1000), which is precisely how engine scan planners consume
     * zone maps.
     */
-  /** Rank-kernel builder shared with the bench prewarm (see
-    * [[StatsOps.rankedOrdersPrice]] for the discipline). */
-  private[graft] def rankedOrdersDate(s: SparkSession, dir: String): (DataFrame, Long) =
-    StatsOps.globalRanked(s,
-      Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate")),
-      Seq(col("o_orderdate"), col("o_orderkey")), s"$dir#orders:date_cluster")
-
   def zonemapPrune(s: SparkSession, dir: String): DataFrame = {
     val lo = "1996-03-01"
     val hi = "1996-09-01"
     val rows = 1000L
-    val (ranked, _) = rankedOrdersDate(s, dir)
+    val ranked = rankedOrdersDate(s, dir).df
     val clustered = ranked.select(lit("date_clustered").as("layout"),
       expr(s"(r - 1) div ${rows}L").as("file_id"), col("o_orderdate"))
     val insertion = Tables.orders(s, dir)

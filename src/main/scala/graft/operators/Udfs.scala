@@ -5,12 +5,6 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** §2.10 user-defined function surface. UDFs are deliberately the LAST
-  * resort in this engine (they break whole-stage codegen and predicate
-  * pushdown across the call); these two queries exist to prove the
-  * surface, and their scaladoc records the rule: prefer column
-  * expressions, then catalyst expressions (graft.functions), then udf().
-  */
 /** Exact-decimal weighted-average buffer: java BigDecimal sums are
   * associative, so the merge order of partial aggregates cannot change the
   * result — the UDAF analog of the Det policy. Top-level (not nested
@@ -18,6 +12,12 @@ import graft.Tables
   */
 case class WBuf(num: BigDecimal, den: BigDecimal)
 
+/** §2.10 user-defined function surface. UDFs are deliberately the LAST
+  * resort in this engine (they break whole-stage codegen and predicate
+  * pushdown across the call); these two queries exist to prove the
+  * surface, and their scaladoc records the rule: prefer column
+  * expressions, then catalyst expressions (graft.functions), then udf().
+  */
 object Udfs {
 
   /** #58 registered scalar Scala UDF: a string normalizer (the reference's

@@ -111,15 +111,6 @@ class KvLogScan(path: String, required: StructType, pushed: Array[Filter],
     new KvLogMicroBatchStream(path, required, pushed, mode)
 }
 
-/** File-set offsets: an offset IS the sorted list of visible data files,
-  * so a micro-batch is exactly the files that appeared since the last
-  * one — the same discovery model as Spark's own file stream source,
-  * minimized. Offsets serialize as a JSON array (checkpoint-stable);
-  * files are assumed append-only and immutable once visible, the
-  * standard log-directory contract. Pushed filters and pruning flow
-  * into each micro-batch's readers unchanged — streaming reads get the
-  * same leaf-level pushdown as batch.
-  */
 /** Offset = the complete visible file list (set-diff per batch). This is
   * deliberately the CORRECT-under-any-naming design, not the compact one:
   * a high-water-mark offset (last processed name) admits only
@@ -136,6 +127,15 @@ class KvLogOffset(val files: Seq[String]) extends Offset {
       .mkString("[", ",", "]")
 }
 
+/** File-set offsets: an offset IS the sorted list of visible data files,
+  * so a micro-batch is exactly the files that appeared since the last
+  * one — the same discovery model as Spark's own file stream source,
+  * minimized. Offsets serialize as a JSON array (checkpoint-stable);
+  * files are assumed append-only and immutable once visible, the
+  * standard log-directory contract. Pushed filters and pruning flow
+  * into each micro-batch's readers unchanged — streaming reads get the
+  * same leaf-level pushdown as batch.
+  */
 class KvLogMicroBatchStream(path: String, required: StructType, pushed: Array[Filter],
     mode: String = "permissive") extends MicroBatchStream {
 

@@ -430,9 +430,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // input folds to ONE partition after the fact. The kernel pins the
     // exchange with an explicit count — verify the materialized pid
     // histogram is actually multi-partition.
-    val (ranked, n) = operators.StatsOps.globalRanked(spark,
+    val prefixed = operators.GlobalPrefix.memoized(spark, s"$sfDir#orders:totalprice",
       Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$sfDir#orders:totalprice")
+      Seq(col("o_totalprice"), col("o_orderkey")), operators.GlobalPrefix.Rank)
+    val (ranked, n) = (prefixed.df, prefixed.totals("r"))
     val nPids = ranked.select("pid").distinct().count()
     assert(nPids > 1, s"rank kernel collapsed to $nPids partition(s) at runtime")
     assert(ranked.agg(min("r"), max("r")).head() ===

@@ -125,35 +125,40 @@ class Round14Spec extends AnyFunSuite with SparkFixture {
 
   test("DerivedFiles: concurrent builders publish exactly one complete copy") {
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    val file = operators.DerivedFiles(spark, sfDir,
-      s"test_concurrent_${System.nanoTime()}", "documents")
-    val path = file.path
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    val gate = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(4)
-    val futures = (1 to 4).map { _ =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          gate.await()
-          file.files { scratch =>
-            builds.incrementAndGet()
-            import spark.implicits._
-            Seq(1L, 2L, 3L).toDF("v").write.parquet(scratch)
+    // keyed on a temp copy of the documents table, so the fixture cleanup
+    // deletes the published dir with it
+    withTempFixture("concurrent-publish") { tmp =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
+        java.nio.file.Paths.get(s"$tmp/documents.parquet"))
+      val file = operators.DerivedFiles(spark, tmp, "test_concurrent", "documents")
+      val path = file.path
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      val gate = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(4)
+      val futures = (1 to 4).map { _ =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            gate.await()
+            file.files { scratch =>
+              builds.incrementAndGet()
+              import spark.implicits._
+              Seq(1L, 2L, 3L).toDF("v").write.parquet(scratch)
+            }
           }
-        }
-      })
+        })
+      }
+      gate.countDown()
+      pool.shutdown()
+      assert(pool.awaitTermination(120, TimeUnit.SECONDS))
+      futures.foreach(_.get()) // surfaces any builder exception
+      assert(builds.get() === 1, s"expected 1 build, got ${builds.get()}")
+      assert(new java.io.File(path, "_SUCCESS").exists())
+      assert(spark.read.parquet(path).count() === 3L)
+      // no leftover scratch directories
+      val parent = new java.io.File(path).getParentFile
+      val strays = parent.listFiles().filter(_.getName.startsWith(
+        new java.io.File(path).getName + ".build-"))
+      assert(strays.isEmpty, s"scratch left behind: ${strays.mkString(",")}")
     }
-    gate.countDown()
-    pool.shutdown()
-    assert(pool.awaitTermination(120, TimeUnit.SECONDS))
-    futures.foreach(_.get()) // surfaces any builder exception
-    assert(builds.get() === 1, s"expected 1 build, got ${builds.get()}")
-    assert(new java.io.File(path, "_SUCCESS").exists())
-    assert(spark.read.parquet(path).count() === 3L)
-    // no leftover scratch directories
-    val parent = new java.io.File(path).getParentFile
-    val strays = parent.listFiles().filter(_.getName.startsWith(
-      new java.io.File(path).getName + ".build-"))
-    assert(strays.isEmpty, s"scratch left behind: ${strays.mkString(",")}")
   }
 }

@@ -11,17 +11,13 @@ import org.apache.spark.sql.functions._
   *  2. the zero-variance NULL contracts added to Welch ANOVA,
   *     Jonckheere-Terpstra and the length-lognormality screen
   *     (constant-data fixtures must yield NULL readouts, never the
-  *     non-ANSI NaN→0 cast the r17 ADVICE flagged);
-  *  3. the splitUniformity/AD empty-corpus zero-row contract.
+  *     non-ANSI NaN→0 cast the r17 ADVICE flagged).
   */
 class Round18Spec extends AnyFunSuite with SparkFixture {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def tmpFixture(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
 
   // ---- 1. fixed-size anchor draws ------------------------------------
 
@@ -74,31 +70,32 @@ class Round18Spec extends AnyFunSuite with SparkFixture {
     } ++ (0 until 20).map { i =>
       (1000L + i, Array.tabulate(4)(d => ((i * (d + 3) + 7 * d) % 53).toFloat), 1)
     }).toDF("vec_id", "embedding", "label")
-    val tmp = tmpFixture("graft_twonn_cap")
-    vecs.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val rows = operators.SeriesOps.embedIntrinsicDim(spark, tmp).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val byLabel = rows.map(t => t._1 -> t).toMap
-    assert(byLabel(0)._2 === 128L, "big block must anchor exactly 128 points")
-    assert(byLabel(1)._2 === 20L, "small block anchors every point")
-    // exact replay of the capped estimator for the big block
-    val pts = (0 until 150).map { i =>
-      (i.toLong,
-        Array.tabulate(4)(d => math.floor(
-          ((i * (d + 2) + d) % 193).toFloat.toDouble * 1e6).toLong))
+    withTempFixture("graft_twonn_cap") { tmp =>
+      vecs.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      val rows = operators.SeriesOps.embedIntrinsicDim(spark, tmp).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      val byLabel = rows.map(t => t._1 -> t).toMap
+      assert(byLabel(0)._2 === 128L, "big block must anchor exactly 128 points")
+      assert(byLabel(1)._2 === 20L, "small block anchors every point")
+      // exact replay of the capped estimator for the big block
+      val pts = (0 until 150).map { i =>
+        (i.toLong,
+          Array.tabulate(4)(d => math.floor(
+            ((i * (d + 2) + d) % 193).toFloat.toDouble * 1e6).toLong))
+      }
+      val anchorIds = pts.map(_._1)
+        .sortBy(id => (md5hex(s"twonn:$id"), id)).take(128).toSet
+      val terms = pts.filter(p => anchorIds(p._1)).map { case (id, u) =>
+        val ds = pts.filter(_._1 != id).map { case (oid, v) =>
+          (u.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum, oid)
+        }.sorted
+        assert(ds.head._1 > 0L, "fixture must have no duplicate points")
+        math.floor(math.log(ds(1)._1.toDouble) * 1e9).toLong -
+          math.floor(math.log(ds.head._1.toDouble) * 1e9).toLong
+      }
+      assert(byLabel(0)._3 === terms.sum)
+      assert(byLabel(0)._4 === 128L * 2000000000000L / terms.sum)
     }
-    val anchorIds = pts.map(_._1)
-      .sortBy(id => (md5hex(s"twonn:$id"), id)).take(128).toSet
-    val terms = pts.filter(p => anchorIds(p._1)).map { case (id, u) =>
-      val ds = pts.filter(_._1 != id).map { case (oid, v) =>
-        (u.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum, oid)
-      }.sorted
-      assert(ds.head._1 > 0L, "fixture must have no duplicate points")
-      math.floor(math.log(ds(1)._1.toDouble) * 1e9).toLong -
-        math.floor(math.log(ds.head._1.toDouble) * 1e9).toLong
-    }
-    assert(byLabel(0)._3 === terms.sum)
-    assert(byLabel(0)._4 === 128L * 2000000000000L / terms.sum)
   }
 
   // ---- 2. zero-variance NULL contracts --------------------------------
@@ -112,13 +109,14 @@ class Round18Spec extends AnyFunSuite with SparkFixture {
       (3L, 7.0, "N", ts), (4L, 7.0, "N", ts),
       (5L, 9.0, "R", ts), (6L, 9.0, "R", ts))
       .toDF("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate")
-    val tmp = tmpFixture("graft_welch_zv")
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val r = operators.NonparamOps.welchAnova(spark, tmp).collect()
-    assert(r.length === 1)
-    assert(r(0).isNullAt(r(0).fieldIndex("f_milli")))
-    assert(r(0).isNullAt(r(0).fieldIndex("df2_milli")))
-    assert(r(0).isNullAt(r(0).fieldIndex("variance_unequal_means_differ_05")))
+    withTempFixture("graft_welch_zv") { tmp =>
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      val r = operators.NonparamOps.welchAnova(spark, tmp).collect()
+      assert(r.length === 1)
+      assert(r(0).isNullAt(r(0).fieldIndex("f_milli")))
+      assert(r(0).isNullAt(r(0).fieldIndex("df2_milli")))
+      assert(r(0).isNullAt(r(0).fieldIndex("variance_unequal_means_differ_05")))
+    }
   }
 
   test("Jonckheere yields a NULL z on all-tied data") {
@@ -129,13 +127,14 @@ class Round18Spec extends AnyFunSuite with SparkFixture {
     // every quantity identical -> tie-corrected null variance is 0
     val li = Seq((1L, 5.0), (1L, 5.0), (2L, 5.0), (2L, 5.0))
       .toDF("l_orderkey", "l_quantity")
-    val tmp = tmpFixture("graft_jt_zv")
-    orders.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-    li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
-    val r = operators.NonparamOps.jonckheere(spark, tmp).collect()
-    assert(r.length === 1)
-    assert(r(0).isNullAt(r(0).fieldIndex("z_milli")))
-    assert(r(0).isNullAt(r(0).fieldIndex("trend_significant_05")))
+    withTempFixture("graft_jt_zv") { tmp =>
+      orders.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
+      li.write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
+      val r = operators.NonparamOps.jonckheere(spark, tmp).collect()
+      assert(r.length === 1)
+      assert(r(0).isNullAt(r(0).fieldIndex("z_milli")))
+      assert(r(0).isNullAt(r(0).fieldIndex("trend_significant_05")))
+    }
   }
 
   test("lognormality screen yields NULL moments on constant-length sources") {
@@ -144,20 +143,21 @@ class Round18Spec extends AnyFunSuite with SparkFixture {
       (1L, "aaa", "en", "const", 300L), (2L, "bbb", "en", "const", 300L),
       (3L, "ccc", "en", "varied", 100L), (4L, "dddd", "en", "varied", 900L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = tmpFixture("graft_lognorm_zv")
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = operators.CorpusOps.textLengthLognormality(spark, tmp)
-      .collect().map(r => r.getString(0) -> r).toMap
-    val c = rows("const")
-    assert(c.isNullAt(c.fieldIndex("skew_micro")))
-    assert(c.isNullAt(c.fieldIndex("kurt_micro")))
-    assert(c.isNullAt(c.fieldIndex("jb_milli")))
-    assert(c.isNullAt(c.fieldIndex("lognormal_rejected_05")))
-    assert(!c.isNullAt(c.fieldIndex("mean_ln_micro")),
-      "the mean stays defined on constant data")
-    val v = rows("varied")
-    assert(!v.isNullAt(v.fieldIndex("jb_milli")),
-      "non-degenerate sources keep their readouts")
+    withTempFixture("graft_lognorm_zv") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val rows = operators.CorpusOps.textLengthLognormality(spark, tmp)
+        .collect().map(r => r.getString(0) -> r).toMap
+      val c = rows("const")
+      assert(c.isNullAt(c.fieldIndex("skew_micro")))
+      assert(c.isNullAt(c.fieldIndex("kurt_micro")))
+      assert(c.isNullAt(c.fieldIndex("jb_milli")))
+      assert(c.isNullAt(c.fieldIndex("lognormal_rejected_05")))
+      assert(!c.isNullAt(c.fieldIndex("mean_ln_micro")),
+        "the mean stays defined on constant data")
+      val v = rows("varied")
+      assert(!v.isNullAt(v.fieldIndex("jb_milli")),
+        "non-degenerate sources keep their readouts")
+    }
   }
 
   // ---- 2b. r18 new-operator exact driver replays -----------------------
@@ -708,17 +708,5 @@ class Round18Spec extends AnyFunSuite with SparkFixture {
       def opt(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
       assert((opt(2), opt(3), opt(4)) === e, s"${r.getString(0)} $day")
     }
-  }
-
-  // ---- 3. empty-corpus zero-row contracts ------------------------------
-
-  test("splitUniformity and AD audit emit zero rows on an empty corpus") {
-    import spark.implicits._
-    val docs = Seq.empty[(Long, String, String, String, Long)]
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = tmpFixture("graft_split_empty")
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    assert(operators.PipelineOps.splitUniformity(spark, tmp).count() === 0L)
-    assert(operators.PipelineOps.splitUniformityAd(spark, tmp).count() === 0L)
   }
 }

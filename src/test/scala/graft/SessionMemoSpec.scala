@@ -70,23 +70,28 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
 
   test("rank-kernel memo: same key reuses the build, collision guard trips") {
     import org.apache.spark.sql.functions._
+    import operators.GlobalPrefix
     // two calls with the same (session, key) must return the SAME
     // checkpointed relation (no second build), and a key reused with a
-    // DIFFERENT total order must fail loudly instead of silently serving
-    // the wrong ranking
-    val rel1 = operators.StatsOps.rankedRel(spark,
-      Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$sfDir#orders:totalprice")
-    val rel2 = operators.StatsOps.rankedRel(spark,
-      Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-      Seq(col("o_totalprice"), col("o_orderkey")), s"$sfDir#orders:totalprice")
+    // DIFFERENT total order or DIFFERENT weights must fail loudly instead
+    // of silently serving the wrong prefix
+    def prices = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice"))
+    val key = s"$sfDir#orders:totalprice"
+    val order = Seq(col("o_totalprice"), col("o_orderkey"))
+    val rel1 = GlobalPrefix.memoized(spark, key, prices, order, GlobalPrefix.Rank)
+    val rel2 = GlobalPrefix.memoized(spark, key, prices, order, GlobalPrefix.Rank)
     assert(rel1 eq rel2, "same key must return the memoized instance")
     val ex = intercept[IllegalArgumentException] {
-      operators.StatsOps.rankedRel(spark,
-        Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice")),
-        Seq(col("o_orderkey")), s"$sfDir#orders:totalprice")
+      GlobalPrefix.memoized(spark, key, prices, Seq(col("o_orderkey")), GlobalPrefix.Rank)
     }
     assert(ex.getMessage.contains("different sort order"))
+    for (weights <- Seq(Seq("r" -> lit(2L)), Seq("cum" -> lit(1L)),
+        Seq(GlobalPrefix.Rank, "cum" -> col("o_orderkey")))) {
+      val exW = intercept[IllegalArgumentException] {
+        GlobalPrefix.memoized(spark, key, prices, order, weights: _*)
+      }
+      assert(exW.getMessage.contains("or weights"), weights.toString)
+    }
   }
 
   test("WeakReference and WeakHashMap appear in src/main only in SessionMemo and Tables") {

@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
@@ -10,8 +12,47 @@ import org.scalatest.Suite
 trait SparkFixture { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a fresh temp dir for fixture tables, then deletes the
+    * dir and the derived files keyed on its tables
+    * ([[SparkFixture.deleteDerived]]).
+    */
+  def withTempFixture[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.getPath)
+    finally {
+      SparkFixture.deleteDerived(spark, dir.getPath)
+      SparkFixture.deleteRecursively(dir)
+    }
+  }
 }
 
 object SparkFixture {
   lazy val session: SparkSession = GraftSession(2)
+
+  /** Deletes every [[operators.DerivedFiles]] dir keyed on the `.parquet`
+    * tables of `dir` as they stand now, for any ordered choice of them as
+    * inputs. A key hashes each input's dir path, length and mtime, so a
+    * build keyed on another dir (the shared test data included) never
+    * matches. A test that rewrites a fixture table calls this before the
+    * rewrite, for the builds over the old version.
+    */
+  def deleteDerived(s: SparkSession, dir: String): Unit = {
+    val tables = Option(new File(dir).list()).toSeq.flatten
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
+    if (tables.nonEmpty) {
+      val keys = (1 to tables.size).flatMap(tables.combinations).flatMap(_.permutations)
+        .map(inputs => operators.DerivedFiles(s, dir, "probe", inputs: _*).key)
+      val root = new File(operators.DerivedFiles(s, dir, "probe", tables.head).path).getParentFile
+      // `<name>_<key>`, and a `.build-*` scratch left by a failed build
+      Option(root.listFiles()).toSeq.flatten
+        .filter(f => keys.exists(k => f.getName.contains(s"_$k")))
+        .foreach(deleteRecursively)
+    }
+  }
+
+  def deleteRecursively(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
+  }
 }

@@ -54,6 +54,11 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    outputs = {os.path.basename(d) for d in glob.glob(f"{out_dir}/q_*")}
+    unknown = sorted(only - set(oracle) - outputs)
+    if unknown:
+        print(f"unknown queries (no oracle, no Spark output): {' '.join(unknown)}")
+        sys.exit(1)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
@@ -106,10 +111,9 @@ def main():
             print(f"PASS {name} ({len(srows)} rows)")
             n_pass += 1
     # queries without oracle: rows-only presence check
-    for d in sorted(glob.glob(f"{out_dir}/q_*")):
-        name = os.path.basename(d)
-        if name not in oracle:
-            pq = glob.glob(f"{d}/*.parquet")
+    for name in sorted(outputs):
+        if name not in oracle and (not only or name in only):
+            pq = glob.glob(f"{out_dir}/{name}/*.parquet")
             n = con.execute(f"SELECT count(*) FROM '{pq[0]}'").fetchone()[0] if pq else 0
             print(f"INFO {name}: no oracle, rows={n}")
     print(f"== {n_pass} pass, {n_fail} fail ==")
