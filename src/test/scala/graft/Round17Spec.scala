@@ -1022,6 +1022,36 @@ class Round17Spec extends AnyFunSuite with SparkFixture {
 
   // ---- 12. exact driver replays for #493-#495 (ninth r17 batch) --------
 
+  test("AD uniformity matches a per-row driver replay (validates the tie closed form)") {
+    val ids = Tables.documents(spark, sfDir).select(col("doc_id")).collect()
+      .map(_.getLong(0))
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val us = ids.map { id =>
+      java.lang.Long.parseLong(md.digest(s"split:$id".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.substring(0, 8), 16)
+    }.sorted
+    val m = 4294967296L
+    val n = us.length.toLong
+    def lnN(x: Long) = math.floor(math.log(x.toDouble) * 1e9).toLong
+    val ln2M = lnN(2 * m)
+    // per-ROW coefficients (the operator uses the per-tie-run closed
+    // form; equality here proves the collapse)
+    var sS = BigInt(0)
+    us.zipWithIndex.foreach { case (u, idx) =>
+      val i = idx + 1L
+      sS += BigInt(2 * i - 1) * (lnN(2 * u + 1) - ln2M) +
+        BigInt(2 * (n - i) + 1) * (lnN(2 * (m - u) - 1) - ln2M)
+    }
+    val a2 = (BigInt(-n) * 1000000000 - sS / n).toLong
+    val row = operators.PipelineOps.splitUniformityAd(spark, sfDir).collect()
+    assert(row.length === 1)
+    assert(row(0).getLong(0) === n, "n_docs")
+    assert(row(0).getLong(1) === a2, "a2_nano")
+    assert(row(0).getBoolean(2) === (a2 > 2492000000L))
+    assert(!row(0).getBoolean(2),
+      "the house splitter must pass the tail-weighted audit too")
+  }
+
   test("phash bit balance is the exact per-bit popcount of the hashes") {
     val hashes = operators.Multimodal.multimodalPhash(spark, sfDir)
       .select("phash").collect().map(_.getLong(0))
