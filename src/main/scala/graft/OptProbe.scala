@@ -1,28 +1,134 @@
 package graft
 
-/** Steady-state A/B probe: runs each named query N times in ONE warm
-  * JVM (the [[GraftSession]] Bench runs on) and prints every iteration's
-  * seconds. The per-fresh-JVM subset bench carries 1–3 s of JIT/codegen
-  * noise — far larger than most plan-level effects — so optimization
-  * A/Bs compare iterations ≥2 here (steady state), with the full bench
-  * as the final arbiter. Dev tool only; never run by the driver.
-  * Usage: runMain graft.OptProbe <sfDir> <reps> <queryKey ...>
+import java.io.File
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
+/** Dev tool for same-JVM A/Bs; never run by the driver. Two modes:
+  *
+  *  - probe: runs each named query `reps` times in ONE warm JVM (the
+  *    [[GraftSession]] Bench runs on) and prints every iteration's seconds.
+  *    The per-fresh-JVM subset bench carries 1–3 s of JIT/codegen noise —
+  *    far larger than most plan-level effects — so optimization A/Bs
+  *    compare iterations ≥2 here (steady state), with the full bench as the
+  *    final arbiter.
+  *    Usage: runMain graft.OptProbe <sfDir> <reps> <queryKey ...>
+  *  - survey: times every registered query (or the named ones) over each
+  *    dir under [[GraftSession.Generated]] and [[GraftSession.Interpreted]]
+  *    execution, min of `reps`, cold (a new session, Spark's codegen cache
+  *    emptied) and warm (again in the last cold run's session), and writes
+  *    one JSON row per dir and query: the seconds, the cold compiles and
+  *    the query's scan bytes (file bytes of the parquet relations in its
+  *    optimized plan). [[Prewarm]] runs over each dir first, and the modes
+  *    alternate which runs first. The file is rewritten after every query,
+  *    so a cut run keeps its rows.
+  *    Usage: runMain graft.OptProbe survey <out.json> <reps> <sfDir>[,<sfDir>...] [queryKey ...]
   */
 object OptProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val reps = args(1).toInt
-    val keys = args.drop(2).toSeq
+  def main(args: Array[String]): Unit =
+    if (args(0) == "survey")
+      survey(args(1), args(2).toInt, args(3).split(",").toSeq, args.drop(4).toSeq)
+    else probe(args(0), args(1).toInt, args.drop(2).toSeq)
+
+  private def probe(sfDir: String, reps: Int, keys: Seq[String]): Unit = {
     val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       val fn = SparkEntry.queries(k)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times = (1 to reps).map(_ => timed(spark, fn, sfDir)._1)
       println(s"PROBE $k " + times.map(t => f"$t%.3f").mkString(" "))
+    }
+    spark.stop()
+  }
+
+  /** Builds and materializes one query to the noop sink: (seconds, plan). */
+  private def timed(s: SparkSession, fn: (SparkSession, String) => DataFrame,
+                    dir: String): (Double, DataFrame) = {
+    val t0 = System.nanoTime()
+    val df = fn(s, dir)
+    df.write.format("noop").mode("overwrite").save()
+    ((System.nanoTime() - t0) / 1e9, df)
+  }
+
+  /** Spark's JVM-wide cache of compiled classes, emptied so that the next
+    * query compiles its generated code again, as a first run in a JVM does. */
+  private lazy val codegenCache: AnyRef = {
+    val f = CodeGenerator.getClass.getDeclaredField("cache")
+    f.setAccessible(true)
+    f.get(CodeGenerator)
+  }
+
+  private def clearCodegenCache(): Unit =
+    codegenCache.getClass.getMethod("invalidateAll").invoke(codegenCache): Unit
+
+  /** File bytes of the distinct parquet relations a plan scans. */
+  private def scanBytes(df: DataFrame): Long =
+    df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        val r = l.relation.asInstanceOf[HadoopFsRelation]
+        r.location.rootPaths.map(_.toString).sorted.mkString(",") -> r.location.sizeInBytes
+    }.toMap.values.sum
+
+  private def survey(out: String, reps: Int, dirs: Seq[String], only: Seq[String]): Unit = {
+    SparkEntry.requireKnown(only.toSet, "survey")
+    val spark = GraftSession()
+    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (only.nonEmpty) only else SparkEntry.definitions.keys.toSeq.sorted
+    val modes = Seq("generated" -> GraftSession.Generated,
+      "interpreted" -> GraftSession.Interpreted)
+    def inTurn(r: Int) = if (r % 2 == 0) modes else modes.reverse
+    val rows = mutable.ArrayBuffer.empty[java.util.Map[String, Any]]
+    val mapper = new ObjectMapper()
+    // derived files are built once up front, so that no query's time holds a build
+    dirs.foreach(Prewarm(spark, _))
+    for (dir <- dirs; name <- names) {
+      val fn = SparkEntry.definitions(name)
+      val row = mutable.LinkedHashMap[String, Any]("dir" -> dir,
+        "table_bytes" -> GraftSession.tableBytes(dir), "query" -> name)
+      try {
+        val cold, warm = mutable.Map.empty[String, Double].withDefaultValue(Double.MaxValue)
+        val compiles = mutable.Map.empty[String, Long]
+        val sessions = mutable.Map.empty[String, SparkSession]
+        var plan: DataFrame = null
+        for (r <- 0 until reps; (mode, conf) <- inTurn(r)) {
+          clearCodegenCache()
+          val s = spark.newSession()
+          GraftSession.install(s)
+          conf.foreach { case (k, v) => s.conf.set(k, v) }
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          cold(mode) = cold(mode) min timed(s, fn, dir)._1
+          if (r == 0) compiles(mode) = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+          sessions(mode) = s
+        }
+        for (r <- 0 until reps; (mode, _) <- inTurn(r)) {
+          val (t, df) = timed(sessions(mode), fn, dir)
+          warm(mode) = warm(mode) min t
+          plan = df
+        }
+        row("scan_bytes") = scanBytes(plan)
+        for ((mode, _) <- modes) {
+          row(s"cold_${mode}_s") = cold(mode)
+          row(s"warm_${mode}_s") = warm(mode)
+          row(s"cold_${mode}_compiles") = compiles(mode)
+        }
+      } catch { case NonFatal(e) =>
+        row("error") = s"${e.getClass.getName}: ${e.getMessage}".take(300)
+      }
+      println(s"SURVEY ${row.mkString(" ")}")
+      rows += row.asJava
+      val doc = Map[String, Any]("reps" -> reps,
+        "cpus" -> spark.sparkContext.defaultParallelism,
+        "jvm_max_heap_mb" -> Runtime.getRuntime.maxMemory / (1 << 20),
+        "rows" -> rows.asJava).asJava
+      mapper.writerWithDefaultPrettyPrinter().writeValue(new File(out), doc)
     }
     spark.stop()
   }

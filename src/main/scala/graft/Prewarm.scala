@@ -73,7 +73,7 @@ object Prewarm {
     * consumers: orders:totalprice → q_ntile + q_histogram_equidepth,
     * orders:cust-cents → q_gini + q_lorenz_deciles, docs:doc_id →
     * q_sample_index + q_negative_pairs, fsweep → q_quality_filter_sweep +
-    * q_rank_exposure;
+    * q_eval_rank_exposure;
     * `rank:conformal_resid` also builds the residual and per-order
     * relations). Builders are eager — a memo miss localCheckpoints or
     * collects — so invoking the builder IS the build. The `rank:`/`memo:`
@@ -100,7 +100,7 @@ object Prewarm {
 
   def apply(s: SparkSession, dir: String): Seq[(String, Double)] = {
     // the builders are called directly: install here, as for a graded query
-    GraftSession.install(s)
+    GraftSession.install(s, dir)
     (fileTier ++ sessionTier).map { case (name, build) =>
       val t0 = System.nanoTime()
       try build(s, dir)

@@ -60,15 +60,20 @@ object SparkEntry {
       (SqlSuite4.queries, SqlSuite4.oracles),
       (NonparamOps.queries, NonparamOps.oracles))
 
+  /** The query functions as the modules define them, unwrapped. */
+  private[graft] lazy val definitions: Map[String, (SparkSession, String) => DataFrame] =
+    modules.iterator.map(_._1).reduce(_ ++ _)
+
   /** One entry per implemented operator from SURVEY.md §2. Each function
     * installs the graft functions and plan rules into the session it is
-    * given ([[GraftSession.install]]), so a query builds the same plan in
+    * given, and sets the session's codegen mode for the dir
+    * (`GraftSession.install(s, dir)`), so a query builds the same plan in
     * any session, including a caller's plain one or a `newSession()`.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.map(_._1).reduce(_ ++ _).map { case (name, fn) =>
+    definitions.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => {
-        GraftSession.install(s)
+        GraftSession.install(s, dir)
         fn(s, dir)
       })
     }

@@ -37,16 +37,17 @@ class GeoJsonSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("whole-file read path parses a GeoJSON document from disk") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_gj").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/districts.geojson"), fc)
-    val rows = GeoJson.read(spark, s"$tmp/districts.geojson").collect()
-    assert(rows.length === 3)
-    assert(rows.map(_.getString(1)).toSet === Set("downtown", "islands"))
-    // r20: every row carries its source file (appended, so positions
-    // 0-3 are unchanged) — without it a directory read's polygons were
-    // unattributable (feature_idx restarts per document)
-    assert(rows.forall(_.getString(4).endsWith("districts.geojson")),
-      rows.map(_.getString(4)).mkString(";"))
+    withTempFixture("graft_gj") { tmp =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$tmp/districts.geojson"), fc)
+      val rows = GeoJson.read(spark, s"$tmp/districts.geojson").collect()
+      assert(rows.length === 3)
+      assert(rows.map(_.getString(1)).toSet === Set("downtown", "islands"))
+      // r20: every row carries its source file (appended, so positions
+      // 0-3 are unchanged) — without it a directory read's polygons were
+      // unattributable (feature_idx restarts per document)
+      assert(rows.forall(_.getString(4).endsWith("districts.geojson")),
+        rows.map(_.getString(4)).mkString(";"))
+    }
   }
 
   test("malformed documents yield zero rows instead of failing the job") {

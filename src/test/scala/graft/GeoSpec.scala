@@ -46,20 +46,22 @@ class GeoSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned write produces per-key directories and reads back (#5)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pw").toString + "/t"
-    val events = Tables.events(spark, sfDir)
-      .withColumn("d", to_date(col("ts")))
-    events.write.partitionBy("d").mode("overwrite").parquet(dir)
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith("d=")))
-    val back = spark.read.parquet(dir)
-    assert(back.count() === events.count())
-    // partition pruning: a d= filter scans only matching partitions
-    val oneDay = back.filter(col("d") === "2024-01-03")
-    val scan = oneDay.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    withTempFixture("graft_pw") { fixture =>
+      val dir = s"$fixture/t"
+      val events = Tables.events(spark, sfDir)
+        .withColumn("d", to_date(col("ts")))
+      events.write.partitionBy("d").mode("overwrite").parquet(dir)
+      val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
+      assert(dirs.nonEmpty && dirs.forall(_.startsWith("d=")))
+      val back = spark.read.parquet(dir)
+      assert(back.count() === events.count())
+      // partition pruning: a d= filter scans only matching partitions
+      val oneDay = back.filter(col("d") === "2024-01-03")
+      val scan = oneDay.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+      assert(scan.exists(_.metadata.get("PartitionFilters").exists(_.contains("d"))),
+        scan.map(_.metadata).toString)
     }
-    assert(scan.exists(_.metadata.get("PartitionFilters").exists(_.contains("d"))),
-      scan.map(_.metadata).toString)
   }
 }

@@ -12,12 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IngestRobustnessSpec extends AnyFunSuite with SparkFixture {
 
-  private def writeJsonl(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
-    java.nio.file.Files.write(dir.resolve("data.jsonl"),
-      String.join("\n", lines: _*).getBytes)
-    dir.toString
-  }
+  /** Runs `body` on a temp dir holding `lines` as one JSONL file. */
+  private def withJsonl[T](lines: Seq[String])(body: String => T): T =
+    withTempFixture("graft_ingest") { dir =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, "data.jsonl"),
+        String.join("\n", lines: _*).getBytes)
+      body(dir)
+    }
 
   private val schema = StructType(Seq(
     StructField("id", LongType),
@@ -25,33 +26,35 @@ class IngestRobustnessSpec extends AnyFunSuite with SparkFixture {
     StructField("_corrupt_record", StringType)))
 
   test("PERMISSIVE mode quarantines malformed JSON rows instead of failing") {
-    val path = writeJsonl(Seq(
+    withJsonl(Seq(
       """{"id": 1, "v": 1.5}""",
       """{"id": 2, "v": }""",          // malformed
       """{"id": 3, "v": 3.5}""",
-      """not json at all"""))
-    val df = spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-    df.cache()
-    try {
-      val good = df.filter(col("_corrupt_record").isNull)
-      val bad = df.filter(col("_corrupt_record").isNotNull)
-      assert(good.count() === 2)
-      assert(bad.count() === 2)
-      assert(good.select(sum("v")).collect().head.getDouble(0) === 5.0)
-    } finally { df.unpersist(); () }
+      """not json at all""")) { path =>
+      val df = spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(path)
+      df.cache()
+      try {
+        val good = df.filter(col("_corrupt_record").isNull)
+        val bad = df.filter(col("_corrupt_record").isNotNull)
+        assert(good.count() === 2)
+        assert(bad.count() === 2)
+        assert(good.select(sum("v")).collect().head.getDouble(0) === 5.0)
+      } finally { df.unpersist(); () }
+    }
   }
 
   test("DROPMALFORMED mode silently keeps only parseable rows") {
-    val path = writeJsonl(Seq(
+    withJsonl(Seq(
       """{"id": 1, "v": 1.5}""",
       """garbage""",
-      """{"id": 2, "v": 2.5}"""))
-    val df = spark.read.schema(StructType(schema.fields.take(2)))
-      .option("mode", "DROPMALFORMED").json(path)
-    assert(df.count() === 2)
+      """{"id": 2, "v": 2.5}""")) { path =>
+      val df = spark.read.schema(StructType(schema.fields.take(2)))
+        .option("mode", "DROPMALFORMED").json(path)
+      assert(df.count() === 2)
+    }
   }
 
   test("observe() collects data-quality metrics during the normal action") {

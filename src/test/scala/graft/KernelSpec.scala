@@ -40,8 +40,7 @@ class KernelSpec extends AnyFunSuite with SparkFixture {
     * degenerate values (zeros, empty strings and arrays, a point on a
     * polygon vertex).
     */
-  private lazy val inputs: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kernels") + "/inputs.parquet"
+  private def writeInputs(dir: String): Unit = {
     val square = "array(named_struct('x', 0D, 'y', 0D), named_struct('x', 1D, 'y', 0D), " +
       "named_struct('x', 1D, 'y', 1D), named_struct('x', 0D, 'y', 1D))"
     spark.sql(s"""SELECT * FROM VALUES
@@ -59,25 +58,18 @@ class KernelSpec extends AnyFunSuite with SparkFixture {
       |  CAST(array_repeat(0L, 32) AS array<bigint>), -1L)
       |AS t(id, lat1, lon1, lat2, lon2, s1, s2, fa, fb, la, lb, px, py, poly, sk, h)
       |""".stripMargin).write.parquet(dir)
-    dir
   }
 
   /** Collect `build()` with `conf` set, restoring the previous conf after;
     * also reports whether the plan ran whole-stage generated code.
     */
-  private def under(conf: Map[String, String])(build: => DataFrame): (Seq[Row], Boolean) = {
-    val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+  private def under(conf: Map[String, String])(build: => DataFrame): (Seq[Row], Boolean) =
+    withConf(conf) {
       val df = build
       val rows = df.collect().toSeq
       (rows, PlanWalk.collectAll(df.queryExecution.executedPlan)
         .exists(_.isInstanceOf[WholeStageCodegenExec]))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
   test("every graft_* scalar kernel evaluates the same generated and interpreted") {
     val fresh = spark.newSession()
@@ -89,16 +81,18 @@ class KernelSpec extends AnyFunSuite with SparkFixture {
     val cases = calls(bloom.map("%02X".format(_)).mkString).toSeq.sortBy(_._1)
     assert(cases.map(_._1).toSet === scalar,
       "every registered scalar kernel needs a call here")
-    def run = spark.read.parquet(inputs)
-      .selectExpr("id" +: cases.map { case (n, c) => s"$c AS $n" }: _*).orderBy("id")
-    val (generated, wholeStage) = under(Map.empty)(run)
-    val (interpreted, wholeStageOff) = under(Map(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))(run)
-    assert(wholeStage, "the default mode must run generated code")
-    assert(!wholeStageOff, "the interpreted mode must not run generated code")
-    assert(generated.length === 4)
-    for (((name, _), i) <- cases.zipWithIndex)
-      assert(generated.map(_.get(i + 1)) === interpreted.map(_.get(i + 1)), name)
+    withTempFixture("graft_kernels") { tmp =>
+      val inputs = s"$tmp/inputs.parquet"
+      writeInputs(inputs)
+      def run = spark.read.parquet(inputs)
+        .selectExpr("id" +: cases.map { case (n, c) => s"$c AS $n" }: _*).orderBy("id")
+      val (generated, wholeStage) = under(SparkFixture.CodegenOn)(run)
+      val (interpreted, wholeStageOff) = under(SparkFixture.CodegenOff)(run)
+      assert(wholeStage, "the default mode must run generated code")
+      assert(!wholeStageOff, "the interpreted mode must not run generated code")
+      assert(generated.length === 4)
+      for (((name, _), i) <- cases.zipWithIndex)
+        assert(generated.map(_.get(i + 1)) === interpreted.map(_.get(i + 1)), name)
+    }
   }
 }

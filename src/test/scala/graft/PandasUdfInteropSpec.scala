@@ -34,66 +34,67 @@ class PandasUdfInteropSpec extends AnyFunSuite with SparkFixture {
   test("pandas_udf and Scala Column expressions agree bit-for-bit") {
     assume(havePySpark, "python3 with pyspark/pyarrow/pandas not available")
 
-    val outDir = java.nio.file.Files.createTempDirectory("pandas_udf_out").toFile
-    outDir.delete() // pyspark writer wants to create it
-    val script = java.nio.file.Files.createTempFile("pandas_udf_parity", ".py")
-    java.nio.file.Files.writeString(script,
-      s"""
-         |from pyspark.sql import SparkSession
-         |from pyspark.sql.functions import pandas_udf, col
-         |from pyspark.sql.types import LongType, DoubleType
-         |import pandas as pd
-         |
-         |spark = (SparkSession.builder.master("local[2]")
-         |    .config("spark.sql.shuffle.partitions", "2")
-         |    .config("spark.sql.session.timeZone", "UTC")
-         |    .config("spark.ui.enabled", "false")
-         |    .getOrCreate())
-         |
-         |@pandas_udf(LongType())
-         |def n_tokens(text: pd.Series) -> pd.Series:
-         |    # single-space split keeping empties — mirrors Spark split(text, " ")
-         |    return text.str.split(" ").str.len().astype("int64")
-         |
-         |@pandas_udf(DoubleType())
-         |def chars_per_token(n_chars: pd.Series, n_tok: pd.Series) -> pd.Series:
-         |    return n_chars.astype("float64") / n_tok.astype("float64")
-         |
-         |@pandas_udf(LongType())
-         |def id_bucket(doc_id: pd.Series) -> pd.Series:
-         |    return doc_id % 16
-         |
-         |docs = spark.read.parquet("$sfDir/documents.parquet")
-         |out = (docs.select("doc_id", "n_chars", "text")
-         |    .withColumn("n_tok", n_tokens(col("text")))
-         |    .withColumn("cpt", chars_per_token(col("n_chars"), col("n_tok")))
-         |    .withColumn("bucket", id_bucket(col("doc_id")))
-         |    .select("doc_id", "n_tok", "cpt", "bucket"))
-         |out.coalesce(1).write.mode("overwrite").parquet("${outDir.getAbsolutePath}")
-         |spark.stop()
-         |""".stripMargin)
+    withTempFixture("pandas_udf") { fixture =>
+      val outDir = new java.io.File(fixture, "out") // the pyspark writer creates it
+      val script = java.nio.file.Paths.get(fixture, "pandas_udf_parity.py")
+      java.nio.file.Files.writeString(script,
+        s"""
+           |from pyspark.sql import SparkSession
+           |from pyspark.sql.functions import pandas_udf, col
+           |from pyspark.sql.types import LongType, DoubleType
+           |import pandas as pd
+           |
+           |spark = (SparkSession.builder.master("local[2]")
+           |    .config("spark.sql.shuffle.partitions", "2")
+           |    .config("spark.sql.session.timeZone", "UTC")
+           |    .config("spark.ui.enabled", "false")
+           |    .getOrCreate())
+           |
+           |@pandas_udf(LongType())
+           |def n_tokens(text: pd.Series) -> pd.Series:
+           |    # single-space split keeping empties — mirrors Spark split(text, " ")
+           |    return text.str.split(" ").str.len().astype("int64")
+           |
+           |@pandas_udf(DoubleType())
+           |def chars_per_token(n_chars: pd.Series, n_tok: pd.Series) -> pd.Series:
+           |    return n_chars.astype("float64") / n_tok.astype("float64")
+           |
+           |@pandas_udf(LongType())
+           |def id_bucket(doc_id: pd.Series) -> pd.Series:
+           |    return doc_id % 16
+           |
+           |docs = spark.read.parquet("$sfDir/documents.parquet")
+           |out = (docs.select("doc_id", "n_chars", "text")
+           |    .withColumn("n_tok", n_tokens(col("text")))
+           |    .withColumn("cpt", chars_per_token(col("n_chars"), col("n_tok")))
+           |    .withColumn("bucket", id_bucket(col("doc_id")))
+           |    .select("doc_id", "n_tok", "cpt", "bucket"))
+           |out.coalesce(1).write.mode("overwrite").parquet("${outDir.getAbsolutePath}")
+           |spark.stop()
+           |""".stripMargin)
 
-    val proc = new ProcessBuilder("python3", script.toString)
-      .redirectErrorStream(true).start()
-    val log = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"pyspark script failed:\n$log")
+      val proc = new ProcessBuilder("python3", script.toString)
+        .redirectErrorStream(true).start()
+      val log = new String(proc.getInputStream.readAllBytes())
+      assert(proc.waitFor() == 0, s"pyspark script failed:\n$log")
 
-    val scala = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("n_chars"), col("text"))
-      .withColumn("n_tok", size(split(col("text"), " ", -1)).cast("long"))
-      .withColumn("cpt", col("n_chars").cast("double") / col("n_tok").cast("double"))
-      .withColumn("bucket", col("doc_id") % 16)
-      .select(col("doc_id"), col("n_tok"), col("cpt"), col("bucket"))
-      .orderBy("doc_id")
-      .collect()
-    val python = spark.read.parquet(outDir.getAbsolutePath)
-      .select(col("doc_id"), col("n_tok"), col("cpt"), col("bucket"))
-      .orderBy("doc_id")
-      .collect()
+      val scala = Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("n_chars"), col("text"))
+        .withColumn("n_tok", size(split(col("text"), " ", -1)).cast("long"))
+        .withColumn("cpt", col("n_chars").cast("double") / col("n_tok").cast("double"))
+        .withColumn("bucket", col("doc_id") % 16)
+        .select(col("doc_id"), col("n_tok"), col("cpt"), col("bucket"))
+        .orderBy("doc_id")
+        .collect()
+      val python = spark.read.parquet(outDir.getAbsolutePath)
+        .select(col("doc_id"), col("n_tok"), col("cpt"), col("bucket"))
+        .orderBy("doc_id")
+        .collect()
 
-    assert(python.length == scala.length, s"${python.length} vs ${scala.length} rows")
-    python.zip(scala).foreach { case (p, sc) =>
-      assert(p == sc, s"row mismatch: pandas_udf=$p scala=$sc")
+      assert(python.length == scala.length, s"${python.length} vs ${scala.length} rows")
+      python.zip(scala).foreach { case (p, sc) =>
+        assert(p == sc, s"row mismatch: pandas_udf=$p scala=$sc")
+      }
     }
   }
 }

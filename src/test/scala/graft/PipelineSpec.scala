@@ -247,25 +247,26 @@ class PipelineSpec extends AnyFunSuite with SparkFixture {
     // a null text and a one-token text have no bigrams: the duplicated-gram
     // fractions are NULL (the DuckDB twins' x / 0), never a DIVIDE_BY_ZERO
     // or a 0.0 that would pass the manifest's quality gate
-    val dir = java.nio.file.Files.createTempDirectory("graft_null_text").toString
-    val docs = Tables.documents(spark, sfDir)
-    val maxId = docs.agg(max("doc_id")).head.getLong(0)
-    val last = docs.filter(col("doc_id") === maxId)
-    val degenerate = Seq(lit(null).cast("string"), lit("solo")).zipWithIndex
-      .map { case (text, i) =>
-        last.withColumn("doc_id", col("doc_id") + (i + 1)).withColumn("text", text)
-      }.reduce(_ unionByName _)
-    docs.unionByName(degenerate).write.parquet(s"$dir/documents.parquet")
-    val rep = PipelineOps.textRepetition(spark, dir)
-      .filter(col("doc_id") > maxId).orderBy("doc_id").collect()
-    assert(rep.map(_.getLong(0)).toSeq === Seq(maxId + 1, maxId + 2))
-    rep.foreach { r =>
-      assert(r.isNullAt(3) && r.isNullAt(4), s"no grams must score NULL: $r")
+    withTempFixture("graft_null_text") { dir =>
+      val docs = Tables.documents(spark, sfDir)
+      val maxId = docs.agg(max("doc_id")).head.getLong(0)
+      val last = docs.filter(col("doc_id") === maxId)
+      val degenerate = Seq(lit(null).cast("string"), lit("solo")).zipWithIndex
+        .map { case (text, i) =>
+          last.withColumn("doc_id", col("doc_id") + (i + 1)).withColumn("text", text)
+        }.reduce(_ unionByName _)
+      docs.unionByName(degenerate).write.parquet(s"$dir/documents.parquet")
+      val rep = PipelineOps.textRepetition(spark, dir)
+        .filter(col("doc_id") > maxId).orderBy("doc_id").collect()
+      assert(rep.map(_.getLong(0)).toSeq === Seq(maxId + 1, maxId + 2))
+      rep.foreach { r =>
+        assert(r.isNullAt(3) && r.isNullAt(4), s"no grams must score NULL: $r")
+      }
+      val kept = PipelineOps.corpusManifest(spark, dir)
+        .agg(sum("n_docs")).head.getLong(0)
+      assert(kept === PipelineOps.corpusManifest(spark, sfDir)
+        .agg(sum("n_docs")).head.getLong(0),
+        "documents without grams must fail the manifest's quality gate")
     }
-    val kept = PipelineOps.corpusManifest(spark, dir)
-      .agg(sum("n_docs")).head.getLong(0)
-    assert(kept === PipelineOps.corpusManifest(spark, sfDir)
-      .agg(sum("n_docs")).head.getLong(0),
-      "documents without grams must fail the manifest's quality gate")
   }
 }

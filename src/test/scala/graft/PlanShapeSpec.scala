@@ -46,8 +46,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("flagship aggregate runs inside whole-stage codegen") {
-    val plan = executed(operators.Aggregations.pricingSummary(spark, sfDir))
-    assert(collectAll(plan).exists(_.isInstanceOf[WholeStageCodegenExec]), plan.toString)
+    // pinned on: a query over the small test dir leaves the session interpreted
+    withConf(SparkFixture.CodegenOn) {
+      val plan = executed(operators.Aggregations.pricingSummary(spark, sfDir))
+      assert(collectAll(plan).exists(_.isInstanceOf[WholeStageCodegenExec]), plan.toString)
+    }
   }
 
   test("theta join broadcasts the small side (nested loop, not cartesian shuffle)") {
@@ -200,30 +203,32 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("dynamic partition pruning fires on a partitioned fact join") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    Tables.orders(spark, sfDir)
-      .withColumn("status", col("o_orderstatus"))
-      .write.mode("overwrite").partitionBy("status").parquet(dir)
-    val fact = spark.read.parquet(dir)
-    // dim filter on a NON-join column read from parquet: the status="F"
-    // restriction is opaque to constraint inference, so pruning the fact
-    // partitions requires the runtime DPP subquery
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
-    import spark.implicits._
-    Seq(("F", "keep"), ("O", "drop"), ("P", "drop"))
-      .toDF("status", "flag").write.mode("overwrite").parquet(dimDir)
-    val dim = spark.read.parquet(dimDir).filter(col("flag") === "keep")
-    val joined = fact.join(dim, Seq("status"))
-      .agg(count(lit(1)).as("n"))
-    val plan = executed(joined)
-    val pruned = collectAll(plan).exists {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.partitionFilters.exists(_.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression]))
-      case _ => false
+    withTempFixture("graft_dpp") { tmp =>
+      val dir = s"$tmp/fact"
+      Tables.orders(spark, sfDir)
+        .withColumn("status", col("o_orderstatus"))
+        .write.mode("overwrite").partitionBy("status").parquet(dir)
+      val fact = spark.read.parquet(dir)
+      // dim filter on a NON-join column read from parquet: the status="F"
+      // restriction is opaque to constraint inference, so pruning the fact
+      // partitions requires the runtime DPP subquery
+      val dimDir = s"$tmp/dim"
+      import spark.implicits._
+      Seq(("F", "keep"), ("O", "drop"), ("P", "drop"))
+        .toDF("status", "flag").write.mode("overwrite").parquet(dimDir)
+      val dim = spark.read.parquet(dimDir).filter(col("flag") === "keep")
+      val joined = fact.join(dim, Seq("status"))
+        .agg(count(lit(1)).as("n"))
+      val plan = executed(joined)
+      val pruned = collectAll(plan).exists {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.partitionFilters.exists(_.exists(
+            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression]))
+        case _ => false
+      }
+      assert(pruned, plan.toString.take(3000))
+      assert(joined.collect()(0).getLong(0) > 0)
     }
-    assert(pruned, plan.toString.take(3000))
-    assert(joined.collect()(0).getLong(0) > 0)
   }
 
   test("ANALYZE TABLE feeds exact row counts into the optimizer's statistics") {

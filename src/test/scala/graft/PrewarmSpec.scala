@@ -21,15 +21,19 @@ import graft.operators._
   */
 class PrewarmSpec extends AnyFunSuite with SparkFixture {
 
-  private val rankOwnerQueries = Seq(
+  /** The 15 graded queries that read a [[operators.GlobalPrefix.memoized]]
+    * rank: the 14 that own one, and q_eval_rank_exposure, which reads the
+    * `fsweep` rank of q_quality_filter_sweep through
+    * `CurationOps.rankedQualityScore`. */
+  private val rankConsumers = Seq(
     "q_batch_buckets", "q_curriculum", "q_eval_conformal", "q_gini",
     "q_histogram_equidepth", "q_lorenz_deciles", "q_negative_pairs",
     "q_ntile", "q_part_abc", "q_prune_curve", "q_quality_filter_sweep",
-    "q_rfm_segments", "q_sample_index", "q_zonemap_prune")
+    "q_rfm_segments", "q_sample_index", "q_zonemap_prune", "q_eval_rank_exposure")
 
-  /** Every graded query that reads a session memo: the rank owners, the
-    * two Markov π consumers and the OLS/conformal pair. */
-  private val memoConsumers = (rankOwnerQueries ++ Seq("q_markov_stationary",
+  /** Every graded query that reads a session memo: the 15 rank consumers,
+    * the two Markov π consumers and the OLS/conformal pair. */
+  private val memoConsumers = (rankConsumers ++ Seq("q_markov_stationary",
     "q_markov_entropy_rate", "q_stats_ols_multi", "q_eval_conformal")).distinct
 
   test("Prewarm references no graded SparkEntry queries") {

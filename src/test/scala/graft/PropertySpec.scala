@@ -146,12 +146,13 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       (2L, ("alpha beta gamma delta epsilon zeta eta theta " * 6).trim + " iota", "en", "s0", 0L),
       (3L, "completely different words entirely unrelated content here now", "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mh").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val pairs = operators.DedupOps.dedupNearMinhash(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+    withTempFixture("graft_mh") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val pairs = operators.DedupOps.dedupNearMinhash(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((1L, 2L)))
+      assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
+    }
   }
 
   test("chunking covers every token: stride-window reconstruction") {
@@ -162,17 +163,18 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val texts = samples(Gen.chooseNum(1, 130), 20).zipWithIndex.map { case (n, i) =>
       (i.toLong, (1 to n).map(k => s"w$k").mkString(" "), "en", "s0", 0L)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chunk").toString
-    texts.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val chunks = operators.TextOps.textChunk(spark, tmp)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toList).toMap
-    texts.foreach { case (id, text, _, _, _) =>
-      val parts = chunks(id)
-      val rebuilt = (parts.head :: parts.tail.map(_.split(" ").drop(10).mkString(" ")))
-        .filter(_.nonEmpty).mkString(" ")
-      assert(rebuilt === text, s"doc $id")
+    withTempFixture("graft_chunk") { tmp =>
+      texts.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val chunks = operators.TextOps.textChunk(spark, tmp)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
+        .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toList).toMap
+      texts.foreach { case (id, text, _, _, _) =>
+        val parts = chunks(id)
+        val rebuilt = (parts.head :: parts.tail.map(_.split(" ").drop(10).mkString(" ")))
+          .filter(_.nonEmpty).mkString(" ")
+        assert(rebuilt === text, s"doc $id")
+      }
     }
   }
 
@@ -218,13 +220,14 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       mk(21, "m n o p"),                  // identical pair
       mk(30, "entirely unrelated standalone content"))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cc").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val labels = operators.DedupOps.dedupComponents(spark, tmp)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(10L) === 10L && labels(11L) === 10L && labels(12L) === 10L)
-    assert(labels(20L) === 20L && labels(21L) === 20L)
-    assert(!labels.contains(30L)) // isolated: never enters the edge list
+    withTempFixture("graft_cc") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val labels = operators.DedupOps.dedupComponents(spark, tmp)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels(10L) === 10L && labels(11L) === 10L && labels(12L) === 10L)
+      assert(labels(20L) === 20L && labels(21L) === 20L)
+      assert(!labels.contains(30L)) // isolated: never enters the edge list
+    }
   }
 
   test("LSH hot bucket is capped: mass-duplicate docs yield bounded pairs") {
@@ -237,14 +240,15 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
     val text = "the quick brown fox jumps over the lazy dog again and again"
     val docs = (1 to n).map(i => (i.toLong, text, "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hot").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val k = operators.DedupOps.MaxBucket.toLong
-    // identical docs → every surviving candidate pair confirms at jaccard 1
-    assert(operators.DedupOps.dedupNearMinhash(spark, tmp).count() === k * (k - 1) / 2)
-    val overflow = operators.DedupOps.bucketOverflow(spark, tmp).collect()
-    assert(overflow.length === 16) // one oversized bucket per band
-    assert(overflow.forall(_.getAs[Long]("dropped") === n - k))
+    withTempFixture("graft_hot") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val k = operators.DedupOps.MaxBucket.toLong
+      // identical docs → every surviving candidate pair confirms at jaccard 1
+      assert(operators.DedupOps.dedupNearMinhash(spark, tmp).count() === k * (k - 1) / 2)
+      val overflow = operators.DedupOps.bucketOverflow(spark, tmp).collect()
+      assert(overflow.length === 16) // one oversized bucket per band
+      assert(overflow.forall(_.getAs[Long]("dropped") === n - k))
+    }
   }
 
   test("adaptive sub-blocking is inert at the graded cap (output identity)") {
@@ -290,19 +294,20 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val fam = i / 3
       (i.toLong, s"family $fam token$fam alpha$fam beta$fam gamma$fam delta$fam", "en", "s0", 0L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_subblk").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    def pairs(maxBlock: Int): Map[(Long, Long), Double] =
-      operators.DedupOps.jaccardPairs(spark, tmp, maxBlock).collect()
-        .map(r => (r.getLong(2), r.getLong(3)) -> r.getDouble(4)).toMap
-    val uncapped = pairs(Int.MaxValue)
-    val capped = pairs(8)
-    assert(capped.keySet.subsetOf(uncapped.keySet), "capped output must be a subset")
-    capped.foreach { case (k, v) => assert(v === uncapped(k), s"value drift on $k") }
-    // every identical triplet contributes its 3 pairs even under the cap
-    val identicalPairs = capped.filter(_._2 === 1.0)
-    assert(identicalPairs.size === 60, // 20 families x C(3,2)
-      s"identical-doc pairs lost under forced cap: ${identicalPairs.size}")
+    withTempFixture("graft_subblk") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      def pairs(maxBlock: Int): Map[(Long, Long), Double] =
+        operators.DedupOps.jaccardPairs(spark, tmp, maxBlock).collect()
+          .map(r => (r.getLong(2), r.getLong(3)) -> r.getDouble(4)).toMap
+      val uncapped = pairs(Int.MaxValue)
+      val capped = pairs(8)
+      assert(capped.keySet.subsetOf(uncapped.keySet), "capped output must be a subset")
+      capped.foreach { case (k, v) => assert(v === uncapped(k), s"value drift on $k") }
+      // every identical triplet contributes its 3 pairs even under the cap
+      val identicalPairs = capped.filter(_._2 === 1.0)
+      assert(identicalPairs.size === 60, // 20 families x C(3,2)
+        s"identical-doc pairs lost under forced cap: ${identicalPairs.size}")
+    }
   }
 
   test("string-similarity kernels: metric laws over generated strings") {
@@ -409,23 +414,24 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       (4L, "a b c d e f", "en", "s0", 11L),
       (5L, "x x x x x x x x x x", "en", "s0", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_win").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = operators.CorpusOps.winnowFingerprint(spark, tmp).collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
-    assert(rows(1L) === ((0L, 0L, None)), "0 grams")
-    assert(rows(2L) === ((0L, 0L, None)), "1-gram impossible at 2 tokens")
-    assert(rows(3L) === ((1L, 0L, None)), "one gram, no complete window")
-    assert(rows(4L)._1 === 4L)
-    assert(rows(4L)._2 === 1L, "exactly one window -> one fingerprint")
-    assert(rows(4L)._3 === Some(1000000L), "density = 1 selection / 1 window")
-    // identical grams: every window's rightmost-min is a DIFFERENT
-    // position (ties break right), so each window selects its own key
-    val (g5, s5, d5) = rows(5L)
-    assert(g5 === 8L)
-    assert(s5 === 5L, "8 grams, windows ending at p=4..8 each pick p")
-    assert(d5 === Some(1000000L))
+    withTempFixture("graft_win") { tmp =>
+      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val rows = operators.CorpusOps.winnowFingerprint(spark, tmp).collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3))))).toMap
+      assert(rows(1L) === ((0L, 0L, None)), "0 grams")
+      assert(rows(2L) === ((0L, 0L, None)), "1-gram impossible at 2 tokens")
+      assert(rows(3L) === ((1L, 0L, None)), "one gram, no complete window")
+      assert(rows(4L)._1 === 4L)
+      assert(rows(4L)._2 === 1L, "exactly one window -> one fingerprint")
+      assert(rows(4L)._3 === Some(1000000L), "density = 1 selection / 1 window")
+      // identical grams: every window's rightmost-min is a DIFFERENT
+      // position (ties break right), so each window selects its own key
+      val (g5, s5, d5) = rows(5L)
+      assert(g5 === 8L)
+      assert(s5 === 5L, "8 grams, windows ending at p=4..8 each pick p")
+      assert(d5 === Some(1000000L))
+    }
   }
 
   test("skyline collapses to one point on a monotone stream and keeps all on an antitone one") {
@@ -436,10 +442,11 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
           new java.sql.Timestamp(1700000000000L + i * 86400000L), "1-URGENT")
       }.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-      val tmp = java.nio.file.Files.createTempDirectory(tmpName).toString
-      orders.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-      operators.StatsOps.skylineDaily(spark, tmp).collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
+      withTempFixture(tmpName) { tmp =>
+        orders.write.mode("overwrite").parquet(s"$tmp/orders.parquet")
+        operators.StatsOps.skylineDaily(spark, tmp).collect()
+          .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
+      }
     }
     // expected frontier day = UTC midnight of the i-th order's day
     def day(i: Int): Long =
@@ -465,11 +472,12 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       val vecs = (0 until n).map { i =>
         (i.toLong, Array.tabulate(8)(d => (0.1f * ((i + d) % 5))), i % 2)
       }.toDF("vec_id", "embedding", "label")
-      val tmp = java.nio.file.Files.createTempDirectory(name).toString
-      vecs.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      operators.SimilarityOps.embedMmr(spark, tmp).collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getAs[Int]("rank")).sorted.toSeq)
-        .toMap
+      withTempFixture(name) { tmp =>
+        vecs.write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+        operators.SimilarityOps.embedMmr(spark, tmp).collect()
+          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getAs[Int]("rank")).sorted.toSeq)
+          .toMap
+      }
     }
     val full = mk(6, "graft_mmr6")
     assert(full.size === 6)
@@ -496,17 +504,18 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       (0 until 4).map(i => (30L + i, ts(8 + i, 0), 1L, "click", 1.0, "")) ++
       (0 until 2).map(i => (40L + i, ts(16, i), 1L, "click", 1.0, "")))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ladder").toString
-    events.write.mode("overwrite").parquet(s"$tmp/events.parquet")
-    val rows = operators.QualityOps.anonLadder(spark, tmp).collect()
-      .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(rows("15min") === ((1L, 5L)), "cell 0 released at the finest rung")
-    assert(rows("30min") === ((2L, 5L)), "cells 4+5 coarsen to their parent")
-    assert(rows("suppressed") === ((5L, 6L)),
-      "hour of 4 singletons + the lone pair cell all suppressed")
-    assert(!rows.contains("60min"), "no cell qualifies exactly at the hour rung")
-    // conservation under the crafted layout too
-    assert(rows.values.map(_._2).sum === 16L)
+    withTempFixture("graft_ladder") { tmp =>
+      events.write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      val rows = operators.QualityOps.anonLadder(spark, tmp).collect()
+        .map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
+      assert(rows("15min") === ((1L, 5L)), "cell 0 released at the finest rung")
+      assert(rows("30min") === ((2L, 5L)), "cells 4+5 coarsen to their parent")
+      assert(rows("suppressed") === ((5L, 6L)),
+        "hour of 4 singletons + the lone pair cell all suppressed")
+      assert(!rows.contains("60min"), "no cell qualifies exactly at the hour rung")
+      // conservation under the crafted layout too
+      assert(rows.values.map(_._2).sum === 16L)
+    }
   }
 
   test("water-fill invariants hold on 30 random skewed source mixes") {

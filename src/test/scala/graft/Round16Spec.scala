@@ -122,29 +122,30 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
 
   // ---- 3. Page/Quade zero-fill on a genuinely incomplete design ------
 
-  /** 3 types × weeks 1..4, with (c, 4) MISSING — one event per present
+  /** Runs `body` on a temp dir whose events table holds 3 types × weeks
+    * 1..4, with (c, 4) MISSING — one event per present
     * cell on days 1/8/15/22 of January 2024, values chosen with no v
     * ties anywhere (so every rank order is forced). ts is a plain
     * TimestampType column — Tables.events passes it through unchanged.
     */
-  private lazy val incompleteDir: String = {
-    import spark.implicits._
-    def ts(day: Int) =
-      java.sql.Timestamp.from(java.time.Instant.parse(
-        f"2024-01-$day%02dT12:00:00Z"))
-    // (type, week) -> value; c4 absent. Values distinct per design.
-    val cells = Seq(
-      ("a", 1, 5.0), ("a", 2, 3.0), ("a", 3, 9.0), ("a", 4, 7.0),
-      ("b", 1, 2.0), ("b", 2, 8.0), ("b", 3, 4.0), ("b", 4, 6.0),
-      ("c", 1, 11.0), ("c", 2, 1.0), ("c", 3, 10.0))
-    val rows = cells.zipWithIndex.map { case ((t, w, v), i) =>
-      (i.toLong, ts(1 + (w - 1) * 7), 1L, t, v, "")
+  private def withIncomplete[T](body: String => T): T =
+    withTempFixture("graft_r16_fill") { dir =>
+      import spark.implicits._
+      def ts(day: Int) =
+        java.sql.Timestamp.from(java.time.Instant.parse(
+          f"2024-01-$day%02dT12:00:00Z"))
+      // (type, week) -> value; c4 absent. Values distinct per design.
+      val cells = Seq(
+        ("a", 1, 5.0), ("a", 2, 3.0), ("a", 3, 9.0), ("a", 4, 7.0),
+        ("b", 1, 2.0), ("b", 2, 8.0), ("b", 3, 4.0), ("b", 4, 6.0),
+        ("c", 1, 11.0), ("c", 2, 1.0), ("c", 3, 10.0))
+      val rows = cells.zipWithIndex.map { case ((t, w, v), i) =>
+        (i.toLong, ts(1 + (w - 1) * 7), 1L, t, v, "")
+      }
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      body(dir)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_r16_fill").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
 
   private def filledGrid: Map[(String, Long), Long] = {
     val present = Map(
@@ -157,8 +158,8 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("weeklyByTypeFilled creates the missing (c, 4) cell as an explicit zero") {
-    val got = operators.InferenceOps.weeklyByTypeFilled(spark, incompleteDir)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val got = withIncomplete(operators.InferenceOps.weeklyByTypeFilled(spark, _).collect())
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got.size === 12, s"expected the complete 3x4 grid, got ${got.size} cells")
     assert(got(("c", 4L)) === 0L, "the absent cell must be zero-filled, not dropped")
     assert(got === filledGrid)
@@ -183,7 +184,7 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     // the complete-design moments are only valid BECAUSE of the fill:
     // with block c truncated at 3 treatments, E[L] and Var(L) would mix
     // block sizes and the closed forms above would not apply
-    val row = operators.InferenceOps.pageTrend(spark, incompleteDir).collect()
+    val row = withIncomplete(operators.InferenceOps.pageTrend(spark, _).collect())
     assert(row.length === 1)
     assert(row(0).getLong(0) === n.toLong, "n_blocks")
     assert(row(0).getLong(1) === k, "k_treatments")
@@ -215,7 +216,7 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     val denom = nB * a4 - sb2
     val fMilli: Option[Long] =
       if (denom > 0) Some(((nB - 1) * sb2 * 1000 / denom).toLong) else None
-    val row = operators.InferenceOps.quadeTest(spark, incompleteDir).collect()
+    val row = withIncomplete(operators.InferenceOps.quadeTest(spark, _).collect())
     assert(row.length === 1)
     assert(row(0).getLong(0) === nB.toLong, "n_blocks")
     assert(row(0).getLong(1) === k, "k_treatments")
@@ -227,7 +228,7 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
 
   // ---- 4. CvM / Ansari degenerate-input contracts ---------------------
 
-  private def eventsDir(types: Seq[String]): String = {
+  private def withEvents[T](types: Seq[String])(body: String => T): T = {
     import spark.implicits._
     val rows = types.zipWithIndex.map { case (t, i) =>
       (i.toLong,
@@ -235,21 +236,24 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
           f"2024-01-${1 + i}%02dT12:00:00Z")),
         1L, t, 2.0 + i, "")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_r16_degen").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
+    withTempFixture("graft_r16_degen") { dir =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      body(dir)
+    }
   }
 
   test("CvM emits ZERO rows when one sample is absent (twin inner-join contract)") {
     // the DuckDB twin's ab CTE is an inner join of the click and purchase
     // aggregates -- absent purchase means zero rows there; the Spark side's
     // a.crossJoin(b) with empty b must agree
-    val oneType = eventsDir(Seq("click", "click", "click"))
-    assert(operators.InferenceOps.cvmTwoSample(spark, oneType).collect().isEmpty)
+    withEvents(Seq("click", "click", "click")) { oneType =>
+      assert(operators.InferenceOps.cvmTwoSample(spark, oneType).collect().isEmpty)
+    }
     // both samples absent: the WHERE filter leaves nothing on either side
-    val neither = eventsDir(Seq("view", "view"))
-    assert(operators.InferenceOps.cvmTwoSample(spark, neither).collect().isEmpty)
+    withEvents(Seq("view", "view")) { neither =>
+      assert(operators.InferenceOps.cvmTwoSample(spark, neither).collect().isEmpty)
+    }
   }
 
   test("Anderson-Darling matches an exact BigInt driver replay") {
@@ -309,17 +313,17 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("Hodges-Lehmann emits ZERO rows when either sample is absent") {
-    assert(operators.InferenceOps.hodgesLehmann(
-      spark, eventsDir(Seq("click", "click"))).collect().isEmpty)
-    assert(operators.InferenceOps.hodgesLehmann(
-      spark, eventsDir(Seq("view"))).collect().isEmpty)
+    assert(withEvents(Seq("click", "click"))(
+      operators.InferenceOps.hodgesLehmann(spark, _).collect()).isEmpty)
+    assert(withEvents(Seq("view"))(
+      operators.InferenceOps.hodgesLehmann(spark, _).collect()).isEmpty)
   }
 
   test("Anderson-Darling emits ZERO rows when either sample is absent") {
-    assert(operators.InferenceOps.adTwoSample(
-      spark, eventsDir(Seq("click", "click", "click"))).collect().isEmpty)
-    assert(operators.InferenceOps.adTwoSample(
-      spark, eventsDir(Seq("view", "view"))).collect().isEmpty)
+    assert(withEvents(Seq("click", "click", "click"))(
+      operators.InferenceOps.adTwoSample(spark, _).collect()).isEmpty)
+    assert(withEvents(Seq("view", "view"))(
+      operators.InferenceOps.adTwoSample(spark, _).collect()).isEmpty)
   }
 
   // ---- 6. k-truss ------------------------------------------------------
@@ -478,10 +482,11 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
       (0 until 3).map(i => (i.toLong, ts(0, i), 1L, "click", 1.0, "")) ++
       (0 until 6).map(i => (10L + i, ts(0, i), 1L, "view", 1.0, "")) ++
       (0 until 5).map(i => (20L + i, ts(2, i), 1L, "click", 1.0, ""))
-    val dir = java.nio.file.Files.createTempDirectory("graft_r16_kanon").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = operators.QualityOps.privacyKanonymity(spark, dir).collect()
+    val r = withTempFixture("graft_r16_kanon") { dir =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      operators.QualityOps.privacyKanonymity(spark, dir).collect()
+    }
     assert(r.length === 1)
     assert(r(0).getLong(0) === 3L, "n_classes")
     assert(r(0).getLong(1) === 14L, "n_rows")
@@ -570,14 +575,14 @@ class Round16Spec extends AnyFunSuite with SparkFixture {
     // one row even when the purchase sample is empty (m = 0); over an
     // empty relation it emits zero rows -- the Spark groupBy(lit(1))
     // matches both shapes
-    val oneType = eventsDir(Seq("click", "click", "click"))
-    val one = operators.InferenceOps.ansariBradley(spark, oneType).collect()
+    val one = withEvents(Seq("click", "click", "click"))(
+      operators.InferenceOps.ansariBradley(spark, _).collect())
     assert(one.length === 1)
     assert(one(0).getLong(0) === 3L, "n = 3 click days")
     assert(one(0).getLong(1) === 0L, "m = 0: purchase sample empty")
     // 3 distinct days, scores = min(r, 4-r) over r=1..3 -> 1+2+1 = 4
     assert(one(0).getLong(2) === 4L, "ab_stat over the click sample alone")
-    val neither = eventsDir(Seq("view", "view"))
-    assert(operators.InferenceOps.ansariBradley(spark, neither).collect().isEmpty)
+    assert(withEvents(Seq("view", "view"))(
+      operators.InferenceOps.ansariBradley(spark, _).collect()).isEmpty)
   }
 }

@@ -149,10 +149,10 @@ class Round17Spec extends AnyFunSuite with SparkFixture {
     assert(got === expected)
   }
 
-  /** One-type synthetic events dir (the Round16Spec eventsDir pattern)
-    * for degenerate-contract pins.
+  /** Runs `body` on a one-type synthetic events dir (the Round16Spec
+    * withEvents pattern) for degenerate-contract pins.
     */
-  private def degenEventsDir(types: Seq[String]): String = {
+  private def withDegenEvents[T](types: Seq[String])(body: String => T): T = {
     import spark.implicits._
     val rows = types.zipWithIndex.map { case (t, i) =>
       (i.toLong,
@@ -160,10 +160,11 @@ class Round17Spec extends AnyFunSuite with SparkFixture {
           f"2024-01-${1 + i}%02dT12:00:00Z")),
         1L, t, 2.0 + i, "")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_degen").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
+    withTempFixture("graft_r17_degen") { dir =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      body(dir)
+    }
   }
 
   /** Day-sorted ISO day keys of the global daily revenue series —
@@ -379,8 +380,8 @@ class Round17Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("Wilcoxon signed-rank emits ZERO rows when no nonzero-diff common day") {
-    assert(operators.NonparamOps.wilcoxonSigned(
-      spark, degenEventsDir(Seq("click", "click"))).collect().isEmpty)
+    assert(withDegenEvents(Seq("click", "click"))(
+      operators.NonparamOps.wilcoxonSigned(spark, _).collect()).isEmpty)
   }
 
   test("Pettitt matches an exact driver replay") {

@@ -198,26 +198,27 @@ class Round20Spec extends AnyFunSuite with SparkFixture {
     // pass a CI gate silently. Pure-stdlib python3, same interpreter the
     // parity harness already assumes.
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("benchcmp-contract").toString
-    def write(name: String, qs: String): String = {
-      val p = java.nio.file.Paths.get(dir, name)
-      java.nio.file.Files.writeString(p, s"""{"queries":$qs}""")
-      p.toString
+    withTempFixture("benchcmp-contract") { dir =>
+      def write(name: String, qs: String): String = {
+        val p = java.nio.file.Paths.get(dir, name)
+        java.nio.file.Files.writeString(p, s"""{"queries":$qs}""")
+        p.toString
+      }
+      val base = write("base.json", """{"q_a":1.0,"q_b":0.2}""")
+      val same = write("same.json", """{"q_a":1.05,"q_b":0.21}""")
+      val regr = write("regr.json", """{"q_a":2.5,"q_b":0.2}""")
+      val fail = write("fail.json", """{"q_a":1.0,"q_b":-0.2}""")
+      val disj = write("disj.json", """{"q_z":1.0}""")
+      val bad = write("bad.json", """not json at all""")
+      def run(b: String, h: String): Int =
+        Seq("python3", "tools/benchcmp.py", "--base", b, "--head", h)
+          .!(ProcessLogger(_ => (), _ => ()))
+      assert(run(base, same) === 0, "clean comparison must exit 0")
+      assert(run(base, regr) === 1, ">2x-past-0.7s regression must exit 1")
+      assert(run(base, fail) === 1, "failed head sample must exit 1")
+      assert(run(base, disj) === 2, "disjoint key sets must exit 2")
+      assert(run(base, bad) === 2, "malformed artifact must exit 2")
     }
-    val base = write("base.json", """{"q_a":1.0,"q_b":0.2}""")
-    val same = write("same.json", """{"q_a":1.05,"q_b":0.21}""")
-    val regr = write("regr.json", """{"q_a":2.5,"q_b":0.2}""")
-    val fail = write("fail.json", """{"q_a":1.0,"q_b":-0.2}""")
-    val disj = write("disj.json", """{"q_z":1.0}""")
-    val bad = write("bad.json", """not json at all""")
-    def run(b: String, h: String): Int =
-      Seq("python3", "tools/benchcmp.py", "--base", b, "--head", h)
-        .!(ProcessLogger(_ => (), _ => ()))
-    assert(run(base, same) === 0, "clean comparison must exit 0")
-    assert(run(base, regr) === 1, ">2x-past-0.7s regression must exit 1")
-    assert(run(base, fail) === 1, "failed head sample must exit 1")
-    assert(run(base, disj) === 2, "disjoint key sets must exit 2")
-    assert(run(base, bad) === 2, "malformed artifact must exit 2")
   }
 
   test("materialized basket pairs equal a from-scratch compute") {

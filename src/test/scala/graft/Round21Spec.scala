@@ -39,20 +39,21 @@ class Round21Spec extends AnyFunSuite with SparkFixture {
 
   test("benchcmp exits 2 on a non-numeric timing value, not 1") {
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("benchcmp-nonnum").toString
-    def write(name: String, qs: String): String = {
-      val p = java.nio.file.Paths.get(dir, name)
-      java.nio.file.Files.writeString(p, s"""{"queries":$qs}""")
-      p.toString
+    withTempFixture("benchcmp-nonnum") { dir =>
+      def write(name: String, qs: String): String = {
+        val p = java.nio.file.Paths.get(dir, name)
+        java.nio.file.Files.writeString(p, s"""{"queries":$qs}""")
+        p.toString
+      }
+      val good = write("good.json", """{"q_a":1.0}""")
+      val str = write("str.json", """{"q_a":"1.2"}""")
+      val nul = write("nul.json", """{"q_a":null}""")
+      def run(b: String, h: String): Int =
+        Seq("python3", "tools/benchcmp.py", "--base", b, "--head", h)
+          .!(ProcessLogger(_ => (), _ => ()))
+      assert(run(good, str) === 2, "string timing must be an artifact error")
+      assert(run(good, nul) === 2, "null timing must be an artifact error")
     }
-    val good = write("good.json", """{"q_a":1.0}""")
-    val str = write("str.json", """{"q_a":"1.2"}""")
-    val nul = write("nul.json", """{"q_a":null}""")
-    def run(b: String, h: String): Int =
-      Seq("python3", "tools/benchcmp.py", "--base", b, "--head", h)
-        .!(ProcessLogger(_ => (), _ => ()))
-    assert(run(good, str) === 2, "string timing must be an artifact error")
-    assert(run(good, nul) === 2, "null timing must be an artifact error")
   }
 
   test("materialized phashes equal a from-scratch decode") {

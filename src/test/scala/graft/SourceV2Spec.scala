@@ -72,102 +72,110 @@ class SourceV2Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("batch write round-trips through the connector and truncate replaces data") {
-    val dir = java.nio.file.Files.createTempDirectory("kvlog_write").toString
-    val docs = Tables.documents(spark, sfDir)
-      .select("doc_id", "lang", "source", "n_chars")
-    docs.write.format("graft.sources.KvLogSource").mode("append").save(dir)
-    val back = spark.read.format("graft.sources.KvLogSource").load(dir)
-    assert(back.count() === docs.count())
-    val got = back.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
-    val exp = docs.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
-    assert(got === exp)
-    // no temp debris after commit
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp_")))
-    // overwrite truncates at the COMMIT point: half the rows replace the full set
-    docs.filter(col("doc_id") % 2 === 0)
-      .write.format("graft.sources.KvLogSource").mode("overwrite").save(dir)
-    assert(spark.read.format("graft.sources.KvLogSource").load(dir).count()
-      === docs.filter(col("doc_id") % 2 === 0).count())
+    withTempFixture("kvlog_write") { dir =>
+      val docs = Tables.documents(spark, sfDir)
+        .select("doc_id", "lang", "source", "n_chars")
+      docs.write.format("graft.sources.KvLogSource").mode("append").save(dir)
+      val back = spark.read.format("graft.sources.KvLogSource").load(dir)
+      assert(back.count() === docs.count())
+      val got = back.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
+      val exp = docs.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
+      assert(got === exp)
+      // no temp debris after commit
+      assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp_")))
+      // overwrite truncates at the COMMIT point: half the rows replace the full set
+      docs.filter(col("doc_id") % 2 === 0)
+        .write.format("graft.sources.KvLogSource").mode("overwrite").save(dir)
+      assert(spark.read.format("graft.sources.KvLogSource").load(dir).count()
+        === docs.filter(col("doc_id") % 2 === 0).count())
+    }
   }
 
   test("micro-batch streaming reads exactly the files that appeared since the last batch") {
-    val dir = java.nio.file.Files.createTempDirectory("kvlog_stream").toFile
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      val tmp = new java.io.File(dir, s"_tmp_$name")
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      rows.foreach(w.println); w.close()
-      assert(tmp.renameTo(new java.io.File(dir, name)))
+    withTempFixture("kvlog_stream") { fixture =>
+      val dir = new java.io.File(fixture, "src")
+      dir.mkdir()
+      def writeFile(name: String, rows: Seq[String]): Unit = {
+        val tmp = new java.io.File(dir, s"_tmp_$name")
+        val w = new java.io.PrintWriter(tmp, "UTF-8")
+        rows.foreach(w.println); w.close()
+        assert(tmp.renameTo(new java.io.File(dir, name)))
+      }
+      writeFile("a.log", Seq("1\ten\tweb\t100", "2\tde\tweb\t200"))
+      val q = spark.readStream.format("graft.sources.KvLogSource")
+        .load(dir.getAbsolutePath)
+        .writeStream.format("memory").queryName("kvlog_stream_sink")
+        .option("checkpointLocation", s"$fixture/ckpt")
+        .start()
+      try {
+        q.processAllAvailable()
+        assert(spark.table("kvlog_stream_sink").count() === 2)
+        writeFile("b.log", Seq("3\tfr\tnews\t300"))
+        q.processAllAvailable()
+        val rows = spark.table("kvlog_stream_sink").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
+        assert(rows === Array((1L, "en", "web", 100L), (2L, "de", "web", 200L),
+          (3L, "fr", "news", 300L)), "second batch must add ONLY the new file's rows")
+      } finally q.stop()
     }
-    writeFile("a.log", Seq("1\ten\tweb\t100", "2\tde\tweb\t200"))
-    val q = spark.readStream.format("graft.sources.KvLogSource")
-      .load(dir.getAbsolutePath)
-      .writeStream.format("memory").queryName("kvlog_stream_sink")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("kvlog_ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("kvlog_stream_sink").count() === 2)
-      writeFile("b.log", Seq("3\tfr\tnews\t300"))
-      q.processAllAvailable()
-      val rows = spark.table("kvlog_stream_sink").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).sortBy(_._1)
-      assert(rows === Array((1L, "en", "web", 100L), (2L, "de", "web", 200L),
-        (3L, "fr", "news", 300L)), "second batch must add ONLY the new file's rows")
-    } finally q.stop()
   }
 
   test("streaming restart from checkpoint resumes at the committed offset (no reprocessing)") {
-    val dir = java.nio.file.Files.createTempDirectory("kvlog_ckpt_src").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("kvlog_ckpt_loc").toString
-    def writeFile(name: String, rows: Seq[String]): Unit = {
-      val tmp = new java.io.File(dir, s"_tmp_$name")
-      val w = new java.io.PrintWriter(tmp, "UTF-8")
-      rows.foreach(w.println); w.close()
-      assert(tmp.renameTo(new java.io.File(dir, name)))
+    withTempFixture("kvlog_ckpt") { fixture =>
+      val dir = new java.io.File(fixture, "src")
+      dir.mkdir()
+      val ckpt = s"$fixture/ckpt"
+      def writeFile(name: String, rows: Seq[String]): Unit = {
+        val tmp = new java.io.File(dir, s"_tmp_$name")
+        val w = new java.io.PrintWriter(tmp, "UTF-8")
+        rows.foreach(w.println); w.close()
+        assert(tmp.renameTo(new java.io.File(dir, name)))
+      }
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      def start() = spark.readStream.format("graft.sources.KvLogSource")
+        .load(dir.getAbsolutePath)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.select("doc_id").collect().foreach(r => seen.add(r.getLong(0)))
+        }.start()
+      writeFile("a.log", Seq("1\ten\tweb\t100", "2\tde\tweb\t200"))
+      val q1 = start()
+      try { q1.processAllAvailable() } finally q1.stop()
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSeq.sorted === Seq(1L, 2L))
+      // restart against the SAME checkpoint: the committed file-set offset
+      // round-trips through deserializeOffset, so only the new file replays
+      writeFile("b.log", Seq("3\tfr\tnews\t300"))
+      val q2 = start()
+      try { q2.processAllAvailable() } finally q2.stop()
+      assert(seen.asScala.toSeq.sorted === Seq(1L, 2L, 3L),
+        s"restart reprocessed or dropped rows: ${seen.asScala.toSeq}")
     }
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    def start() = spark.readStream.format("graft.sources.KvLogSource")
-      .load(dir.getAbsolutePath)
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.select("doc_id").collect().foreach(r => seen.add(r.getLong(0)))
-      }.start()
-    writeFile("a.log", Seq("1\ten\tweb\t100", "2\tde\tweb\t200"))
-    val q1 = start()
-    try { q1.processAllAvailable() } finally q1.stop()
-    import scala.jdk.CollectionConverters._
-    assert(seen.asScala.toSeq.sorted === Seq(1L, 2L))
-    // restart against the SAME checkpoint: the committed file-set offset
-    // round-trips through deserializeOffset, so only the new file replays
-    writeFile("b.log", Seq("3\tfr\tnews\t300"))
-    val q2 = start()
-    try { q2.processAllAvailable() } finally q2.stop()
-    assert(seen.asScala.toSeq.sorted === Seq(1L, 2L, 3L),
-      s"restart reprocessed or dropped rows: ${seen.asScala.toSeq}")
   }
 
   test("permissive mode drops malformed lines; failfast raises with file:line coordinates") {
-    val dir = java.nio.file.Files.createTempDirectory("kvlog_malformed").toFile
-    val f = new java.io.File(dir, "bad.log")
-    val w = new java.io.PrintWriter(f, "UTF-8")
-    w.println("1\ten\tweb\t100")
-    w.println("not\ta\tvalid\trecord") // non-numeric doc_id
-    w.println("2\tde\tweb") // missing field
-    w.println("3\tfr\tnews\t300")
-    w.close()
-    val permissive = spark.read.format("graft.sources.KvLogSource")
-      .load(dir.getAbsolutePath)
-    assert(permissive.collect().map(_.getLong(0)).sorted === Array(1L, 3L),
-      "permissive must keep exactly the well-formed records")
-    val ex = intercept[org.apache.spark.SparkException] {
-      spark.read.format("graft.sources.KvLogSource").option("mode", "failfast")
-        .load(dir.getAbsolutePath).collect()
+    withTempFixture("kvlog_malformed") { fixture =>
+      val dir = new java.io.File(fixture)
+      val f = new java.io.File(dir, "bad.log")
+      val w = new java.io.PrintWriter(f, "UTF-8")
+      w.println("1\ten\tweb\t100")
+      w.println("not\ta\tvalid\trecord") // non-numeric doc_id
+      w.println("2\tde\tweb") // missing field
+      w.println("3\tfr\tnews\t300")
+      w.close()
+      val permissive = spark.read.format("graft.sources.KvLogSource")
+        .load(dir.getAbsolutePath)
+      assert(permissive.collect().map(_.getLong(0)).sorted === Array(1L, 3L),
+        "permissive must keep exactly the well-formed records")
+      val ex = intercept[org.apache.spark.SparkException] {
+        spark.read.format("graft.sources.KvLogSource").option("mode", "failfast")
+          .load(dir.getAbsolutePath).collect()
+      }
+      val msg = Option(ex.getCause).map(_.getMessage).getOrElse(ex.getMessage)
+      assert(msg.contains("bad.log:2"), s"failfast error must carry file:line, got: $msg")
     }
-    val msg = Option(ex.getCause).map(_.getMessage).getOrElse(ex.getMessage)
-    assert(msg.contains("bad.log:2"), s"failfast error must carry file:line, got: $msg")
   }
 
   test("split planning yields one input partition per data file") {

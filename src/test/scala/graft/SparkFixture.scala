@@ -25,9 +25,34 @@ trait SparkFixture { self: Suite =>
       SparkFixture.deleteRecursively(dir)
     }
   }
+
+  /** Runs `body` with `conf` set on `s`, then restores each key's previous
+    * value (or unsets it).
+    */
+  def withConf[T](conf: Map[String, String], s: SparkSession = spark)(body: => T): T = {
+    val prev = conf.keys.map(k => k -> s.conf.getOption(k)).toMap
+    try {
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }
 
 object SparkFixture {
+  /** Spark's default execution: whole-stage generated code, expression
+    * code generated with an interpreted fallback. */
+  val CodegenOn: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "FALLBACK")
+
+  /** Interpreted execution: no whole-stage code, interpreted expressions. */
+  val CodegenOff: Map[String, String] = Map(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   lazy val session: SparkSession = GraftSession(2)
 
   /** Deletes every [[operators.DerivedFiles]] dir keyed on the `.parquet`

@@ -229,23 +229,25 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("#56 foreachBatch upsert sink: new batch wins, old rows survive") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/t"
-    val stream = MemoryStream[(Long, String)]
-    val q = stream.toDF().toDF("id", "payload")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        StreamingOps.upsertBatch(spark, batch, "id", dir)
-      }
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      stream.addData(Seq((1L, "a"), (2L, "b")))
-      q.processAllAvailable()
-      stream.addData(Seq((2L, "b2"), (3L, "c")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.read.parquet(dir).collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    assert(rows.toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
+    withTempFixture("graft_upsert") { fixture =>
+      val dir = s"$fixture/t"
+      val stream = MemoryStream[(Long, String)]
+      val q = stream.toDF().toDF("id", "payload")
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          StreamingOps.upsertBatch(spark, batch, "id", dir)
+        }
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        stream.addData(Seq((1L, "a"), (2L, "b")))
+        q.processAllAvailable()
+        stream.addData(Seq((2L, "b2"), (3L, "c")))
+        q.processAllAvailable()
+      } finally q.stop()
+      val rows = spark.read.parquet(dir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+      assert(rows.toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
+    }
   }
 
   test("multimodal PNG decode runs incrementally over a payload stream") {
@@ -324,44 +326,46 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val boiler = ("alpha beta gamma delta epsilon zeta eta theta " * 6).trim
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_lsh_ckpt").toString
-      val outDir = java.nio.file.Files.createTempDirectory("graft_lsh_out").toString
-      val stream = MemoryStream[StreamingOps.Doc]
-      // file sink, not memory: the memory sink refuses checkpoint
-      // recovery in append mode, and the file sink's commit log
-      // additionally pins exactly-once (no re-emission after restart)
-      def startQuery() =
-        StreamingOps.streamingLshCandidates(stream.toDS())
-          .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt).outputMode("append")
-          .trigger(Trigger.ProcessingTime(0)).start()
-      def pairs(): Seq[(Long, Long)] = spark.read.parquet(outDir)
-        .select("doc_a", "doc_b").collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1)))
-      // run 1: two near-copies pair within the run, then a clean stop
-      // (the checkpoint holds the bucket membership lists)
-      val q1 = startQuery()
-      try {
-        stream.addData(Seq(StreamingOps.Doc(1, boiler),
-          StreamingOps.Doc(2, boiler + " iota")))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      assert(pairs().toSet === Set((1L, 2L)),
-        s"run-1 near-copies must pair: ${pairs()}")
-      val run1Rows = pairs().size // one row per colliding band
-      // run 2: a NEW query over the same checkpoint — a (1, 3) pair can
-      // ONLY come from doc 1's id recovered out of the RocksDB list
-      // state written by run 1
-      val q2 = startQuery()
-      try {
-        stream.addData(Seq(StreamingOps.Doc(3, boiler + " kappa")))
-        q2.processAllAvailable()
-      } finally q2.stop()
-      val all = pairs()
-      assert(all.toSet.contains((1L, 3L)),
-        s"bucket state not recovered from checkpoint: ${all.toSet}")
-      assert(all.count(_ == (1L, 2L) ) === run1Rows,
-        s"run-1 output must not re-emit after restart: $all")
+      withTempFixture("graft_lsh") { fixture =>
+        val ckpt = s"$fixture/ckpt"
+        val outDir = s"$fixture/out"
+        val stream = MemoryStream[StreamingOps.Doc]
+        // file sink, not memory: the memory sink refuses checkpoint
+        // recovery in append mode, and the file sink's commit log
+        // additionally pins exactly-once (no re-emission after restart)
+        def startQuery() =
+          StreamingOps.streamingLshCandidates(stream.toDS())
+            .writeStream.format("parquet").option("path", outDir)
+            .option("checkpointLocation", ckpt).outputMode("append")
+            .trigger(Trigger.ProcessingTime(0)).start()
+        def pairs(): Seq[(Long, Long)] = spark.read.parquet(outDir)
+          .select("doc_a", "doc_b").collect().toSeq
+          .map(r => (r.getLong(0), r.getLong(1)))
+        // run 1: two near-copies pair within the run, then a clean stop
+        // (the checkpoint holds the bucket membership lists)
+        val q1 = startQuery()
+        try {
+          stream.addData(Seq(StreamingOps.Doc(1, boiler),
+            StreamingOps.Doc(2, boiler + " iota")))
+          q1.processAllAvailable()
+        } finally q1.stop()
+        assert(pairs().toSet === Set((1L, 2L)),
+          s"run-1 near-copies must pair: ${pairs()}")
+        val run1Rows = pairs().size // one row per colliding band
+        // run 2: a NEW query over the same checkpoint — a (1, 3) pair can
+        // ONLY come from doc 1's id recovered out of the RocksDB list
+        // state written by run 1
+        val q2 = startQuery()
+        try {
+          stream.addData(Seq(StreamingOps.Doc(3, boiler + " kappa")))
+          q2.processAllAvailable()
+        } finally q2.stop()
+        val all = pairs()
+        assert(all.toSet.contains((1L, 3L)),
+          s"bucket state not recovered from checkpoint: ${all.toSet}")
+        assert(all.count(_ == (1L, 2L) ) === run1Rows,
+          s"run-1 output must not re-emit after restart: $all")
+      }
     } finally {
       prev match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
@@ -476,30 +480,32 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("aggregation state survives a query restart from the checkpoint") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val stream = MemoryStream[Event]
-    def startQuery(name: String) =
-      stream.toDF().groupBy("event_type").count()
-        .writeStream.format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(0)).start()
-    // run 1: three clicks, then a clean stop (checkpoint holds the state)
-    val q1 = startQuery("ckpt_run1")
-    try {
-      stream.addData(Seq(Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(1), 1, "click", 1.0), Event(3, ts(2), 2, "click", 1.0)))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // run 2: a NEW query over the same checkpoint — the recovered state
-    // must carry the previous count (5, not 2). The memory sink table is
-    // fresh, so a 5 can only come from the restored state store.
-    val q2 = startQuery("ckpt_run2")
-    try {
-      stream.addData(Seq(Event(4, ts(3), 2, "click", 1.0), Event(5, ts(4), 3, "click", 1.0)))
-      q2.processAllAvailable()
-      val n = spark.table("ckpt_run2").filter($"event_type" === "click")
-        .collect()(0).getLong(1)
-      assert(n === 5L, s"state not recovered from checkpoint (click count = $n)")
-    } finally q2.stop()
+    withTempFixture("graft_ckpt") { fixture =>
+      val ckpt = s"$fixture/ckpt"
+      val stream = MemoryStream[Event]
+      def startQuery(name: String) =
+        stream.toDF().groupBy("event_type").count()
+          .writeStream.format("memory").queryName(name).outputMode("complete")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.ProcessingTime(0)).start()
+      // run 1: three clicks, then a clean stop (checkpoint holds the state)
+      val q1 = startQuery("ckpt_run1")
+      try {
+        stream.addData(Seq(Event(1, ts(0), 1, "click", 1.0),
+          Event(2, ts(1), 1, "click", 1.0), Event(3, ts(2), 2, "click", 1.0)))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      // run 2: a NEW query over the same checkpoint — the recovered state
+      // must carry the previous count (5, not 2). The memory sink table is
+      // fresh, so a 5 can only come from the restored state store.
+      val q2 = startQuery("ckpt_run2")
+      try {
+        stream.addData(Seq(Event(4, ts(3), 2, "click", 1.0), Event(5, ts(4), 3, "click", 1.0)))
+        q2.processAllAvailable()
+        val n = spark.table("ckpt_run2").filter($"event_type" === "click")
+          .collect()(0).getLong(1)
+        assert(n === 5L, s"state not recovered from checkpoint (click count = $n)")
+      } finally q2.stop()
+    }
   }
 }
