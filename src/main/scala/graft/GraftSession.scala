@@ -78,7 +78,19 @@ object GraftSession {
     * ones (q_stats_kendall 0.88 → 7.56 s, q_embed_eff_rank, q_ts_sampen).
     * Their final plans scan 0.28 MB or less, so no cut on a plan's scan
     * bytes keeps them generated without giving up the wins: a 0.25 MiB
-    * cut keeps 10 of the 19 and loses 101 of 459 cold wins.
+    * cut keeps 10 of the 19 and loses 101 of 459 cold wins. Spark's own
+    * size estimate (`plan_bytes`) does not pick them out either: it
+    * multiplies the sides of every join, so a 6-table star join
+    * (q_sql_market_share, 4.9e26 bytes) outranks them all, and they rank
+    * 69th to 273rd of 544. What does pick them out is the most rows one
+    * operator outputs at run time (`max_operator_rows`): exactly the five
+    * worst pass 500,000 and no other query passes 400,000. That count is
+    * only known after the query has run, so the rule stays per dir.
+    *
+    * The fixtures place this value only between the sizes of the sf0.01
+    * dir and the sf0.1 dir: any value in (1.87 MB, 17.5 MB] gives the same
+    * choice for every fixture dir, and the benchmark times only the
+    * sf0.01 side.
     */
   val InterpretedBelowBytes: Long = 4L << 20
 

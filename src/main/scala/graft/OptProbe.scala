@@ -10,6 +10,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Dev tool for same-JVM A/Bs; never run by the driver. Two modes:
@@ -77,6 +79,24 @@ object OptProbe {
         r.location.rootPaths.map(_.toString).sorted.mkString(",") -> r.location.sizeInBytes
     }.toMap.values.sum
 
+  /** Spark's size estimate for a plan: the largest `stats.sizeInBytes` of
+    * a node of its optimized plan, subqueries included. */
+  private def planBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectWithSubqueries { case n => n.stats.sizeInBytes }.max
+
+  /** Runs the query and returns the most rows one operator of its final
+    * plan output (its `numOutputRows` metric). */
+  private def maxOperatorRows(df: DataFrame): Long = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case o => o +: (o.children ++ o.subqueries).flatMap(nodes)
+    }
+    df.collect()
+    (0L +: nodes(df.queryExecution.executedPlan).flatMap(_.metrics.get("numOutputRows"))
+      .map(_.value)).max
+  }
+
   private def survey(out: String, reps: Int, dirs: Seq[String], only: Seq[String]): Unit = {
     SparkEntry.requireKnown(only.toSet, "survey")
     val spark = GraftSession()
@@ -114,6 +134,8 @@ object OptProbe {
           plan = df
         }
         row("scan_bytes") = scanBytes(plan)
+        row("plan_bytes") = planBytes(plan).bigInteger
+        row("max_operator_rows") = maxOperatorRows(plan)
         for ((mode, _) <- modes) {
           row(s"cold_${mode}_s") = cold(mode)
           row(s"warm_${mode}_s") = warm(mode)

@@ -8,13 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The per-dir codegen rule ([[GraftSession.codegenConf]]): a table dir
   * below [[GraftSession.InterpretedBelowBytes]] runs interpreted, one at or
   * above it runs Spark's default generated code, every session that runs a
-  * query through [[SparkEntry.queries]] gets the rule, and both modes
-  * return the same rows.
+  * query through [[SparkEntry.queries]] gets the rule, and every 4th
+  * oracle-backed query returns the same rows in both modes. The row check
+  * is what keeps generated execution of whole queries under test: the
+  * test dir is below the threshold, so every other query test runs them
+  * interpreted.
   */
 class CodegenPolicySpec extends AnyFunSuite with SparkFixture {
-  import SparkFixture.{CodegenOff, CodegenOn}
+  import GraftSession.{Generated, Interpreted}
 
-  private val keys = CodegenOn.keySet
+  private val keys = Generated.keySet
 
   private def modeOf(s: org.apache.spark.sql.SparkSession): Map[String, String] =
     keys.map(k => k -> s.conf.get(k)).toMap
@@ -38,39 +41,39 @@ class CodegenPolicySpec extends AnyFunSuite with SparkFixture {
       assert(GraftSession.tableBytes(tmp) === limit - 1)
       val s = spark.newSession()
       GraftSession.install(s, tmp)
-      assert(modeOf(s) === CodegenOff)
+      assert(modeOf(s) === Interpreted)
       sized(new File(table, "part-1.parquet"), limit / 4)
       assert(GraftSession.tableBytes(tmp) === limit)
       GraftSession.install(s, tmp)
-      assert(modeOf(s) === CodegenOn)
+      assert(modeOf(s) === Generated)
     }
-    assert(GraftSession.codegenConf(sfDir) === CodegenOff,
+    assert(GraftSession.codegenConf(sfDir) === Interpreted,
       s"the ${GraftSession.tableBytes(sfDir)}-byte test dir must run interpreted")
   }
 
   test("a newSession() gets the rule through the query wrapper") {
     val fresh = spark.newSession()
-    assert(modeOf(fresh) === CodegenOn, "runtime conf is not inherited by newSession()")
+    assert(modeOf(fresh) === Generated, "runtime conf is not inherited by newSession()")
     val df = SparkEntry.queries("q_agg_pricing_summary")(fresh, sfDir)
-    assert(modeOf(fresh) === CodegenOff)
+    assert(modeOf(fresh) === Interpreted)
     df.collect()
     assert(!PlanWalk.collectAll(df.queryExecution.executedPlan)
       .exists(_.isInstanceOf[WholeStageCodegenExec]), df.queryExecution.executedPlan.toString)
   }
 
-  test("20 queries return the same rows generated and interpreted") {
-    val names = SparkEntry.oracleSql.keys.toSeq.sorted
-    val picks = names.indices.by(names.size / 20).take(20).map(names)
-    assert(picks.size === 20)
-    for (name <- picks) {
-      // a new session per mode, so that no session memo built in one mode
-      // serves the other
+  // every 4th oracle-backed query in name order: the whole set doubles the
+  // tier-1 wall time (530 s on 4 cpus), and KernelSpec already checks every
+  // graft_* kernel in both modes. A new session per mode, so that no
+  // session memo built in one mode serves the other.
+  private val sampled = SparkEntry.oracleSql.keys.toSeq.sorted.grouped(4).map(_.head).toSeq
+
+  for (name <- sampled)
+    test(s"$name returns the same rows generated and interpreted") {
       def rows(conf: Map[String, String]) = {
         val s = spark.newSession()
         GraftSession.install(s)
         withConf(conf, s)(SparkEntry.definitions(name)(s, sfDir).collect().toSeq)
       }
-      assert(rows(CodegenOn) === rows(CodegenOff), name)
+      assert(rows(Generated) === rows(Interpreted))
     }
-  }
 }

@@ -86,8 +86,8 @@ class KernelSpec extends AnyFunSuite with SparkFixture {
       writeInputs(inputs)
       def run = spark.read.parquet(inputs)
         .selectExpr("id" +: cases.map { case (n, c) => s"$c AS $n" }: _*).orderBy("id")
-      val (generated, wholeStage) = under(SparkFixture.CodegenOn)(run)
-      val (interpreted, wholeStageOff) = under(SparkFixture.CodegenOff)(run)
+      val (generated, wholeStage) = under(GraftSession.Generated)(run)
+      val (interpreted, wholeStageOff) = under(GraftSession.Interpreted)(run)
       assert(wholeStage, "the default mode must run generated code")
       assert(!wholeStageOff, "the interpreted mode must not run generated code")
       assert(generated.length === 4)

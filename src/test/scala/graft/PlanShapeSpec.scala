@@ -46,8 +46,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("flagship aggregate runs inside whole-stage codegen") {
-    // pinned on: a query over the small test dir leaves the session interpreted
-    withConf(SparkFixture.CodegenOn) {
+    // pinned on explicitly: the assertion is about generated code
+    withConf(GraftSession.Generated) {
       val plan = executed(operators.Aggregations.pricingSummary(spark, sfDir))
       assert(collectAll(plan).exists(_.isInstanceOf[WholeStageCodegenExec]), plan.toString)
     }

@@ -3,15 +3,26 @@ package graft
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.Suite
+import org.scalatest.{BeforeAndAfterEach, Suite}
 
 /** One shared local session for the whole test run (Test/fork := true puts
   * all suites in a single forked JVM, so a singleton avoids per-suite
   * SparkContext churn), built by [[GraftSession]] like every tool's.
+  *
+  * Every test starts on Spark's default generated code
+  * ([[GraftSession.Generated]]): a query run through [[SparkEntry.queries]]
+  * sets the session's codegen mode for its dir and leaves it set, so
+  * without the reset a test that calls an operator directly would run in
+  * whatever mode an earlier test left.
   */
-trait SparkFixture { self: Suite =>
+trait SparkFixture extends BeforeAndAfterEach { self: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
   val sfDir = "/root/testdata/sf0.001"
+
+  override protected def beforeEach(): Unit = {
+    GraftSession.Generated.foreach { case (k, v) => spark.conf.set(k, v) }
+    super.beforeEach()
+  }
 
   /** Runs `body` on a fresh temp dir for fixture tables, then deletes the
     * dir and the derived files keyed on its tables
@@ -42,17 +53,6 @@ trait SparkFixture { self: Suite =>
 }
 
 object SparkFixture {
-  /** Spark's default execution: whole-stage generated code, expression
-    * code generated with an interpreted fallback. */
-  val CodegenOn: Map[String, String] = Map(
-    "spark.sql.codegen.wholeStage" -> "true",
-    "spark.sql.codegen.factoryMode" -> "FALLBACK")
-
-  /** Interpreted execution: no whole-stage code, interpreted expressions. */
-  val CodegenOff: Map[String, String] = Map(
-    "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
   lazy val session: SparkSession = GraftSession(2)
 
   /** Deletes every [[operators.DerivedFiles]] dir keyed on the `.parquet`
