@@ -10,7 +10,7 @@ import graft.plans.{RankFilterToTopK, TopKPerGroupStrategy}
   * with the program's native functions and plan rules.
   *
   * [[apply]] builds the local session every tool runs on (Bench, Verify,
-  * Explain, OptProbe and the test fixture), so a plan audited or timed in
+  * OptProbe and the test fixture), so a plan audited or timed in
   * one of them is the plan the others run. The conf is pinned:
   *  - ANSI on (the Spark 4 default, pinned explicitly): the integer-exact
   *    operators (e.g. mlStump's DECIMAL envelope) guarantee loud overflow

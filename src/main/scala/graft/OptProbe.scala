@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Dev tool for same-JVM A/Bs; never run by the driver. Two modes:
+/** Dev tool for same-JVM A/Bs and plan audits; never run by the driver.
+  * Three modes:
   *
   *  - probe: runs each named query `reps` times in ONE warm JVM (the
   *    [[GraftSession]] Bench runs on) and prints every iteration's seconds.
@@ -33,12 +34,31 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    alternate which runs first. The file is rewritten after every query,
   *    so a cut run keeps its rows.
   *    Usage: runMain graft.OptProbe survey <out.json> <reps> <sfDir>[,<sfDir>...] [queryKey ...]
+  *  - explain: prints `explain("formatted")` of each named query (or of
+  *    every registered query) over one dir, so shuffle counts, pushed
+  *    filters, scan schemas and broadcast choices can be reviewed at any
+  *    SF, and two trees' plans can be diffed.
+  *    Usage: runMain graft.OptProbe explain <sfDir> [queryKey ...]
   */
 object OptProbe {
-  def main(args: Array[String]): Unit =
-    if (args(0) == "survey")
+  def main(args: Array[String]): Unit = args(0) match {
+    case "survey" =>
       survey(args(1), args(2).toInt, args(3).split(",").toSeq, args.drop(4).toSeq)
-    else probe(args(0), args(1).toInt, args.drop(2).toSeq)
+    case "explain" => explain(args(1), args.drop(2).toSeq)
+    case _ => probe(args(0), args(1).toInt, args.drop(2).toSeq)
+  }
+
+  private def explain(sfDir: String, only: Seq[String]): Unit = {
+    SparkEntry.requireKnown(only.toSet, "explain")
+    val spark = GraftSession()
+    spark.sparkContext.setLogLevel("ERROR")
+    (if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted).foreach { k =>
+      println(s"\n========== $k ==========")
+      println(SparkEntry.queries(k)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
+    }
+    spark.stop()
+  }
 
   private def probe(sfDir: String, reps: Int, keys: Seq[String]): Unit = {
     val spark = GraftSession()

@@ -1,41 +1,106 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/* Native Catalyst expressions (SURVEY.md §4.3): scalar kernels that stay
-  * inside whole-stage codegen instead of breaking it the way a Scala UDF
-  * would. Each generates a single static call into a compute kernel, so
-  * the JIT sees one monomorphic call site per expression.
+/* Native Catalyst expressions (SURVEY.md §4.3): the scalar `graft_*`
+  * kernels. Each is a static compute function (in its companion object,
+  * [[LongVecKernels]] or [[CountMinAgg]]) plus a short declaration on one
+  * of the arity bases below. Under the size-aware codegen rule
+  * ([[graft.GraftSession.codegenConf]]) a query over a small table dir
+  * (sf0.001, sf0.01) runs every kernel through its interpreted `eval`, and
+  * a larger one (sf0.1) through generated code inside whole-stage codegen;
+  * both paths call the same static function with the same arguments.
   */
 
-/** Haversine great-circle distance in km, as a quaternary expression with
-  * real doGenCode. Semantically identical to the pure-column formulation
+/** The shape of every scalar `graft_*` kernel. A kernel declares its SQL
+  * name (`prettyName`), input types (`inputTypes`), result type
+  * (`dataType`), the Java name of its static compute function (`fn`),
+  * any literal parameters (`params`) and the typed call of that function
+  * (`call`). The arity bases derive the rest:
+  *  - the type check, through Spark's [[ExpectsInputTypes]] (no implicit
+  *    casts), then the kernel's value-range check ([[rangeError]]);
+  *  - null-in/null-out, through the arity's `nullSafeEval` contract;
+  *  - an interpreted `eval` that calls `call` directly: no reflection, and
+  *    no allocation but the compute function's result (boxed if primitive);
+  *  - generated code that makes the static call `fn(children…, params…)`.
+  * `call` passes `params` in the same order after the children, so the
+  * two paths agree; KernelSpec runs both on the same inputs.
+  */
+sealed trait GraftKernel extends ExpectsInputTypes {
+  /** Java name of the static compute function the generated code calls. */
+  protected def fn: String
+
+  /** Literal arguments (Int or Boolean) that follow the children's values. */
+  protected def params: Seq[Any] = Nil
+
+  /** Why the literal parameters are out of range, if they are. */
+  protected def rangeError: Option[String] = None
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val types = super.checkInputDataTypes()
+    rangeError.filter(_ => types.isSuccess)
+      .fold(types)(msg => TypeCheckResult.TypeCheckFailure(s"$prettyName $msg"))
+  }
+
+  protected def staticCall(args: String*): String =
+    (args ++ params.map(_.toString)).mkString(s"$fn(", ", ", ")")
+}
+
+abstract class UnaryKernel[A] extends UnaryExpression with GraftKernel {
+  protected def call(a: A): Any
+  override protected def nullSafeEval(a: Any): Any = call(a.asInstanceOf[A])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, staticCall(_))
+}
+
+abstract class BinaryKernel[A, B] extends BinaryExpression with GraftKernel {
+  protected def call(a: A, b: B): Any
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    call(a.asInstanceOf[A], b.asInstanceOf[B])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, staticCall(_, _))
+}
+
+abstract class QuaternaryKernel[A, B, C, D] extends QuaternaryExpression with GraftKernel {
+  protected def call(a: A, b: B, c: C, d: D): Any
+  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
+    call(a.asInstanceOf[A], b.asInstanceOf[B], c.asInstanceOf[C], d.asInstanceOf[D])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, staticCall(_, _, _, _))
+}
+
+object GraftKernel {
+  val LongArray: DataType = ArrayType(LongType)
+  val DoubleArray: DataType = ArrayType(DoubleType)
+  val FloatOrDoubleArray = org.apache.spark.sql.graft.KernelTypes.FloatOrDoubleArray
+
+  /** Whether a float-or-double array argument holds floats. */
+  def isFloat(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+import GraftKernel._
+
+/** Haversine great-circle distance in km, as a quaternary kernel.
+  * Semantically identical to the pure-column formulation
   * in ScalarFuncs.haversineKm (same op order → same doubles).
   */
 case class HaversineExpr(first: Expression, second: Expression,
                          third: Expression, fourth: Expression)
-  extends QuaternaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.forall(_.dataType == DoubleType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires 4 double arguments, got ${children.map(_.dataType.simpleString)}")
-  override def dataType: DataType = DoubleType
+  extends QuaternaryKernel[Double, Double, Double, Double] {
   override def prettyName: String = "graft_haversine"
-
-  override protected def nullSafeEval(lat1: Any, lon1: Any, lat2: Any, lon2: Any): Any =
-    HaversineExpr.compute(lat1.asInstanceOf[Double], lon1.asInstanceOf[Double],
-      lat2.asInstanceOf[Double], lon2.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b, c, d) =>
-      s"graft.functions.HaversineExpr.compute($a, $b, $c, $d)")
+  override def inputTypes = Seq.fill(4)(DoubleType)
+  override def dataType: DataType = DoubleType
+  protected def fn = "graft.functions.HaversineExpr.compute"
+  protected def call(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Any =
+    HaversineExpr.compute(lat1, lon1, lat2, lon2)
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -56,25 +121,14 @@ object HaversineExpr {
 }
 
 /** 64-bit polynomial rolling hash of a string (base-31 over UTF-8 bytes) —
-  * the document-fingerprinting kernel. Unary, codegen'd.
+  * the document-fingerprinting kernel.
   */
-case class RollingHashExpr(child: Expression)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
+case class RollingHashExpr(child: Expression) extends UnaryKernel[UTF8String] {
   override def prettyName: String = "graft_rolling_hash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHashExpr.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHashExpr.compute($c)")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.RollingHashExpr.compute"
+  protected def call(s: UTF8String): Any = RollingHashExpr.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
     copy(child = newChild)
@@ -99,42 +153,23 @@ object RollingHashExpr {
   * dominated the whole bench.
   */
 case class DotProductExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two float/double arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_dot"
-
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotProductExpr.dot(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloat(left),
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloat(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.DotProductExpr.dot($a, ${isFloat(left)}, $b, ${isFloat(right)})")
+  override def inputTypes = Seq(FloatOrDoubleArray, FloatOrDoubleArray)
+  override def dataType: DataType = DoubleType
+  protected def fn = "graft.functions.DotProductExpr.dot"
+  override protected def params: Seq[Any] = Seq(isFloat(left), isFloat(right))
+  protected def call(a: ArrayData, b: ArrayData): Any =
+    DotProductExpr.dot(a, b, isFloat(left), isFloat(right))
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProductExpr =
     copy(left = newLeft, right = newRight)
 }
 
 object DotProductExpr {
-  def dot(a: org.apache.spark.sql.catalyst.util.ArrayData, aFloat: Boolean,
-          b: org.apache.spark.sql.catalyst.util.ArrayData, bFloat: Boolean): Double = {
+  def dot(a: org.apache.spark.sql.catalyst.util.ArrayData,
+          b: org.apache.spark.sql.catalyst.util.ArrayData,
+          aFloat: Boolean, bFloat: Boolean): Double = {
     val n = LongVecKernels.shape(a, b, "graft_dot")
     var acc = 0.0
     var i = 0
@@ -164,32 +199,12 @@ object DotProductExpr {
   * orders inside the envelope).
   */
 case class LongSqL2Expr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_sql2"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongVecKernels.sqL2(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LongVecKernels.sqL2($a, $b)")
+  override def inputTypes = Seq(LongArray, LongArray)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.LongVecKernels.sqL2"
+  protected def call(a: ArrayData, b: ArrayData): Any = LongVecKernels.sqL2(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LongSqL2Expr =
     copy(left = newLeft, right = newRight)
@@ -197,32 +212,12 @@ case class LongSqL2Expr(left: Expression, right: Expression)
 
 /** Exact int64 dot product over `array<long>` — see [[LongSqL2Expr]]. */
 case class LongDotExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_ldot"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongVecKernels.dot(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LongVecKernels.dot($a, $b)")
+  override def inputTypes = Seq(LongArray, LongArray)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.LongVecKernels.dot"
+  protected def call(a: ArrayData, b: ArrayData): Any = LongVecKernels.dot(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LongDotExpr =
     copy(left = newLeft, right = newRight)
@@ -235,32 +230,12 @@ case class LongDotExpr(left: Expression, right: Expression)
   * aggregate(zip_with(a, b, (x,y) -> if(x=y, 1L, 0L)), 0L, +) exactly.
   */
 case class LongEqCountExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_eqcount"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongVecKernels.eqCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LongVecKernels.eqCount($a, $b)")
+  override def inputTypes = Seq(LongArray, LongArray)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.LongVecKernels.eqCount"
+  protected def call(a: ArrayData, b: ArrayData): Any = LongVecKernels.eqCount(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): LongEqCountExpr =
     copy(left = newLeft, right = newRight)
@@ -279,32 +254,12 @@ case class LongEqCountExpr(left: Expression, right: Expression)
   * arrays read 0.0 (= exists-over-empty ⇒ keep, since θ > 0).
   */
 case class DoubleMaxAbsDiffExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two double arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_maxabsdiff"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongVecKernels.maxAbsDiff(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.LongVecKernels.maxAbsDiff($a, $b)")
+  override def inputTypes = Seq(DoubleArray, DoubleArray)
+  override def dataType: DataType = DoubleType
+  protected def fn = "graft.functions.LongVecKernels.maxAbsDiff"
+  protected def call(a: ArrayData, b: ArrayData): Any = LongVecKernels.maxAbsDiff(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DoubleMaxAbsDiffExpr =
     copy(left = newLeft, right = newRight)
@@ -335,32 +290,12 @@ case class DoubleMaxAbsDiffExpr(left: Expression, right: Expression)
   * advances).
   */
 case class SortedInterSizeLongExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two bigint arrays, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
+  extends BinaryKernel[ArrayData, ArrayData] {
   override def prettyName: String = "graft_inter_size_l"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SortedInterSizeLongExpr.interSize(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SortedInterSizeLongExpr.interSize($a, $b)")
+  override def inputTypes = Seq(LongArray, LongArray)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.SortedInterSizeLongExpr.interSize"
+  protected def call(a: ArrayData, b: ArrayData): Any = SortedInterSizeLongExpr.interSize(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SortedInterSizeLongExpr =
     copy(left = newLeft, right = newRight)
@@ -410,29 +345,15 @@ object SortedInterSizeLongExpr {
   * encoding-safe. T < n yields an EMPTY array, matching the
   * `when(n >= …)` guard of the column form.
   */
-case class NgramsExpr(child: Expression, n: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType if n >= 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires n >= 1, got $n")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string argument, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+case class NgramsExpr(child: Expression, n: Int) extends UnaryKernel[UTF8String] {
   override def prettyName: String = "graft_ngrams"
-
-  override protected def nullSafeEval(input: Any): Any =
-    NgramsExpr.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NgramsExpr.compute($c, $n)")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  protected def fn = "graft.functions.NgramsExpr.compute"
+  override protected def params: Seq[Any] = Seq(n)
+  protected def call(s: UTF8String): Any = NgramsExpr.compute(s, n)
+  override protected def rangeError: Option[String] =
+    Option.when(n < 1)(s"requires n >= 1, got $n")
 
   override protected def withNewChildInternal(newChild: Expression): NgramsExpr =
     copy(child = newChild)
@@ -594,24 +515,12 @@ object LongVecKernels {
   * implementations so cross-engine values are bit-identical.
   */
 case class JaroWinklerExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two string arguments, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = DoubleType
+  extends BinaryKernel[UTF8String, UTF8String] {
   override def prettyName: String = "graft_jaro_winkler"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinklerExpr.sim(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.JaroWinklerExpr.sim($a, $b)")
+  override def inputTypes = Seq(StringType, StringType)
+  override def dataType: DataType = DoubleType
+  protected def fn = "graft.functions.JaroWinklerExpr.sim"
+  protected def call(a: UTF8String, b: UTF8String): Any = JaroWinklerExpr.sim(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaroWinklerExpr =
     copy(left = newLeft, right = newRight)
@@ -670,24 +579,12 @@ object JaroWinklerExpr {
   * Spark's builtin levenshtein and graft_jaro_winkler.
   */
 case class DamerauLevenshteinExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two string arguments, got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
-  override def dataType: DataType = IntegerType
+  extends BinaryKernel[UTF8String, UTF8String] {
   override def prettyName: String = "graft_damerau_levenshtein"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DamerauLevenshteinExpr.dist(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DamerauLevenshteinExpr.dist($a, $b)")
+  override def inputTypes = Seq(StringType, StringType)
+  override def dataType: DataType = IntegerType
+  protected def fn = "graft.functions.DamerauLevenshteinExpr.dist"
+  protected def call(a: UTF8String, b: UTF8String): Any = DamerauLevenshteinExpr.dist(a, b)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DamerauLevenshteinExpr =
     copy(left = newLeft, right = newRight)
@@ -735,40 +632,34 @@ object DamerauLevenshteinExpr {
 
 /** Count-Min point estimate: min over the sketch rows of the counter
   * addressed by the same (hash, row) columns the aggregate incremented
-  * (shared [[CountMinAgg.col]]). Codegen'd like the other kernels.
+  * (shared [[CountMinAgg.col]]).
   */
 case class CmsEstimateExpr(left: Expression, right: Expression,
                            depth: Int, width: Int)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<bigint> sketch, bigint hash), got " +
-            s"${l.simpleString}, ${r.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
+  extends BinaryKernel[ArrayData, Long] {
   override def prettyName: String = "graft_cms_estimate"
-
-  override protected def nullSafeEval(sketch: Any, h: Any): Any =
-    CountMinAgg.estimate(sketch.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      h.asInstanceOf[Long], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) =>
-      s"graft.functions.CountMinAgg.estimate($s, $h, $depth, $width)")
+  override def inputTypes = Seq(LongArray, LongType)
+  override def dataType: DataType = LongType
+  protected def fn = "graft.functions.CountMinAgg.estimate"
+  override protected def params: Seq[Any] = Seq(depth, width)
+  protected def call(sketch: ArrayData, h: Long): Any = CountMinAgg.estimate(sketch, h, depth, width)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CmsEstimateExpr =
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration: makes the native expressions available to SQL / expr()
-  * as graft_haversine(lat1, lon1, lat2, lon2), graft_rolling_hash(s) and
-  * graft_dot(a, b).
+/** Registration: every `graft_*` function, by SQL name, for SQL and
+  * `expr()`:
+  *  - the scalar kernels of this file and SketchAggs.scala:
+  *    graft_haversine, graft_rolling_hash, graft_dot, graft_sql2,
+  *    graft_ldot, graft_eqcount, graft_maxabsdiff, graft_inter_size_l,
+  *    graft_ngrams, graft_jaro_winkler, graft_damerau_levenshtein,
+  *    graft_minhash_sig_arr, graft_sign_lsh and graft_cms_estimate;
+  *  - the sketch aggregates graft_minhash_sig, graft_simhash and
+  *    graft_cms_agg (SketchAggs.scala);
+  *  - Spark's bloom filter pair as graft_bloom_agg and graft_might_contain;
+  *  - the spatial predicates graft_pip and graft_bbox_contains
+  *    (GeoExpressions.scala).
   */
 object GraftFunctions {
   /** Sketch-parameter arguments (depth, width, #perms …) must be integer
@@ -788,6 +679,41 @@ object GraftFunctions {
       s"$fn: argument '$arg' must be a literal (foldable), got ${e.sql}")
   }
 
+  /** Name → builder of every function; graft_haversine, the first, is the
+    * sentinel [[register]] probes. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_haversine" -> (e => HaversineExpr(Cast(e(0), DoubleType), Cast(e(1), DoubleType),
+      Cast(e(2), DoubleType), Cast(e(3), DoubleType))),
+    "graft_rolling_hash" -> (e => RollingHashExpr(e(0))),
+    "graft_dot" -> (e => DotProductExpr(e(0), e(1))),
+    "graft_sql2" -> (e => LongSqL2Expr(e(0), e(1))),
+    "graft_ldot" -> (e => LongDotExpr(e(0), e(1))),
+    "graft_eqcount" -> (e => LongEqCountExpr(e(0), e(1))),
+    "graft_maxabsdiff" -> (e => DoubleMaxAbsDiffExpr(e(0), e(1))),
+    "graft_inter_size_l" -> (e => SortedInterSizeLongExpr(e(0), e(1))),
+    "graft_ngrams" -> (e => NgramsExpr(e(0), intLit(e(1), "graft_ngrams", "n"))),
+    "graft_jaro_winkler" -> (e => JaroWinklerExpr(e(0), e(1))),
+    "graft_damerau_levenshtein" -> (e => DamerauLevenshteinExpr(e(0), e(1))),
+    "graft_minhash_sig" -> (e => MinHashSigAgg(e(0),
+      intLit(e(1), "graft_minhash_sig", "num_perms")).toAggregateExpression()),
+    "graft_simhash" -> (e => SimHashAgg(e(0)).toAggregateExpression()),
+    "graft_minhash_sig_arr" -> (e => MinHashSigExpr(e(0),
+      intLit(e(1), "graft_minhash_sig_arr", "num_perms"))),
+    "graft_sign_lsh" -> (e => SignLshSigExpr(e(0), intLit(e(1), "graft_sign_lsh", "num_bits"),
+      intLit(e(2), "graft_sign_lsh", "seed"))),
+    "graft_cms_agg" -> (e => CountMinAgg(e(0), intLit(e(1), "graft_cms_agg", "depth"),
+      intLit(e(2), "graft_cms_agg", "width")).toAggregateExpression()),
+    "graft_cms_estimate" -> (e => CmsEstimateExpr(e(0), e(1),
+      intLit(e(2), "graft_cms_estimate", "depth"), intLit(e(3), "graft_cms_estimate", "width"))),
+    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
+    // runtime filters but does not expose them in the SQL registry; surface
+    // them so the explicit runtime-filter pattern is scriptable.
+    "graft_bloom_agg" -> (e => new aggregate.BloomFilterAggregate(e(0), e(1), e(2))
+      .toAggregateExpression()),
+    "graft_might_contain" -> (e => BloomFilterMightContain(e(0), e(1))),
+    "graft_pip" -> (e => PointInPolygonExpr(e(0), e(1), e(2))),
+    "graft_bbox_contains" -> (e => BBoxContainsExpr(e(0), e(1), e(2))))
+
   /** Registers every `graft_*` function in the session; programs reach it
     * through [[graft.GraftSession.install]]. Once per session: install
     * runs before every query build, and re-registering the functions per
@@ -800,67 +726,9 @@ object GraftFunctions {
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    if (registry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_haversine"))) return
-    registry.createOrReplaceTempFunction("graft_haversine",
-      exprs => HaversineExpr(Cast(exprs(0), DoubleType), Cast(exprs(1), DoubleType),
-        Cast(exprs(2), DoubleType), Cast(exprs(3), DoubleType)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_rolling_hash",
-      exprs => RollingHashExpr(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProductExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_sql2",
-      exprs => LongSqL2Expr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_ldot",
-      exprs => LongDotExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_eqcount",
-      exprs => LongEqCountExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_maxabsdiff",
-      exprs => DoubleMaxAbsDiffExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_inter_size_l",
-      exprs => SortedInterSizeLongExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_ngrams",
-      exprs => NgramsExpr(exprs(0),
-        intLit(exprs(1), "graft_ngrams", "n")), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_jaro_winkler",
-      exprs => JaroWinklerExpr(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_damerau_levenshtein",
-      exprs => DamerauLevenshteinExpr(exprs(0), exprs(1)), "scala_udf")
-    // sketch aggregates (see SketchAggs.scala): graft_minhash_sig(h, n)
-    // and graft_simhash(h)
-    registry.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSigAgg(exprs(0),
-        intLit(exprs(1), "graft_minhash_sig", "num_perms")).toAggregateExpression(), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHashAgg(exprs(0)).toAggregateExpression(), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_minhash_sig_arr",
-      exprs => MinHashSigExpr(exprs(0),
-        intLit(exprs(1), "graft_minhash_sig_arr", "num_perms")), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_sign_lsh",
-      exprs => SignLshSigExpr(exprs(0),
-        intLit(exprs(1), "graft_sign_lsh", "num_bits"),
-        intLit(exprs(2), "graft_sign_lsh", "seed")), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_cms_agg",
-      exprs => CountMinAgg(exprs(0),
-        intLit(exprs(1), "graft_cms_agg", "depth"),
-        intLit(exprs(2), "graft_cms_agg", "width")).toAggregateExpression(), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_cms_estimate",
-      exprs => CmsEstimateExpr(exprs(0), exprs(1),
-        intLit(exprs(2), "graft_cms_estimate", "depth"),
-        intLit(exprs(3), "graft_cms_estimate", "width")), "scala_udf")
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
-    // runtime filters but does not expose them in the SQL registry; surface
-    // them so the explicit runtime-filter pattern is scriptable.
-    registry.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)), "scala_udf")
-    // spatial predicates (see GeoExpressions.scala)
-    registry.createOrReplaceTempFunction("graft_pip",
-      exprs => PointInPolygonExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    registry.createOrReplaceTempFunction("graft_bbox_contains",
-      exprs => BBoxContainsExpr(exprs(0), exprs(1), exprs(2)), "scala_udf")
+    if (registry.functionExists(FunctionIdentifier("graft_haversine"))) return
+    builders.foreach { case (name, build) =>
+      registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

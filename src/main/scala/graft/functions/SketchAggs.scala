@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native sketch AGGREGATES (SURVEY.md §4.3 continued): the MinHash
@@ -112,34 +112,18 @@ object MinHashSigAgg {
   * ARRAY of shingle hashes (vs the aggregate's exploded rows). Same
   * permutation constants ⇒ bit-identical signatures, so batch (aggregate)
   * and streaming (per-row, no shuffle before the stateful stage) paths
-  * agree exactly. Codegen'd: one static call into a tight loop.
+  * agree exactly.
   */
-case class MinHashSigExpr(child: Expression, numPerms: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) if numPerms >= 1 && numPerms <= MinHashSigAgg.MaxPerms =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName supports 1..${MinHashSigAgg.MaxPerms} permutations, got $numPerms")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<bigint>, got ${other.simpleString}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class MinHashSigExpr(child: Expression, numPerms: Int) extends UnaryKernel[ArrayData] {
   override def prettyName: String = "graft_minhash_sig_arr"
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSigExpr.compute(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], numPerms)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSigExpr.compute($c, $numPerms)")
+  override def inputTypes = Seq(GraftKernel.LongArray)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  protected def fn = "graft.functions.MinHashSigExpr.compute"
+  override protected def params: Seq[Any] = Seq(numPerms)
+  protected def call(hashes: ArrayData): Any = MinHashSigExpr.compute(hashes, numPerms)
+  override protected def rangeError: Option[String] =
+    Option.when(numPerms < 1 || numPerms > MinHashSigAgg.MaxPerms)(
+      s"supports 1..${MinHashSigAgg.MaxPerms} permutations, got $numPerms")
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
@@ -180,42 +164,23 @@ object MinHashSigExpr {
   * invocations (plus conditional sums) per row to a single tight loop.
   */
 case class SignLshSigExpr(child: Expression, numTables: Int, planesPerTable: Int)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _)
-        if numTables >= 1 && planesPerTable >= 1 && planesPerTable <= 64 &&
-          numTables.toLong * planesPerTable <= SignLshSigExpr.MaxPlanes =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs numTables >= 1, 1..64 planes per table (a " +
-            s"65th plane would alias bit 0), and at most " +
-            s"${SignLshSigExpr.MaxPlanes} total planes — the matrix is " +
-            s"cached per-executor, an unbounded count is an OOM at first " +
-            s"task (got $numTables, $planesPerTable)")
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<float|double>, got ${other.simpleString}")
-    }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  extends UnaryKernel[ArrayData] {
   override def prettyName: String = "graft_sign_lsh"
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignLshSigExpr.compute(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      isFloat, numTables, planesPerTable)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SignLshSigExpr.compute($c, $isFloat, $numTables, $planesPerTable)")
+  override def inputTypes = Seq(GraftKernel.FloatOrDoubleArray)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  protected def fn = "graft.functions.SignLshSigExpr.compute"
+  override protected def params: Seq[Any] =
+    Seq(GraftKernel.isFloat(child), numTables, planesPerTable)
+  protected def call(v: ArrayData): Any =
+    SignLshSigExpr.compute(v, GraftKernel.isFloat(child), numTables, planesPerTable)
+  override protected def rangeError: Option[String] =
+    Option.when(numTables < 1 || planesPerTable < 1 || planesPerTable > 64 ||
+        numTables.toLong * planesPerTable > SignLshSigExpr.MaxPlanes)(
+      s"needs numTables >= 1, 1..64 planes per table (a " +
+        s"65th plane would alias bit 0), and at most " +
+        s"${SignLshSigExpr.MaxPlanes} total planes — the matrix is " +
+        s"cached per-executor, an unbounded count is an OOM at first " +
+        s"task (got $numTables, $planesPerTable)")
 
   override protected def withNewChildInternal(newChild: Expression): SignLshSigExpr =
     copy(child = newChild)

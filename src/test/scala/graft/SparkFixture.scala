@@ -26,12 +26,14 @@ trait SparkFixture extends BeforeAndAfterEach { self: Suite =>
 
   /** Runs `body` on a fresh temp dir for fixture tables, then deletes the
     * dir and the derived files keyed on its tables
-    * ([[SparkFixture.deleteDerived]]).
+    * ([[SparkFixture.deleteDerived]]), once the shared context is idle
+    * ([[SparkFixture.awaitIdle]]).
     */
   def withTempFixture[T](prefix: String)(body: String => T): T = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
     try body(dir.getPath)
     finally {
+      SparkFixture.awaitIdle(spark)
       SparkFixture.deleteDerived(spark, dir.getPath)
       SparkFixture.deleteRecursively(dir)
     }
@@ -73,6 +75,28 @@ object SparkFixture {
       Option(root.listFiles()).toSeq.flatten
         .filter(f => keys.exists(k => f.getName.contains(s"_$k")))
         .foreach(deleteRecursively)
+    }
+  }
+
+  /** Waits, at most `timeoutMs`, until no job, stage or task of `s`'s
+    * context has been active for `quietMs`. A query can return while a
+    * stage it no longer needs still runs or is still being submitted (such
+    * as a join side AQE gives up once the other side came out empty), and
+    * those tasks still read the fixture: deleting it under them fails
+    * them with `FAILED_READ_FILE.FILE_NOT_EXIST` in the log. The status
+    * tracker hears of jobs and tasks through the listener bus, a little
+    * late, hence the quiet period.
+    */
+  def awaitIdle(s: SparkSession, timeoutMs: Long = 10000, quietMs: Long = 100): Unit = {
+    val tracker = s.sparkContext.statusTracker
+    def busy = tracker.getActiveJobIds().nonEmpty || tracker.getActiveStageIds().nonEmpty ||
+      tracker.getExecutorInfos.exists(_.numRunningTasks > 0)
+    val deadline = System.currentTimeMillis() + timeoutMs
+    var quietSince = System.currentTimeMillis()
+    while (System.currentTimeMillis() - quietSince < quietMs &&
+        System.currentTimeMillis() < deadline) {
+      if (busy) quietSince = System.currentTimeMillis()
+      Thread.sleep(10)
     }
   }
 
