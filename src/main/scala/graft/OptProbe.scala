@@ -1,6 +1,7 @@
 package graft
 
 import java.io.File
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -8,14 +9,16 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.Bus
 
 /** Dev tool for same-JVM A/Bs and plan audits; never run by the driver.
-  * Three modes:
+  * Four modes:
   *
   *  - probe: runs each named query `reps` times in ONE warm JVM (the
   *    [[GraftSession]] Bench runs on) and prints every iteration's seconds.
@@ -39,12 +42,20 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    filters, scan schemas and broadcast choices can be reviewed at any
   *    SF, and two trees' plans can be diffed.
   *    Usage: runMain graft.OptProbe explain <sfDir> [queryKey ...]
+  *  - jobs: runs each named query (or every registered query) once over
+  *    one dir, each in a new session, to the noop sink, and prints the
+  *    Spark jobs its build (`fn(spark, dir)`, eager jobs included) and its
+  *    execution started, then the totals. [[Prewarm]] runs first, so no
+  *    query's count holds a derived-file build; session memos are built by
+  *    the query that needs them, as in a new session.
+  *    Usage: runMain graft.OptProbe jobs <sfDir> [queryKey ...]
   */
 object OptProbe {
   def main(args: Array[String]): Unit = args(0) match {
     case "survey" =>
       survey(args(1), args(2).toInt, args(3).split(",").toSeq, args.drop(4).toSeq)
     case "explain" => explain(args(1), args.drop(2).toSeq)
+    case "jobs" => jobs(args(1), args.drop(2).toSeq)
     case _ => probe(args(0), args(1).toInt, args.drop(2).toSeq)
   }
 
@@ -57,6 +68,40 @@ object OptProbe {
       println(SparkEntry.queries(k)(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode))
     }
+    spark.stop()
+  }
+
+  private def jobs(sfDir: String, only: Seq[String]): Unit = {
+    SparkEntry.requireKnown(only.toSet, "jobs")
+    val spark = GraftSession()
+    spark.sparkContext.setLogLevel("ERROR")
+    val started = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
+    })
+    def jobsOf(body: => Unit): Int = {
+      Bus.drain(spark.sparkContext)
+      val before = started.get
+      body
+      Bus.drain(spark.sparkContext)
+      started.get - before
+    }
+    Prewarm(spark, sfDir)
+    var build, execute = 0
+    (if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted).foreach { k =>
+      val s = spark.newSession()
+      try {
+        var df: DataFrame = null
+        val b = jobsOf { df = SparkEntry.queries(k)(s, sfDir) }
+        val e = jobsOf { df.write.format("noop").mode("overwrite").save() }
+        build += b
+        execute += e
+        println(s"JOBS $k build=$b execute=$e total=${b + e}")
+      } catch { case NonFatal(e) =>
+        println(s"JOBS $k error=${e.getClass.getName}: ${e.getMessage}".take(300))
+      }
+    }
+    println(s"JOBS TOTAL build=$build execute=$execute total=${build + execute}")
     spark.stop()
   }
 

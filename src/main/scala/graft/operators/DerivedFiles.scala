@@ -52,9 +52,10 @@ private[graft] object DerivedFiles {
       */
     def files(writeTo: String => Unit): String = { ensure(path)(writeTo); path }
 
-    /** Build `df` into parquet once, read it back. */
+    /** Build `df` into parquet once, read it back with its memoized
+      * schema ([[graft.Tables.parquet]]). */
     def parquet(build: => DataFrame): DataFrame =
-      s.read.parquet(files(scratch => build.write.parquet(scratch)))
+      graft.Tables.parquet(s, files(scratch => build.write.parquet(scratch)))
   }
 
   /** The derived file `name` built from the `inputs` tables of `dir`. */

@@ -94,10 +94,8 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("WeakReference and WeakHashMap appear in src/main only in SessionMemo and Tables") {
-    // Tables.scala keeps SqlViews, whose value is the dir a session's
-    // global v_* views point at: last-writer state, not a shared relation
-    val allowed = Seq("graft/operators/SessionMemo.scala", "graft/Tables.scala")
+  test("WeakReference and WeakHashMap appear in src/main only in SessionMemo") {
+    val allowed = Seq("graft/operators/SessionMemo.scala")
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
