@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.SparkSession
 import graft.functions.{GraftFunctions, PipBBoxPrefilter}
-import graft.plans.{RankFilterToTopK, TopKPerGroupStrategy}
+import graft.plans.{RankFilterToTopK, SmallSortOnePartition, TopKPerGroupStrategy}
 
 /** The one way to build a session, and the one way to equip a session
   * with the program's native functions and plan rules.
@@ -22,7 +22,11 @@ import graft.plans.{RankFilterToTopK, TopKPerGroupStrategy}
   *  - no UI.
   *
   * `install(spark)` registers every `graft_*` function and appends
-  * [[PipBBoxPrefilter]], [[RankFilterToTopK]] and [[TopKPerGroupStrategy]].
+  * [[PipBBoxPrefilter]], [[RankFilterToTopK]], [[SmallSortOnePartition]]
+  * and [[TopKPerGroupStrategy]]. SmallSortOnePartition sorts a global
+  * `Sort` whose input Spark estimates at no more than
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MiB) in
+  * one partition, so it skips the range partitioner's sampling job.
   * Function registries and experimental methods belong to one session and
   * are not inherited by `newSession()`, so install runs wherever a caller's
   * session enters the program: in [[apply]], before every query function
@@ -131,7 +135,7 @@ object GraftSession {
   def install(spark: SparkSession): Unit = {
     GraftFunctions.register(spark)
     val x = spark.experimental
-    for (rule <- Seq(PipBBoxPrefilter, RankFilterToTopK)
+    for (rule <- Seq(PipBBoxPrefilter, RankFilterToTopK, SmallSortOnePartition)
          if !x.extraOptimizations.contains(rule))
       x.extraOptimizations = x.extraOptimizations :+ rule
     if (!x.extraStrategies.contains(TopKPerGroupStrategy))

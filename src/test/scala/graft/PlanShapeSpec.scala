@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +13,64 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   import PlanWalk._
+
+  /** Every node below the exchange of the plan's root global sort (the
+    * whole plan when it has none): a small final sort sorts in one
+    * partition behind its own `SinglePartition` exchange
+    * ([[graft.plans.SmallSortOnePartition]]), so a pin against a global
+    * single-partition stage looks below it. */
+  private def belowRootSortExchange(plan: SparkPlan): Seq[SparkPlan] = {
+    val all = collectAll(plan)
+    all.collectFirst { case s: SortExec if s.global => s }
+      .flatMap(s => collectAll(s.child).collectFirst { case e: ShuffleExchangeExec => e })
+      .fold(all)(e => collectAll(e.child))
+  }
+
+  private def singlePartitionExchanges(nodes: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    nodes.collect { case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e }
+
+  private def exchanges(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    collectAll(plan).collect { case e: ShuffleExchangeExec => e }
+
+  test("a small final sort plans a single-partition exchange and no rangepartitioning") {
+    val df = Tables.orders(spark, sfDir).orderBy("o_totalprice", "o_orderkey")
+    val plan = executed(df)
+    assert(singlePartitionExchanges(collectAll(plan)).size === 1, plan.toString)
+    assert(!exchanges(plan).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      plan.toString)
+    val keys = df.collect().map(r => (r.getDouble(r.fieldIndex("o_totalprice")),
+      r.getLong(r.fieldIndex("o_orderkey")))).toSeq
+    assert(keys.nonEmpty && keys === keys.sorted, "rows must come out in sort order")
+  }
+
+  test("a sort over a large input keeps its rangepartitioning exchange") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(0, 5000000).orderBy(col("id").desc)
+    val plan = df.queryExecution.executedPlan
+    assert(exchanges(plan).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      plan.toString)
+    assert(singlePartitionExchanges(collectAll(plan)).isEmpty, plan.toString)
+  }
+
+  test("a sort over a global aggregate or an unpartitioned window adds no exchange") {
+    import org.apache.spark.sql.functions._
+    val orders = Tables.orders(spark, sfDir)
+    val total = orders.agg(sum("o_totalprice").as("total"))
+    val ranked = orders.withColumn("r", row_number().over(Window.orderBy("o_orderkey")))
+    // one row per metric out of each global aggregate, joined: one
+    // partition all the way up, as q_dq_schema_drift's profiles
+    def profile(df: org.apache.spark.sql.DataFrame, n: String) =
+      df.agg(count(lit(1)).as("rows"), countDistinct("o_custkey").as("custs"))
+        .select(expr(s"stack(2, 'rows', rows, 'custs', custs) as (metric, $n)"))
+    val joined = profile(orders, "a").join(profile(orders.filter("o_orderkey % 2 = 0"), "b"),
+      "metric")
+    for ((input, sorted) <- Seq(total -> total.orderBy("total"),
+        ranked -> ranked.orderBy(col("o_totalprice").desc, col("o_orderkey")),
+        joined -> joined.orderBy("metric"))) {
+      val plan = executed(sorted)
+      assert(exchanges(plan).size === exchanges(executed(input)).size, plan.toString)
+    }
+  }
 
   test("star join broadcasts all three dimensions") {
     val plan = executed(operators.Joins.joinBroadcastDims(spark, sfDir))
@@ -373,34 +433,30 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("global sample index plans no single-partition exchange") {
-    val df = operators.PipelineOps.sampleIndex(spark, sfDir)
-    val planStr = executed(df).toString
-    assert(!planStr.contains("SinglePartition"),
-      "contiguous-id assignment funnelled through one partition:\n" + planStr.take(3000))
+    val plan = executed(operators.PipelineOps.sampleIndex(spark, sfDir))
+    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+      "contiguous-id assignment funnelled through one partition:\n" + plan.toString.take(3000))
   }
 
   test("token-budget prefix sum plans no single-partition exchange") {
-    val df = operators.PipelineOps.tokenBudget(spark, sfDir)
-    val planStr = executed(df).toString
-    assert(!planStr.contains("SinglePartition"),
-      "global running sum funnelled through one partition:\n" + planStr.take(3000))
+    val plan = executed(operators.PipelineOps.tokenBudget(spark, sfDir))
+    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+      "global running sum funnelled through one partition:\n" + plan.toString.take(3000))
   }
 
   test("partitioned ntile plans no single-partition exchange") {
-    val df = operators.StatsOps.ntileBuckets(spark, sfDir)
-    val planStr = executed(df).toString
-    assert(!planStr.contains("SinglePartition"),
-      "global-window ntile reintroduced a single-partition stage:\n" + planStr.take(3000))
+    val plan = executed(operators.StatsOps.ntileBuckets(spark, sfDir))
+    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+      "global-window ntile reintroduced a single-partition stage:\n" + plan.toString.take(3000))
   }
 
   test("single-melt RFM plans no single-partition exchange") {
     // the r10 reshape ranks all three metrics in ONE kernel pass over the
     // melted (custkey, metric, v) relation — make sure neither the melt nor
     // the pivot-back reintroduced a global single-partition stage
-    val df = operators.ExtraFuncs.rfmSegments(spark, sfDir)
-    val planStr = executed(df).toString
-    assert(!planStr.contains("SinglePartition"),
-      "single-melt RFM funnelled through one partition:\n" + planStr.take(3000))
+    val plan = executed(operators.ExtraFuncs.rfmSegments(spark, sfDir))
+    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+      "single-melt RFM funnelled through one partition:\n" + plan.toString.take(3000))
   }
 
   test("SCD2 effective-dated join plans as an equi join, not a nested loop") {
