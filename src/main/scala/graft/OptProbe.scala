@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -9,7 +8,6 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SparkPlan
@@ -75,25 +73,15 @@ object OptProbe {
     SparkEntry.requireKnown(only.toSet, "jobs")
     val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    val started = new AtomicInteger
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
-    })
-    def jobsOf(body: => Unit): Int = {
-      Bus.drain(spark.sparkContext)
-      val before = started.get
-      body
-      Bus.drain(spark.sparkContext)
-      started.get - before
-    }
     Prewarm(spark, sfDir)
+    val sc = spark.sparkContext
     var build, execute = 0
     (if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted).foreach { k =>
       val s = spark.newSession()
       try {
         var df: DataFrame = null
-        val b = jobsOf { df = SparkEntry.queries(k)(s, sfDir) }
-        val e = jobsOf { df.write.format("noop").mode("overwrite").save() }
+        val b = Bus.jobsOf(sc) { df = SparkEntry.queries(k)(s, sfDir) }
+        val e = Bus.jobsOf(sc) { df.write.format("noop").mode("overwrite").save() }
         build += b
         execute += e
         println(s"JOBS $k build=$b execute=$e total=${b + e}")

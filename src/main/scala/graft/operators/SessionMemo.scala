@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * input is built once per session and served to every consumer, and
   * `graft.Prewarm.sessionTier` warms each entry by calling its builder.
   *
-  * One entry per key. Keys are caller-authored and embed the sf dir, so a
-  * dir switch self-invalidates. The owning session is held weakly:
+  * One entry per key. Keys are caller-authored. A key either embeds the sf
+  * dir, so a dir switch self-invalidates, or its value records the dir it
+  * was built for and the caller re-checks it, as [[graft.SqlViews]]'
+  * `views` entry does (one entry per session, since its view names are).
+  * The owning session is held weakly:
   *
   *  - every lookup first sweeps entries whose session is collected or
   *    stopped, releasing the checkpoint blocks they pin;

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, TakeOrderedAndProjectExec,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,16 +16,28 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   import PlanWalk._
 
-  /** Every node below the exchange of the plan's root global sort (the
-    * whole plan when it has none): a small final sort sorts in one
-    * partition behind its own `SinglePartition` exchange
+  /** The plan's `SinglePartition` exchanges, less the root global sort's
+    * own input exchange: a small final sort sorts in one partition behind
+    * its own `SinglePartition` exchange
     * ([[graft.plans.SmallSortOnePartition]]), so a pin against a global
-    * single-partition stage looks below it. */
-  private def belowRootSortExchange(plan: SparkPlan): Seq[SparkPlan] = {
+    * single-partition stage skips that one exchange and checks every other. */
+  private def singlePartitionStages(plan: SparkPlan): Seq[ShuffleExchangeExec] = {
     val all = collectAll(plan)
-    all.collectFirst { case s: SortExec if s.global => s }
-      .flatMap(s => collectAll(s.child).collectFirst { case e: ShuffleExchangeExec => e })
-      .fold(all)(e => collectAll(e.child))
+    val own = all.collectFirst { case s: SortExec if s.global => s }
+      .flatMap(s => inputExchange(s.child))
+    singlePartitionExchanges(all).filterNot(e => own.exists(_ eq e))
+  }
+
+  /** The exchange that `p` is, or reads directly through codegen, AQE
+    * shuffle-read, query-stage and reuse wrappers. */
+  private def inputExchange(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+    case e: ShuffleExchangeExec => Some(e)
+    case w: WholeStageCodegenExec => inputExchange(w.child)
+    case i: InputAdapter => inputExchange(i.child)
+    case r: AQEShuffleReadExec => inputExchange(r.child)
+    case q: ShuffleQueryStageExec => inputExchange(q.plan)
+    case r: ReusedExchangeExec => inputExchange(r.child)
+    case _ => None
   }
 
   private def singlePartitionExchanges(nodes: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
@@ -36,11 +50,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     val df = Tables.orders(spark, sfDir).orderBy("o_totalprice", "o_orderkey")
     val plan = executed(df)
     assert(singlePartitionExchanges(collectAll(plan)).size === 1, plan.toString)
+    assert(singlePartitionStages(plan).isEmpty, "the sort's own exchange is not a stage:\n" + plan)
     assert(!exchanges(plan).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
       plan.toString)
     val keys = df.collect().map(r => (r.getDouble(r.fieldIndex("o_totalprice")),
       r.getLong(r.fieldIndex("o_orderkey")))).toSeq
     assert(keys.nonEmpty && keys === keys.sorted, "rows must come out in sort order")
+  }
+
+  test("the single-partition pin still sees a global window under a final sort") {
+    import org.apache.spark.sql.functions._
+    // the regression the ntile/RFM/sample-index pins guard: a global window
+    // yields one partition, so the final sort plans no exchange of its own
+    // and the window's SinglePartition exchange is the first one below it
+    val df = Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"),
+        ntile(8).over(Window.orderBy("o_totalprice", "o_orderkey")).as("bucket"))
+      .orderBy("o_orderkey")
+    val plan = executed(df)
+    assert(singlePartitionStages(plan).size === 1, plan.toString)
   }
 
   test("a sort over a large input keeps its rangepartitioning exchange") {
@@ -434,19 +462,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
 
   test("global sample index plans no single-partition exchange") {
     val plan = executed(operators.PipelineOps.sampleIndex(spark, sfDir))
-    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+    assert(singlePartitionStages(plan).isEmpty,
       "contiguous-id assignment funnelled through one partition:\n" + plan.toString.take(3000))
   }
 
   test("token-budget prefix sum plans no single-partition exchange") {
     val plan = executed(operators.PipelineOps.tokenBudget(spark, sfDir))
-    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+    assert(singlePartitionStages(plan).isEmpty,
       "global running sum funnelled through one partition:\n" + plan.toString.take(3000))
   }
 
   test("partitioned ntile plans no single-partition exchange") {
     val plan = executed(operators.StatsOps.ntileBuckets(spark, sfDir))
-    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+    assert(singlePartitionStages(plan).isEmpty,
       "global-window ntile reintroduced a single-partition stage:\n" + plan.toString.take(3000))
   }
 
@@ -455,7 +483,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     // melted (custkey, metric, v) relation — make sure neither the melt nor
     // the pivot-back reintroduced a global single-partition stage
     val plan = executed(operators.ExtraFuncs.rfmSegments(spark, sfDir))
-    assert(singlePartitionExchanges(belowRootSortExchange(plan)).isEmpty,
+    assert(singlePartitionStages(plan).isEmpty,
       "single-melt RFM funnelled through one partition:\n" + plan.toString.take(3000))
   }
 

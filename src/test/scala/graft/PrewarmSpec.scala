@@ -45,6 +45,8 @@ class PrewarmSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("Prewarm.sessionTier covers exactly the consumers' session-memo keys") {
+    // SqlViews' `views` key names no dir (its value holds it); no memo
+    // consumer here registers views, and the session tier does not warm them
     def dirKeys: Set[String] = SessionMemo.keys.filter(_.contains(sfDir))
     // run every session-tier builder (idempotent on a warm memo)
     Prewarm.sessionTier.foreach { case (_, b) => b(spark, sfDir) }

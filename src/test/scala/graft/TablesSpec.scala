@@ -1,9 +1,7 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bus
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -16,23 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TablesSpec extends AnyFunSuite with SparkFixture {
 
-  /** Spark jobs started while `body` runs, counted after draining the bus. */
-  private def jobsOf(body: => Unit): Int = {
-    val started = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet(): Unit
-    }
-    Bus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Bus.drain(spark.sparkContext); started.get }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a second read of a table in a newSession() starts no Spark job") {
     Tables.lineitem(spark, sfDir).schema
     val fresh = spark.newSession()
     GraftSession.install(fresh)
-    val jobs = jobsOf {
+    val jobs = Bus.jobsOf(spark.sparkContext) {
       val df = Tables.lineitem(fresh, sfDir)
       assert(df.schema.fieldNames.contains("l_orderkey"))
       df.queryExecution.analyzed
